@@ -61,20 +61,6 @@ from rdf_n3_spark.operators.clustering import (
     label_consistency,
     semdedup_prune,
 )
-from rdf_n3_spark.operators.events import (
-    event_outliers,
-    event_quantiles,
-    event_rollup,
-    funnel_counts,
-    funnel_reach,
-    segment_funnel,
-    moving_daily_stats,
-    retention_cohorts,
-    histogram_quantiles,
-    props_extract,
-    props_rollup,
-    sessionize_batch,
-)
 from rdf_n3_spark.operators.lists import contract_ladders, expand_list_column
 from rdf_n3_spark.plans.graph_ops import graph_includes, graph_not_includes, output_strings
 from rdf_n3_spark.operators.canon import canonical_map, verified_pairs
@@ -110,11 +96,6 @@ from rdf_n3_spark.operators.mentions import (
     extract_mentions,
     mention_contexts,
 )
-from rdf_n3_spark.operators.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    media_metadata,
-)
 from rdf_n3_spark.operators.similarity import (
     ann_topk,
     ann_topk_exact_oracle,
@@ -127,7 +108,7 @@ from rdf_n3_spark.operators.similarity import (
 from rdf_n3_spark.operators.linker import link_mentions, score_candidate_links
 from rdf_n3_spark.operators.salted import salted_collect_set, salted_count
 from rdf_n3_spark.plans.bgp import Rule, apply_rule, bgp, fixpoint, fixpoint_per_graph
-from rdf_n3_spark.operators.enrich import enrich_entities, segment_order_stats
+from rdf_n3_spark.operators.enrich import enrich_entities
 from rdf_n3_spark.operators.triples import (
     canonical_triples,
     entity_triples,
@@ -595,53 +576,6 @@ WITH qe AS (
       || (CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END) AS bucket
   FROM embeddings
 )
-"""
-
-# Exact-integer mirror of multimodal.quantize_features over the utf-8
-# payload bytes (blob → hex-digit pairs → per-dim weighted sums). All
-# arithmetic is int64 until one double multiply/divide/floor whose
-# operands are exactly representable, so the values match Spark's
-# Arrow-UDF output bit-for-bit.
-_MF_ACC = " ,\n".join(
-    f"CAST(coalesce(sum(CASE WHEN i % 8 = {k} THEN bv * ((i % 97) + 1) END), 0) "
-    f"AS BIGINT) AS a{k}"
-    for k in range(8)
-)
-_MF_NORMSUM = " + ".join(f"a{k}*a{k}" for k in range(8))
-_MF_QF = " ,\n".join(
-    f"CAST(floor(CAST(a{k} AS DOUBLE) * 1000000.0 / n) AS BIGINT) AS qf{k}"
-    for k in range(8)
-)
-_MEDIA_FEATURES = f"""
-WITH raw AS (
-  SELECT doc_id, hex(encode(text)) AS hx,
-         least(octet_length(encode(text)), 4096) AS nb,
-         octet_length(encode(text)) AS full_nb
-  FROM documents
-),
-idx AS (
-  SELECT doc_id, hx, full_nb,
-         CAST(unnest(generate_series(0, nb - 1)) AS INT) AS i
-  FROM raw
-),
-bytes AS (
-  SELECT doc_id, full_nb, i,
-         (strpos('0123456789ABCDEF', substr(hx, 2*i + 1, 1)) - 1) * 16
-       + (strpos('0123456789ABCDEF', substr(hx, 2*i + 2, 1)) - 1) AS bv
-  FROM idx
-),
-acc AS (
-  SELECT doc_id, any_value(full_nb) AS nb, {_MF_ACC}
-  FROM bytes GROUP BY doc_id
-),
-q AS (
-  SELECT *, CASE WHEN {_MF_NORMSUM} = 0 THEN 1.0
-                 ELSE sqrt(CAST({_MF_NORMSUM} AS DOUBLE)) END AS n
-  FROM acc
-)
-SELECT doc_id, 'text/plain' AS mime, CAST(nb AS BIGINT) AS n_bytes,
-       TRUE AS ok, {_MF_QF}
-FROM q
 """
 
 _COS_EXPR = (
@@ -1306,27 +1240,6 @@ def _q_cms_merged(spark, sf_dir):
     )
 
 
-def _q_events_asof(spark, sf_dir):
-    """As-of attribution: each purchase event attached to the user's
-    most recent (ts ≤ purchase ts) signup event — the union-tag
-    carry-forward plan, one user_id shuffle, no range join."""
-    from rdf_n3_spark.operators.events import asof_join, latest_per_ts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = ev.filter(F.col("event_type") == "purchase")
-    right = latest_per_ts(ev.filter(F.col("event_type") == "signup"))
-    j = asof_join(left, right, key="user_id", ts="ts",
-                  right_cols=("event_id", "value"))
-    return j.select(
-        "event_id", "user_id",
-        # parquet ts is TIMESTAMP_NTZ; session tz is pinned UTC, so the
-        # cast is instant-preserving and matches DuckDB's naive-as-UTC
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("ref_event_id").cast("bigint").alias("ref_event_id"),
-        F.round(F.col("ref_value") * 100).cast("bigint").alias("ref_cents"),
-    )
-
-
 def _q_builtin_time(spark, sf_dir):
     """SURVEY §2.8 time vocabulary: component extraction is validity-
     gated on the LEXICAL form (time/hour.rb:29-32), so operate on the
@@ -1545,40 +1458,6 @@ def _q_graph_conclusions(spark, sf_dir):
     return closed.where(F.col("inferred")).select("s", "p", "o", "g")
 
 
-def _media_df(spark, sf_dir):
-    """Deterministic stand-in media corpus: each document's utf-8 bytes
-    as an opaque binary payload (the container has no real media
-    files; the Spark-side plumbing is what's under test)."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.encode("text", "utf-8").alias("payload")
-    )
-
-
-def _q_media_metadata(spark, sf_dir):
-    """Decode-free multimodal metadata: size / MIME sniff / content hash."""
-    return media_metadata(_media_df(spark, sf_dir))
-
-
-def _q_media_features(spark, sf_dir):
-    """Arrow-batched decode+feature stage (stub codec, real plumbing).
-    The harness-facing projection is the exact integer quantization
-    (floor(acc*1e6/norm) per dim — see multimodal.quantize_features):
-    every operand is an exactly representable double, so the DuckDB
-    oracle reproduces the values bit-identically from the same bytes."""
-    d = _media_df(spark, sf_dir).withColumn("mime", F.lit("text/plain"))
-    feats = extract_features(d)
-    dims = [F.element_at("qfeat", i + 1).alias(f"qf{i}") for i in range(8)]
-    return feats.select("doc_id", "mime", "n_bytes", "ok", *dims)
-
-
-def _q_frame_sample(spark, sf_dir):
-    """Deterministic frame-sampling plan (video modality shape)."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", (F.col("n_chars") / 100.0).alias("duration_s")
-    )
-    return frame_sample_plan(d)
-
-
 # The driver's correctness harness checks the FIRST 50 entries of
 # queries() in dict order.  Rotation history: round 3 appended new
 # operators at the tail (leaving 41 rows driver-unverified), round 4
@@ -1588,15 +1467,15 @@ def _q_frame_sample(spark, sf_dir):
 # relation_triples, kb_void, source_weights, paragraph_neardup,
 # triangle_counts_capped) lead the window together with every new
 # round-5 operator, so after CORRECTNESS_r05 every query (144 incl.
-# this round's additions) has a driver-green row in some round's
-# artifact.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
+# that round's additions) has a driver-green row in some round's
+# artifact.  The event-analytics and multimodal families were pruned
+# afterwards (127 queries remain), which frees window slots for the
+# re-cert slate.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
 # pins the invariant.  Rotation contract for FUTURE rounds: genuinely
 # new queries enter at the head of _ROUND_NEW; _RECERTIFY is the
 # priority-ordered re-certification slate (reference §2 surface first,
 # then north-rule reps, then the heaviest beyond-reference machinery)
 # truncated from the tail so the window stays exactly 50.
-_FUNNEL_STEPS = ["view", "click", "signup", "purchase"]
-
 _ROUND_NEW = [
     # round-5 additions enter here, newest first
     "graph_walks", "kb_signatures", "conv_segments",
@@ -1605,14 +1484,12 @@ _ROUND_NEW = [
     "sft_pairs", "tool_chains", "tool_transitions", "graph_linkpred",
     "contrastive_incremental", "contrastive_pairs", "graph_lpa",
     "split_leakage",
-    "search_rrf", "search_bm25", "graph_khop", "event_outliers",
-    "entity_enrich", "segment_funnel", "segment_order_stats",
+    "search_rrf", "search_bm25", "graph_khop",
+    "entity_enrich",
     "kb_history", "kb_history_snapshots", "kb_asof", "kg_negatives",
     "conv_transitions",
-    "event_moving_stats", "event_retention",
     "conv_stats", "conv_role_protocol",
-    "event_funnel", "event_funnel_counts",
-    "label_consistency", "event_props", "event_props_rollup",
+    "label_consistency",
     "token_budget_sample",
     "n3_write_nquads", "token_heavy_hitters",
     "bloom_decontaminate", "ann_ivf_multitable",
@@ -1639,7 +1516,6 @@ _RECERTIFY = [
     "triples_canonical", "kb_diff",
     # heaviest beyond-reference machinery
     "lsh_candidate_pairs", "entity_link_scores", "entity_link_best",
-    "media_metadata", "media_features", "frame_sample",
     "dedup_exact", "dedup_minhash", "dedup_jaccard", "dedup_clusters",
     "dedup_simhash", "dedup_embedding", "ann_topk",
     "ann_ivf_multiprobe",
@@ -1727,9 +1603,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "entity_link_best": _q_link_best,
         "n3_parse_udf": _q_parse_n3_snippets,
         "n3_write_udf": _q_n3_string,
-        "media_metadata": _q_media_metadata,
-        "media_features": _q_media_features,
-        "frame_sample": _q_frame_sample,
         "dedup_exact": lambda s, d: exact_dedup(_docs(s, d)),
         "dedup_minhash": lambda s, d: minhash_neardup_pairs(_docs(s, d)),
         "dedup_jaccard": lambda s, d: jaccard_neardup_pairs(_docs(s, d)),
@@ -1813,48 +1686,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exactly the hub-removed subgraph's counts
         "triangle_counts_capped": lambda s, d: _q_triangles(
             s, d, max_degree=400),
-        "events_asof": _q_events_asof,
-        "event_rollup": lambda s, d: event_rollup(
-            s.read.parquet(f"{d}/events.parquet"), unit="hour"),
-        "event_sessions": lambda s, d: sessionize_batch(
-            s.read.parquet(f"{d}/events.parquet"), gap_minutes=30),
-        "event_quantiles": lambda s, d: event_quantiles(
-            s.read.parquet(f"{d}/events.parquet")),
-        # exact Tukey-fence outlier screen (3×IQR on nearest-rank
-        # quartiles, broadcast fences)
-        "event_outliers": lambda s, d: event_outliers(
-            s.read.parquet(f"{d}/events.parquet")),
-        # width 600 cents × 64 bins covers the synthetic value domain
-        # (≤ 327.53) without clamping the upper percentiles
-        "event_histogram_quantiles": lambda s, d: histogram_quantiles(
-            s.read.parquet(f"{d}/events.parquet"), width_cents=600),
-        # schema-on-read over the semi-structured props JSON bag
-        "event_props": lambda s, d: props_extract(
-            s.read.parquet(f"{d}/events.parquet")),
-        "event_props_rollup": lambda s, d: props_rollup(
-            s.read.parquet(f"{d}/events.parquet")),
-        # sequential view→click→signup→purchase funnel, one-shuffle
-        # sorted-array fold per user
-        "event_funnel": lambda s, d: funnel_reach(
-            s.read.parquet(f"{d}/events.parquet"), _FUNNEL_STEPS),
-        "event_funnel_counts": lambda s, d: funnel_counts(
-            s.read.parquet(f"{d}/events.parquet"), _FUNNEL_STEPS),
-        # the same funnel broken down by the customer dim's market
-        # segment (broadcast onto the user-sized reach table)
-        "segment_funnel": lambda s, d: segment_funnel(
-            s.read.parquet(f"{d}/events.parquet"),
-            s.read.parquet(f"{d}/customer.parquet"), _FUNNEL_STEPS),
-        # revenue attribution: orders fact x broadcast customer dim,
-        # exact-cents totals per segment x status
-        "segment_order_stats": lambda s, d: segment_order_stats(
-            s.read.parquet(f"{d}/orders.parquet"),
-            s.read.parquet(f"{d}/customer.parquet")),
-        # signup-anchored daily retention triangle
-        "event_retention": lambda s, d: retention_cohorts(
-            s.read.parquet(f"{d}/events.parquet")),
-        # trailing 7-day window over the daily per-type series
-        "event_moving_stats": lambda s, d: moving_daily_stats(
-            s.read.parquet(f"{d}/events.parquet")),
         "boilerplate_ngrams": lambda s, d: boilerplate_ngrams(
             _docs(s, d), n=3, min_docs=5),
         "boilerplate_share": lambda s, d: boilerplate_share(
@@ -3005,21 +2836,6 @@ def oracle_sql() -> dict[str, str]:
                               WHERE pos.s = d3.s AND pos.p = d3.p
                                 AND pos.o = rk.cand)
         """,
-        "media_metadata": """
-            SELECT doc_id,
-                   CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-                   'application/octet-stream' AS mime,
-                   sha256(text) AS content_sha
-            FROM documents
-        """,
-        "media_features": _MEDIA_FEATURES,
-        "frame_sample": """
-            SELECT doc_id,
-                   n_chars / 100.0 AS duration_s,
-                   CAST(unnest(generate_series(0, 3)) AS INT) AS frame_idx,
-                   (n_chars / 100.0) * (unnest(generate_series(0, 3)) + 0.5) / 4 AS frame_ts
-            FROM documents
-        """,
         "entity_link_scores": f"""
             {_CANON},
 scored AS (
@@ -3698,9 +3514,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
                    CAST(row_number() OVER (ORDER BY n DESC, v) AS INT) AS rank
             FROM cnt QUALIFY rank <= 20
         """,
-        # mirrors events.asof_join: purchases ASOF LEFT JOIN the
-        # (user_id, ts)-deduped signups — DuckDB's native ASOF is the
-        # oracle for the union-tag carry-forward plan
         "graph_pagerank": _pagerank_oracle(3),
         # mirrors graph_algo.cooccurrence_edges over (conv_id, norm)
         "comention_edges": f"""
@@ -3880,23 +3693,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             JOIN degs du ON du.n = ul.u
             JOIN degs dv ON dv.n = ul.v
         """,
-        "events_asof": """
-            WITH sig AS (
-              SELECT user_id, ts, event_id, value FROM (
-                SELECT user_id, ts, event_id, value,
-                       row_number() OVER (PARTITION BY user_id, ts
-                                          ORDER BY event_id DESC) AS rn
-                FROM events WHERE event_type = 'signup')
-              WHERE rn = 1
-            ),
-            pur AS (SELECT * FROM events WHERE event_type = 'purchase')
-            SELECT p.event_id, p.user_id,
-                   epoch_us(p.ts) AS ts_us,
-                   s.event_id AS ref_event_id,
-                   CAST(round(s.value * 100) AS BIGINT) AS ref_cents
-            FROM pur p ASOF LEFT JOIN sig s
-              ON p.user_id = s.user_id AND p.ts >= s.ts
-        """,
         # mirrors graph_algo.lpa_communities (rounds=2) over the same
         # co-mention edge set: unrolled synchronous rounds — weighted
         # vote sum per (node, label), argmax by (w DESC, lab ASC) =
@@ -3970,300 +3766,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             JOIN spl sa ON sa.doc_id = v.a
             JOIN spl sb ON sb.doc_id = v.b
             WHERE sa.split <> sb.split
-        """,
-        # mirrors events.sessionize_batch (30-min gap, per-user): the
-        # same two-pass window — start flag, then running sum / running
-        # last-start-rank on the identical frame
-        "event_sessions": """
-            WITH ordered AS (
-              SELECT event_id, user_id,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                             > 30 * 60 * 1000000
-                          THEN 1 ELSE 0 END AS s,
-                     row_number() OVER w - 1 AS rnk
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT event_id, user_id,
-                   CAST(sum(s) OVER w2 - 1 AS BIGINT) AS session_idx,
-                   CAST(rnk - max(CASE WHEN s = 1 THEN rnk END) OVER w2
-                        AS BIGINT) AS session_event_idx
-            FROM ordered
-            WINDOW w2 AS (PARTITION BY user_id ORDER BY rnk
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        """,
-        # mirrors events.histogram_quantiles (width 600 cents, 64 bins,
-        # p50/90/99): fixed-boundary sketch, lower-bin-boundary pick
-        "event_histogram_quantiles": """
-            WITH h AS (
-              SELECT event_type,
-                     least(greatest(CAST(floor(
-                       CAST(round(value * 100) AS BIGINT) / 600.0) AS BIGINT),
-                       0), 63) AS bin,
-                     count(*) AS n
-              FROM events
-              WHERE CAST(round(value * 100) AS BIGINT) IS NOT NULL
-              GROUP BY 1, 2
-            ), c AS (
-              SELECT event_type, bin,
-                     sum(n) OVER (PARTITION BY event_type ORDER BY bin
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) AS cum,
-                     sum(n) OVER (PARTITION BY event_type) AS total
-              FROM h
-            ), pp AS (SELECT unnest([50, 90, 99]) AS p)
-            SELECT c.event_type, CAST(pp.p AS INT) AS p,
-                   CAST(min(c.bin) AS BIGINT) AS bin,
-                   CAST(min(c.bin) * 600 AS BIGINT) AS est_cents
-            FROM c CROSS JOIN pp
-            WHERE c.cum >= floor(pp.p * (c.total - 1) / 100.0) + 1
-            GROUP BY c.event_type, pp.p
-        """,
-        # mirrors events.props_extract: schema-on-read JSON path with
-        # NULL-on-malformed/missing/uncastable per-row degradation
-        # (TRY_CAST AS JSON = Spark get_json_object's tolerance)
-        "event_props": """
-            SELECT event_id, event_type,
-                   TRY_CAST(json_extract_string(TRY_CAST(props AS JSON), '$.k')
-                            AS BIGINT) AS k
-            FROM events
-        """,
-        # mirrors events.props_rollup: one exact-integer aggregate per
-        # event_type over the extracted field (sum cast back to BIGINT
-        # — DuckDB widens integer sums to HUGEINT)
-        "event_props_rollup": """
-            WITH x AS (
-              SELECT event_type,
-                     TRY_CAST(json_extract_string(TRY_CAST(props AS JSON), '$.k')
-                              AS BIGINT) AS k
-              FROM events
-            )
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   CAST(count(k) AS BIGINT) AS n_with_field,
-                   CAST(sum(k) AS BIGINT) AS sum_f,
-                   CAST(min(k) AS BIGINT) AS min_f,
-                   CAST(max(k) AS BIGINT) AS max_f
-            FROM x GROUP BY event_type
-        """,
-        # mirrors events.funnel_reach (view→click→signup→purchase):
-        # the iterative-min chain — step i's time is the earliest
-        # occurrence at or after step i-1's time — which the Spark
-        # operator computes as a greedy fold over the (ts, step)-sorted
-        # per-user event array (provably the same chain)
-        "event_funnel": """
-            WITH e AS (
-              SELECT user_id, ts, event_type FROM events
-              WHERE event_type IN ('view', 'click', 'signup', 'purchase')
-            ),
-            s0 AS (SELECT user_id, min(ts) AS t FROM e
-                   WHERE event_type = 'view' GROUP BY user_id),
-            s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s0 USING (user_id)
-                   WHERE e.event_type = 'click' AND e.ts >= s0.t GROUP BY e.user_id),
-            s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s1 USING (user_id)
-                   WHERE e.event_type = 'signup' AND e.ts >= s1.t GROUP BY e.user_id),
-            s3 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s2 USING (user_id)
-                   WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY e.user_id),
-            u AS (SELECT DISTINCT user_id FROM e)
-            SELECT u.user_id,
-                   CAST(CASE WHEN s3.t IS NOT NULL THEN 4
-                             WHEN s2.t IS NOT NULL THEN 3
-                             WHEN s1.t IS NOT NULL THEN 2
-                             WHEN s0.t IS NOT NULL THEN 1
-                             ELSE 0 END AS INT) AS reached
-            FROM u LEFT JOIN s0 USING (user_id) LEFT JOIN s1 USING (user_id)
-                   LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-        """,
-        # mirrors events.moving_daily_stats (7-day trailing RANGE
-        # frame over the tiny daily rollup; integer cents + floor-div
-        # average)
-        "event_moving_stats": """
-            WITH daily AS (
-              SELECT event_type,
-                     CAST(epoch(date_trunc('day', ts)) AS BIGINT)
-                       AS bucket_epoch,
-                     CAST(count(*) AS BIGINT) AS n_events,
-                     CAST(sum(CAST(round(value * 100) AS BIGINT))
-                          AS BIGINT) AS total_cents
-              FROM events GROUP BY 1, 2
-            )
-            SELECT event_type, bucket_epoch, n_events, total_cents,
-                   CAST(sum(n_events) OVER w AS BIGINT) AS trail_n,
-                   CAST(sum(total_cents) OVER w AS BIGINT) AS trail_cents,
-                   CAST(sum(total_cents) OVER w
-                        // sum(n_events) OVER w AS BIGINT)
-                     AS trail_avg_cents
-            FROM daily
-            WINDOW w AS (PARTITION BY event_type ORDER BY bucket_epoch
-                         RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW)
-        """,
-        # mirrors events.retention_cohorts (anchor=signup, all
-        # activity): first-signup day per user, calendar-day offsets,
-        # one row per (user, offset), counted per (cohort, offset)
-        "event_retention": """
-            WITH a AS (
-              SELECT user_id, min(ts) AS first_ts FROM events
-              WHERE event_type = 'signup' GROUP BY user_id
-            ),
-            anchors AS (
-              SELECT user_id,
-                     CAST(epoch(date_trunc('day', first_ts)) AS BIGINT)
-                       AS cohort_epoch,
-                     CAST(first_ts AS DATE) AS cohort_date
-              FROM a
-            ),
-            pairs AS (
-              SELECT DISTINCT e.user_id, x.cohort_epoch,
-                     CAST(date_diff('day', x.cohort_date,
-                                    CAST(e.ts AS DATE)) AS INT)
-                       AS offset_days
-              FROM events e JOIN anchors x USING (user_id)
-              WHERE date_diff('day', x.cohort_date, CAST(e.ts AS DATE)) >= 0
-            )
-            SELECT cohort_epoch, offset_days,
-                   CAST(count(*) AS BIGINT) AS n_users
-            FROM pairs GROUP BY cohort_epoch, offset_days
-        """,
-        # mirrors events.funnel_counts over the same chain
-        "event_funnel_counts": """
-            WITH e AS (
-              SELECT user_id, ts, event_type FROM events
-              WHERE event_type IN ('view', 'click', 'signup', 'purchase')
-            ),
-            s0 AS (SELECT user_id, min(ts) AS t FROM e
-                   WHERE event_type = 'view' GROUP BY user_id),
-            s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s0 USING (user_id)
-                   WHERE e.event_type = 'click' AND e.ts >= s0.t GROUP BY e.user_id),
-            s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s1 USING (user_id)
-                   WHERE e.event_type = 'signup' AND e.ts >= s1.t GROUP BY e.user_id),
-            s3 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s2 USING (user_id)
-                   WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY e.user_id)
-            SELECT CAST(step_idx AS INT) AS step_idx, step,
-                   CAST(n_users AS BIGINT) AS n_users
-            FROM (
-              SELECT 0 AS step_idx, 'view' AS step,
-                     (SELECT count(*) FROM s0) AS n_users
-              UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
-              UNION ALL SELECT 2, 'signup', (SELECT count(*) FROM s2)
-              UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-            )
-        """,
-        # mirrors events.event_quantiles: exact nearest-rank(lower)
-        # element selection — bit-portable, unlike sketch/interpolated
-        # percentiles
-        "segment_order_stats": """
-            SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS mktsegment,
-                   o_orderstatus AS orderstatus,
-                   CAST(count(*) AS BIGINT) AS n_orders,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS total_cents
-            FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-            GROUP BY 1, 2
-        """,
-        "segment_funnel": """
-            WITH e AS (
-              SELECT user_id, ts, event_type FROM events
-              WHERE event_type IN ('view', 'click', 'signup', 'purchase')
-            ),
-            s0 AS (SELECT user_id, min(ts) AS t FROM e
-                   WHERE event_type = 'view' GROUP BY user_id),
-            s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s0 USING (user_id)
-                   WHERE e.event_type = 'click' AND e.ts >= s0.t GROUP BY e.user_id),
-            s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s1 USING (user_id)
-                   WHERE e.event_type = 'signup' AND e.ts >= s1.t GROUP BY e.user_id),
-            s3 AS (SELECT e.user_id, min(e.ts) AS t FROM e JOIN s2 USING (user_id)
-                   WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY e.user_id),
-            reach AS (
-              SELECT u.user_id,
-                     (CASE WHEN s0.user_id IS NOT NULL THEN 1 ELSE 0 END
-                      + CASE WHEN s1.user_id IS NOT NULL THEN 1 ELSE 0 END
-                      + CASE WHEN s2.user_id IS NOT NULL THEN 1 ELSE 0 END
-                      + CASE WHEN s3.user_id IS NOT NULL THEN 1 ELSE 0 END)
-                       AS reached
-              FROM (SELECT DISTINCT user_id FROM e) u
-              LEFT JOIN s0 USING (user_id) LEFT JOIN s1 USING (user_id)
-              LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-            ),
-            seg AS (SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS mktsegment,
-                           reached
-                    FROM reach LEFT JOIN customer ON user_id = c_custkey)
-            SELECT mktsegment, CAST(step_idx AS INT) AS step_idx, step,
-                   CAST(n_users AS BIGINT) AS n_users
-            FROM (
-              SELECT mktsegment, 0 AS step_idx, 'view' AS step,
-                     sum(CASE WHEN reached >= 1 THEN 1 ELSE 0 END) AS n_users
-              FROM seg GROUP BY mktsegment
-              UNION ALL SELECT mktsegment, 1, 'click',
-                     sum(CASE WHEN reached >= 2 THEN 1 ELSE 0 END)
-              FROM seg GROUP BY mktsegment
-              UNION ALL SELECT mktsegment, 2, 'signup',
-                     sum(CASE WHEN reached >= 3 THEN 1 ELSE 0 END)
-              FROM seg GROUP BY mktsegment
-              UNION ALL SELECT mktsegment, 3, 'purchase',
-                     sum(CASE WHEN reached >= 4 THEN 1 ELSE 0 END)
-              FROM seg GROUP BY mktsegment
-            )
-        """,
-        "event_quantiles": """
-            WITH r AS (
-              SELECT event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY CAST(round(value * 100) AS BIGINT),
-                                                 event_id) AS rn,
-                     count(*) OVER (PARTITION BY event_type) AS n
-              FROM events
-            )
-            SELECT event_type, CAST(p AS INT) AS p, cents AS cents_at_p
-            FROM r, (VALUES (50), (95), (99)) probs(p)
-            WHERE rn = ((n - 1) * p) // 100 + 1
-        """,
-        # mirrors events.event_outliers: exact nearest-rank quartiles →
-        # integer 3×IQR Tukey fences → broadcast-join flag pass; nulls
-        # excluded per the histogram operators' degradation contract
-        "event_outliers": """
-            WITH b AS (
-              SELECT event_id, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents
-              FROM events
-              WHERE CAST(round(value * 100) AS BIGINT) IS NOT NULL
-            ),
-            r AS (
-              SELECT event_type, cents,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY cents, event_id) AS rn,
-                     count(*) OVER (PARTITION BY event_type) AS n
-              FROM b
-            ),
-            f AS (
-              SELECT event_type,
-                     max(CASE WHEN rn = ((n - 1) * 25) // 100 + 1
-                         THEN cents END) AS q_lo,
-                     max(CASE WHEN rn = ((n - 1) * 75) // 100 + 1
-                         THEN cents END) AS q_hi
-              FROM r GROUP BY event_type
-            ),
-            g AS (
-              SELECT event_type,
-                     q_lo - 3 * (q_hi - q_lo) AS f_lo,
-                     q_hi + 3 * (q_hi - q_lo) AS f_hi
-              FROM f
-            )
-            SELECT b.event_id, b.event_type, b.cents,
-                   CASE WHEN b.cents > g.f_hi THEN 'hi'
-                        ELSE 'lo' END AS side
-            FROM b JOIN g USING (event_type)
-            WHERE b.cents > g.f_hi OR b.cents < g.f_lo
-        """,
-        # mirrors events.event_rollup (hourly buckets, exact cents)
-        "event_rollup": """
-            SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS bucket_epoch,
-                   event_type,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-                   CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS max_cents
-            FROM events GROUP BY 1, 2
         """,
         # mirrors curation.boilerplate_ngrams (n=3 word-grams, DF >= 5):
         # per-doc DISTINCT shingles, so count(*) IS document frequency

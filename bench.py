@@ -161,8 +161,7 @@ def main() -> None:
 
     # one representative per round-3 family (VERDICT r3 item 6), so
     # their regressions are bench-visible round-over-round:
-    # substrings / events / text-search / graph-analytics
-    from rdf_n3_spark.operators.events import asof_join, latest_per_ts
+    # substrings / text-search / graph-analytics
     from rdf_n3_spark.operators.graph_algo import (
         cooccurrence_edges,
         triangle_counts,
@@ -173,14 +172,6 @@ def main() -> None:
 
     substr = sink(dup_spans(docs_tbl, k=8))
     kw = sink(keyword_topk(docs_tbl))
-    ev_tbl = spark.read.parquet(f"{sf_dir}/events.parquet")
-    asof = sink(
-        asof_join(
-            ev_tbl.where(F.col("event_type") == "purchase"),
-            latest_per_ts(ev_tbl.where(F.col("event_type") == "signup")),
-            key="user_id", ts="ts", right_cols=("event_id", "value"),
-        ).drop("ts")
-    )
     # weight ≥ 3: the curation noise floor (entities co-occurring in
     # <3 conversations are incidental).  The UNFILTERED sf0.1 hub graph
     # is a ~1000-node quasi-clique whose exact triangle OUTPUT costs
@@ -206,14 +197,13 @@ def main() -> None:
     from rdf_n3_spark.operators.similarity import ivf_topk_tables
 
     # conversation-grain profile over the REPLICATED corpus (scales
-    # with the headline) and the funnel evidence row
+    # with the headline)
     from rdf_n3_spark.operators.conversations import (
         conv_dedup,
         conversation_stats,
         sft_pairs,
         turn_transitions,
     )
-    from rdf_n3_spark.operators.events import funnel_reach
 
     conv = sink(conversation_stats(transcripts_df).drop(
         "first_ts", "last_ts"))
@@ -229,8 +219,6 @@ def main() -> None:
     from rdf_n3_spark.operators.conversations import conv_segments
 
     segs = sink(conv_segments(transcripts_df))
-    funnel = sink(funnel_reach(
-        ev_tbl, ["view", "click", "signup", "purchase"]))
 
     # temporal-KB family: fold three sliding KB builds over the
     # REPLICATED corpus into validity intervals (diff + window), and
@@ -271,10 +259,9 @@ def main() -> None:
     negs = sink(kg_negatives(refs, k=2))
 
     # round-5 closing additions: BM25 retrieval (same corpus-derived
-    # query set as the driver row), the seed-set k-hop harvest, and the
-    # Tukey-fence outlier screen — one row per new family
+    # query set as the driver row) and the seed-set k-hop harvest —
+    # one row per new family
     from rdf_n3_spark.functions.text import search_bm25
-    from rdf_n3_spark.operators.events import event_outliers
     from rdf_n3_spark.operators.graph_algo import khop_neighbors
 
     bm25_q = docs_tbl.where(F.col("doc_id") < 20).select(
@@ -282,7 +269,6 @@ def main() -> None:
         F.concat_ws(
             " ", F.slice(F.split(F.lower("text"), " "), 1, 3)).alias("qtext"))
     bm25 = sink(search_bm25(docs_tbl, bm25_q))
-    outliers = sink(event_outliers(ev_tbl))
     # the harvest's input contract is a MATERIALIZED edge table (same
     # convention as kb_history/kg_negatives) — without the checkpoint
     # every hop's eager localCheckpoint re-derives the co-mention
@@ -408,7 +394,6 @@ def main() -> None:
         "ann_ivf_multiprobe": lambda: timed_runs(ann, runs, stat),
         "graph_pagerank": timed_pagerank,
         "substring_spans": lambda: timed_runs(substr, runs, stat),
-        "events_asof": lambda: timed_runs(asof, runs, stat),
         "keyword_topk": lambda: timed_runs(kw, runs, stat),
         "triangle_counts": lambda: timed_runs(tri, runs, stat),
         "relation_candidates": lambda: timed_runs(rel, runs, stat),
@@ -419,12 +404,10 @@ def main() -> None:
         "token_heavy_hitters": lambda: timed_runs(hh, runs, stat),
         "conv_stats": lambda: timed_runs(conv, runs, stat),
         "conv_transitions": lambda: timed_runs(trans, runs, stat),
-        "event_funnel": lambda: timed_runs(funnel, runs, stat),
         "kb_history": lambda: timed_runs(hist, runs, stat),
         "kg_negatives": lambda: timed_runs(negs, runs, stat),
         "search_bm25": lambda: timed_runs(bm25, runs, stat),
         "graph_khop": timed_khop,
-        "event_outliers": lambda: timed_runs(outliers, runs, stat),
         "graph_lpa": timed_lpa,
         "split_leakage": lambda: timed_runs(leak, runs, stat),
         "sft_pairs": lambda: timed_runs(sft, runs, stat),

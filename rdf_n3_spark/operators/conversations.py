@@ -9,9 +9,9 @@ sensibly is usually an ingestion bug, not data).
 
 Scale shapes: :func:`conversation_stats` is ONE map-side-combinable
 conv-keyed aggregate (exact integers only — counts, token sums, epoch
-seconds); :func:`role_protocol` is the funnel/sessionize discipline —
-one conv-keyed exchange, per-conversation `array_sort(collect_list)`
-+ JVM HOF fold, state bounded by that conversation's turn count.
+seconds); :func:`role_protocol` is one conv-keyed exchange,
+per-conversation `array_sort(collect_list)` + JVM HOF fold, state
+bounded by that conversation's turn count.
 """
 
 from __future__ import annotations
@@ -61,7 +61,7 @@ def role_protocol(transcripts: DataFrame) -> DataFrame:
     order; ``max_role_run`` is the longest same-role streak;
     ``ok = 1`` iff it starts with user and has zero repeats).
 
-    Same one-exchange plan as the funnel: per-conversation
+    One-exchange plan: per-conversation
     `array_sort(collect_list(struct(turn_idx, role)))` + one
     `aggregate` HOF carrying (prev_role, repeats, run, max_run) —
     per-conversation state only, everything JVM-side."""

@@ -112,35 +112,3 @@ def enrich_entities(mentions: DataFrame, supplier: DataFrame,
         .select("s", F.explode("po").alias("t"))
         .select("s", F.col("t.p").alias("p"), F.col("t.o").alias("o"))
     )
-
-
-def segment_order_stats(orders: DataFrame,
-                        customer: DataFrame) -> DataFrame:
-    """(mktsegment, orderstatus, n_orders, total_cents) — revenue
-    attribution over the order fact table by customer market segment:
-    the analytics twin of the funnel's segment breakdown, closing the
-    loop from behavioral events to booked revenue.  Customers missing
-    from the registry report under ``'UNKNOWN'`` (left join — facts
-    are ground truth).
-
-    Scale shape: the dim broadcasts onto the fact stream (never the
-    reverse), order value converts to exact integer cents BEFORE the
-    sum (engine-portable, no float accumulation order-dependence), and
-    the aggregate is map-side combinable down to segments × statuses
-    rows."""
-    seg = orders.join(
-        F.broadcast(customer.select(F.col("c_custkey").alias("o_custkey"),
-                                    "c_mktsegment")),
-        "o_custkey", "left",
-    )
-    return (
-        seg.select(
-            F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("mktsegment"),
-            F.col("o_orderstatus").alias("orderstatus"),
-            F.round(F.col("o_totalprice") * 100).try_cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("mktsegment", "orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             F.sum("cents").alias("total_cents"))
-    )

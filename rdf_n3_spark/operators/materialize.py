@@ -167,7 +167,9 @@ def committed_batches(spark: SparkSession, root: str) -> set:
     lin = read_lineage(spark, root)
     if lin is None:
         return set()
-    return {r["batch_id"] for r in lin.select("batch_id").distinct().collect()}
+    # the set is built on the driver: a distinct() would cost a shuffle
+    # stage for a table of a few rows per batch
+    return {r["batch_id"] for r in lin.select("batch_id").collect()}
 
 
 def materialize_graph(

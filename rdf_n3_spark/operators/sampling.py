@@ -182,10 +182,9 @@ def token_budget_sample(documents: DataFrame, budget_tokens: int,
 
     The naive plan sorts each source's docs by a seeded hash and takes
     a prefix until the token cumsum hits the target — a per-source
-    GLOBAL sort, the shape the repo bans at 100 TB (`event_quantiles`'
-    documented exact-cost floor).  This operator picks the same kind
-    of prefix WITHOUT sorting the corpus, the histogram-threshold
-    trick shared with `events.histogram_quantiles`:
+    GLOBAL sort, the shape the repo bans at 100 TB.  This operator
+    picks the same kind of prefix WITHOUT sorting the corpus, by a
+    histogram threshold:
 
     * every doc hashes into one of ``buckets`` seeded md5 buckets
       (source-salted, so per-source draws are independent);

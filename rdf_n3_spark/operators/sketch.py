@@ -449,9 +449,8 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame | None = None,
 # flatter distribution degrades to exact counts of a candidate
 # SUPERSET (never wrong counts); size `counters` up like any sketch
 # knob.  This is the constant-exchange twin of a full-vocabulary
-# groupBy-orderBy, completing the exact↔sketch pairs (event_quantiles
-# ↔ histogram_quantiles, decontaminate ↔ bloom_decontaminate,
-# countDistinct ↔ kmv).
+# groupBy-orderBy, completing the exact↔sketch pairs (decontaminate
+# ↔ bloom_decontaminate, countDistinct ↔ kmv).
 # ---------------------------------------------------------------------------
 
 

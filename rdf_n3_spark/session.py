@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 24g: a local-mode driver heap
+    larger than the host lets the kernel kill the JVM mid-run."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(ram // 2, 24 << 30) >> 20}m"
+
+
 def get_spark(
     app: str = "rdf_n3_spark",
     cores: int | None = None,
@@ -39,7 +46,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

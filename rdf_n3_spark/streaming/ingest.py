@@ -112,74 +112,3 @@ def windowed_mention_counts(
     return toks.groupBy(F.window("ts", window).alias("w"), "norm").agg(
         F.count(F.lit(1)).alias("n_mentions")
     )
-
-
-def windowed_value_histogram(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "1 day",
-    width_cents: int = 600,
-    bins: int = 64,
-) -> DataFrame:
-    """(w, event_type, bin, n) — the histogram sketch of
-    :func:`rdf_n3_spark.operators.events.histogram_quantiles` as a
-    watermarked event-time windowed aggregation: per-window per-type
-    fixed-boundary bin counts, the continuously-maintained input to
-    approximate-percentile monitoring.
-
-    Exactly the case the sketch's merge property exists for: bin
-    boundaries are data-independent, so Structured Streaming's
-    incremental partial aggregation (late rows folding into existing
-    window state, map-side combine per micro-batch) computes the SAME
-    counts a batch pass would; state is bounded by watermark horizon ×
-    #types × ``bins`` rows.  Per-bin counts for one window match the
-    batch sketch over that window's rows (pinned by
-    tests/test_streaming.py)."""
-    cents = F.round(F.col("value") * 100).try_cast("bigint")
-    b = F.least(
-        F.greatest(F.floor(cents / width_cents).cast("bigint"), F.lit(0)),
-        F.lit(bins - 1),
-    )
-    # null-valued events are excluded, matching the batch sketch (see
-    # events.histogram_quantiles: greatest(NULL, 0)=0 would otherwise
-    # bin them at the bottom)
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", "event_type", cents.alias("__c"), b.alias("bin"))
-        .where(F.col("__c").isNotNull())
-        .groupBy(F.window("ts", window).alias("w"), "event_type", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def stream_events_asof(stream: DataFrame, reference: DataFrame,
-                       out_dir: str, checkpoint_dir: str,
-                       key: str = "user_id", ts: str = "ts",
-                       right_cols: tuple[str, ...] = ("event_id", "value")):
-    """Continuous AS-OF enrichment — the streaming twin of
-    :func:`rdf_n3_spark.operators.events.asof_join`: every micro-batch
-    of incoming (left) events is joined to the single ``reference``
-    row with the greatest ts ≤ the event's ts per ``key``, against a
-    STATIC reference snapshot (pre-deduped via ``latest_per_ts``, the
-    same dimension-snapshot convention as the gates' corpus index).
-
-    Unlike the dedup gates' representative-verify recall trade, this
-    twin is EXACT: an as-of verdict depends only on the left row and
-    the static right side, never on other stream rows or batch
-    boundaries — so the union of per-epoch outputs EQUALS the batch
-    operator on the whole stream (pinned in test_streaming.py).
-    Per-epoch rows land under the shared
-    :func:`rdf_n3_spark.streaming.sink.epoch_overwrite_sink`
-    exactly-once contract.
-
-    Scale: per micro-batch work is batch-sized + reference-sized; the
-    asof's union-tag window partitions by ``key``, so a hot key costs
-    one partition's sort of (batch ∩ key) + (reference ∩ key) rows."""
-    from rdf_n3_spark.operators.events import asof_join
-    from rdf_n3_spark.streaming.sink import epoch_overwrite_sink
-
-    def enrich(batch_df: DataFrame, epoch_id: int) -> DataFrame:
-        return asof_join(batch_df, reference, key=key, ts=ts,
-                         right_cols=right_cols)
-
-    return epoch_overwrite_sink(stream, out_dir, checkpoint_dir, enrich)

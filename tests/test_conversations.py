@@ -1,6 +1,6 @@
 """Conversation-grain operators (operators/conversations): stats and
 role-protocol validation on hand-built dialogues, plan audits in the
-funnel/sessionize one-exchange style."""
+one-exchange style."""
 
 from __future__ import annotations
 

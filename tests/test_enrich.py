@@ -60,27 +60,3 @@ def test_enrich_broadcasts_every_registry_join(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 4, plan
-
-
-def test_segment_order_stats_exact_cents_and_unknown(spark):
-    from rdf_n3_spark.operators.enrich import segment_order_stats
-
-    orders = spark.createDataFrame(
-        [(1, 1, "F", 100.10), (2, 1, "F", 0.07), (3, 2, "O", 5.00),
-         (4, 99, "F", 1.01)],  # customer 99 not in dim
-        "o_orderkey int, o_custkey int, o_orderstatus string, "
-        "o_totalprice double")
-    customer = spark.createDataFrame(
-        [(1, "BUILDING"), (2, "MACHINERY")],
-        "c_custkey int, c_mktsegment string")
-    got = {(r["mktsegment"], r["orderstatus"], r["n_orders"],
-            r["total_cents"])
-           for r in segment_order_stats(orders, customer).collect()}
-    assert got == {
-        ("BUILDING", "F", 2, 10017),
-        ("MACHINERY", "O", 1, 500),
-        ("UNKNOWN", "F", 1, 101),
-    }
-    plan = (segment_order_stats(orders, customer)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan

@@ -34,6 +34,9 @@ def test_all_queries_have_oracles_or_are_flagged():
     # non-SQL-expressible ops are allowed to omit oracles; keep the list explicit
     allowed_rows_only: set[str] = set()
     assert missing <= allowed_rows_only, f"queries without oracle: {missing}"
+    # a pruned query must take its oracle SQL with it
+    assert set(ORACLES) <= set(QUERIES), (
+        f"oracles without query: {set(ORACLES) - set(QUERIES)}")
 
 
 def test_driver_window_covers_uncertified():
@@ -87,7 +90,7 @@ def test_harness_detects_mismatches(spark):
 CROSS_SF = [
     "transcripts_build", "mention_extract", "entity_agg", "rule_closure",
     "graph_includes_join", "entity_canon", "dedup_minhash",
-    "dedup_embedding", "ann_topk_partial", "media_features",
+    "dedup_embedding", "ann_topk_partial",
     # round-3 queries whose dedicated test files don't already pin
     # sf0.001 parity themselves
     "gopher_quality", "paragraph_dedup", "hash_embed", "graph_kcore",
@@ -100,13 +103,11 @@ CROSS_SF = [
     "relation_triples",
     # round-5 queries
     "ann_ivf_multitable", "bloom_decontaminate", "token_heavy_hitters",
-    "n3_write_nquads", "token_budget_sample", "event_props_rollup",
-    "label_consistency", "event_funnel", "conv_stats",
-    "conv_role_protocol", "event_retention", "event_moving_stats",
+    "n3_write_nquads", "token_budget_sample",
+    "label_consistency", "conv_stats", "conv_role_protocol",
     "conv_transitions", "kb_history", "kb_history_snapshots", "kb_asof",
-    "kg_negatives", "entity_enrich", "segment_funnel",
-    "segment_order_stats", "search_bm25", "search_rrf", "graph_khop",
-    "event_outliers",
+    "kg_negatives", "entity_enrich", "search_bm25", "search_rrf",
+    "graph_khop",
 ]
 
 

@@ -69,6 +69,7 @@ def test_fixture_pr(name, src, ref):
 
 def test_corpus_mean_pr():
     """Aggregate P/R over the whole golden corpus ≥ 0.95 (BASELINE.json)."""
+    assert PAIRS, "no golden *-ref.n3 pairs found in the reference examples/ tree"
     tp = tr = n = 0
     for name, src, ref in PAIRS:
         base = "http://example.org/" + os.path.basename(src)

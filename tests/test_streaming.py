@@ -87,86 +87,3 @@ def test_windowed_is_streaming_capable(spark, drops):
     # append mode emits only watermark-closed windows; table existing
     # (possibly empty) proves the stateful plan executed
     assert spark.table("wmc").columns == ["w", "norm", "n_mentions"]
-
-
-def test_windowed_histogram_matches_batch_sketch(spark, tmp_path):
-    """The streamed windowed histogram's per-window bin counts equal
-    the batch sketch over the same rows (the merge property under
-    incremental aggregation), and the plan is streaming-legal."""
-    import datetime as dt
-
-    from rdf_n3_spark.streaming.ingest import windowed_value_histogram
-
-    t0 = dt.datetime(2026, 1, 1, 0, 30)
-    rows = [(i, t0 + dt.timedelta(minutes=i), 1, "purchase", float(v), "")
-            for i, v in enumerate([1.0, 7.5, 7.5, 13.0, 650.0])]
-    src = str(tmp_path / "ev")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        windowed_value_histogram(stream, window="1 hour", width_cents=600)
-        .writeStream.format("memory").queryName("whist")
-        # complete mode: append would hold rows until the watermark
-        # passes the window, which a single availableNow pass never does
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {(r["event_type"], r["bin"]): r["n"]
-           for r in spark.sql("SELECT event_type, bin, n FROM whist").collect()}
-    # cents: 100, 750, 750, 1300, 65000 → bins (width 600): 0, 1, 1, 2, 63
-    assert got == {("purchase", 0): 1, ("purchase", 1): 2,
-                   ("purchase", 2): 1, ("purchase", 63): 1}
-    batch = windowed_value_histogram(
-        spark.read.parquet(src), window="1 hour", width_cents=600)
-    got_batch = {(r["event_type"], r["bin"]): r["n"] for r in batch.collect()}
-    assert got_batch == got
-
-
-def test_stream_events_asof_equals_batch(spark, tmp_path):
-    """The continuous as-of enrichment is EXACT: the union of per-epoch
-    outputs equals the batch asof_join over the whole stream, because
-    an as-of verdict depends only on the left row and the static
-    reference — never on other stream rows or epoch boundaries.
-    Two source files ⇒ availableNow may split them across epochs;
-    equality must hold regardless."""
-    from rdf_n3_spark.operators.events import asof_join, latest_per_ts
-    from rdf_n3_spark.streaming.ingest import stream_events_asof
-
-    ref_rows = [  # (event_id, user_id, ts, value)
-        (1, "u1", "2026-01-01 00:00:00", 10.0),
-        (2, "u1", "2026-01-01 02:00:00", 20.0),
-        (3, "u2", "2026-01-01 01:00:00", 30.0),
-    ]
-    ref = latest_per_ts(spark.createDataFrame(
-        ref_rows, "event_id long, user_id string, ts string, value double"
-    ).withColumn("ts", F.to_timestamp("ts")))
-    left_schema = "event_id long, user_id string, ts string"
-    batches = [
-        [(100, "u1", "2026-01-01 01:00:00"),   # -> ref 1
-         (101, "u1", "2026-01-01 02:00:00")],  # equal-ts match -> ref 2
-        [(102, "u2", "2026-01-01 00:30:00"),   # before any ref -> NULLs
-         (103, "u3", "2026-01-01 05:00:00")],  # unknown key -> NULLs
-    ]
-    src = str(tmp_path / "in")
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, left_schema)
-         .withColumn("ts", F.to_timestamp("ts"))
-         .coalesce(1).write.mode("append").parquet(src))
-
-    out = str(tmp_path / "enriched")
-    stream = spark.readStream.schema(
-        "event_id long, user_id string, ts timestamp").parquet(src)
-    q = stream_events_asof(stream, ref, out, str(tmp_path / "ck")).start()
-    q.awaitTermination(120)
-
-    got = {(r.event_id, r.ref_event_id, r.ref_value)
-           for r in spark.read.parquet(out).collect()}
-    batch = {(r.event_id, r.ref_event_id, r.ref_value)
-             for r in asof_join(spark.read.parquet(src), ref).collect()}
-    assert got == batch == {
-        (100, 1, 10.0), (101, 2, 20.0), (102, None, None), (103, None, None)}
