@@ -112,12 +112,7 @@ from rdf_n3_spark.operators.enrich import enrich_entities
 from rdf_n3_spark.operators.triples import (
     canonical_triples,
     entity_triples,
-    kb_asof,
     kb_diff,
-    kb_history,
-    kb_history_snapshots,
-    kb_timeline,
-    kg_negatives,
     mention_triples,
 )
 from rdf_n3_spark.sources.n3_sink import serialize_graphs
@@ -177,22 +172,6 @@ def _q_search_rrf(spark, sf_dir):
         search_topk(docs, q, k=10),
         search_bm25(docs, q, k=10),
     ])
-
-
-def _q_graph_khop(spark, sf_dir):
-    """2-hop BFS neighborhoods of two seed entities (the synthetic hub
-    and a mid-degree supplier) over the co-mention graph — the seed-set
-    context-harvest shape for KG curation."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        khop_neighbors,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    edges = cooccurrence_edges(m, group="conv_id", node="norm")
-    seeds = spark.createDataFrame(
-        [("part_hub",), ("supp_1",)], "seed string")
-    return khop_neighbors(edges, seeds, k=2)
 
 
 def _q_redact(spark, sf_dir):
@@ -790,18 +769,6 @@ def _q_kb_diff(spark, sf_dir):
     return kb_diff(old, new)
 
 
-def _kb_snapshots(spark, sf_dir):
-    """Three sliding KB builds (turns 0–3 / 1–4 / 2–5): each shift both
-    adds and removes triples, exercising every interval shape."""
-    t = transcripts(spark, sf_dir)
-
-    def kb(lo, hi):
-        m = extract_mentions(t.where(F.col("turn_idx").between(lo, hi)))
-        return mention_triples(m).unionByName(entity_triples(m))
-
-    return [(0, kb(0, 3)), (1, kb(1, 4)), (2, kb(2, 5))]
-
-
 def _q_entity_enrich(spark, sf_dir):
     """Registry enrichment: the KG's entity vocabulary joined to the
     supplier/part authority tables (nation → region star roll-up),
@@ -813,42 +780,6 @@ def _q_entity_enrich(spark, sf_dir):
 
     return enrich_entities(m, rd("supplier"), rd("part"),
                            rd("nation"), rd("region"))
-
-
-def _q_kb_history(spark, sf_dir):
-    """SCD2 validity intervals folded from the 3-epoch diff stream;
-    still-live rows surface the -1 sentinel so the oracle compare
-    stays integer-typed."""
-    hist = kb_history(kb_timeline(_kb_snapshots(spark, sf_dir)))
-    return hist.select(
-        "s", "p", "o", "valid_from",
-        F.coalesce("valid_to", F.lit(-1)).alias("valid_to"))
-
-
-def _q_kb_history_snapshots(spark, sf_dir):
-    """The ONE-exchange snapshot fold over the same 3 builds — must
-    produce byte-identical intervals to the diff-stream fold, so it
-    shares kb_history's oracle."""
-    hist = kb_history_snapshots(_kb_snapshots(spark, sf_dir))
-    return hist.select(
-        "s", "p", "o", "valid_from",
-        F.coalesce("valid_to", F.lit(-1)).alias("valid_to"))
-
-
-def _q_kb_asof(spark, sf_dir):
-    """Point-in-time reconstruction: the store as of epoch 1, read off
-    the interval table — the oracle rebuilds snapshot 1 directly, so
-    a pass proves history∘asof == the direct build."""
-    hist = kb_history(kb_timeline(_kb_snapshots(spark, sf_dir)))
-    return kb_asof(hist, 1)
-
-
-def _q_kg_negatives(spark, sf_dir):
-    """Deterministic corrupt-tail negatives over the :refersTo edges
-    (vocabulary = linked entities)."""
-    m = extract_mentions(transcripts(spark, sf_dir))
-    refs = mention_triples(m).where(F.col("p") == ":refersTo")
-    return kg_negatives(refs, k=2, n_buckets=64)
 
 
 def _q_parse_n3_snippets(spark, sf_dir):
@@ -989,43 +920,6 @@ def _q_builtin_string(spark, sf_dir):
     return sol.select("doc_id", "cat", "w1", "src2", "fmt", "typed", "tagged")
 
 
-def _q_comention(spark, sf_dir):
-    """Entity co-mention graph: undirected weighted edges between
-    entities sharing a conversation."""
-    from rdf_n3_spark.operators.graph_algo import cooccurrence_edges
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    return cooccurrence_edges(m, group="conv_id", node="norm")
-
-
-def _q_kcore(spark, sf_dir):
-    """Fixed-round k-core peel (k=3, 3 rounds) over the co-mention
-    graph — the dense-subgraph filter for entity-graph curation."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        kcore_fixed,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    return kcore_fixed(
-        cooccurrence_edges(m, group="conv_id", node="norm"), k=3, rounds=3)
-
-
-def _q_lpa(spark, sf_dir):
-    """Deterministic synchronous label-propagation communities (2
-    rounds, weighted majority vote, min (-w, label) struct tie order)
-    over the co-mention graph — the community lens beside min-label
-    CC."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        lpa_communities,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    return lpa_communities(
-        cooccurrence_edges(m, group="conv_id", node="norm"), rounds=2)
-
-
 def _q_split_leakage(spark, sf_dir):
     """Train/eval leakage audit: verified near-dup pairs straddling
     the deterministic corpus_split boundary."""
@@ -1053,48 +947,6 @@ def _q_contrastive_incremental(spark, sf_dir):
     return contrastive_pairs_incremental(
         docs.where(F.col("doc_id") % 10 == 7),
         docs.where(F.col("doc_id") % 10 != 7))
-
-
-def _q_triangles(spark, sf_dir, max_degree=None):
-    """Per-node triangle participation over the co-mention graph,
-    degree-ordered orientation (each triangle enumerated once);
-    ``max_degree`` = the celebrity cap (exact hub-removed subgraph)."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        triangle_counts,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    return triangle_counts(cooccurrence_edges(m, group="conv_id", node="norm"),
-                           max_degree=max_degree)
-
-
-def _q_linkpred(spark, sf_dir):
-    """Common-neighbor link prediction over the co-mention graph:
-    non-adjacent entity pairs sharing ≥16 neighbors (the graph is
-    dense — lower floors emit millions of weak pairs), hub mids
-    capped at degree 400 (the triangle_counts celebrity-cap
-    contract)."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        linkpred_scores,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    return linkpred_scores(
-        cooccurrence_edges(m, group="conv_id", node="norm"),
-        max_degree=400, min_common=16)
-
-
-def _q_pagerank(spark, sf_dir):
-    """Quantized 3-iteration PageRank over the entity graph's node-ref
-    edges — the iterative-algorithm surface, exact-int so the unrolled
-    DuckDB CTE reproduces the fixpoint bit-for-bit."""
-    from rdf_n3_spark.operators.graph_algo import pagerank_quantized
-
-    edges = graph_edges(_all_triples(spark, sf_dir)).select(
-        F.col("s").alias("src"), F.col("o").alias("dst"))
-    return pagerank_quantized(edges, iterations=3)
 
 
 def _q_kmv_merged(spark, sf_dir):
@@ -1161,21 +1013,6 @@ def _q_conv_segments(spark, sf_dir):
     from rdf_n3_spark.operators.conversations import conv_segments
 
     return conv_segments(transcripts(spark, sf_dir))
-
-
-def _q_random_walks(spark, sf_dir):
-    """Deterministic hash-seeded random-walk corpus (DeepWalk prep)
-    over the entity co-mention graph: 2 walks × 3 steps per node,
-    each hop the md5-arg-min neighbor — reproducible on any cluster
-    size, which is what makes it oracle-checkable."""
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        random_walks,
-    )
-
-    m = extract_mentions(transcripts(spark, sf_dir))
-    edges = cooccurrence_edges(m, group="conv_id", node="norm")
-    return random_walks(edges, walks_per_node=2, length=3)
 
 
 def _q_kb_char_sets(spark, sf_dir):
@@ -1463,14 +1300,15 @@ def _q_graph_conclusions(spark, sf_dir):
 # operators at the tail (leaving 41 rows driver-unverified), round 4
 # pinned the window to the never-certified block (all 41 went green in
 # CORRECTNESS_r04) but its own 6 newest overflowed.  ROUND 5 completes
-# the rotation: those six formerly-overflow queries (cms_freq,
-# relation_triples, kb_void, source_weights, paragraph_neardup,
-# triangle_counts_capped) lead the window together with every new
-# round-5 operator, so after CORRECTNESS_r05 every query (144 incl.
-# that round's additions) has a driver-green row in some round's
-# artifact.  The event-analytics and multimodal families were pruned
-# afterwards (127 queries remain), which frees window slots for the
-# re-cert slate.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
+# the rotation: those formerly-overflow queries (cms_freq,
+# relation_triples, kb_void, source_weights, paragraph_neardup) lead
+# the window together with every new round-5 operator, so after
+# CORRECTNESS_r05 every query (144 incl. that round's additions) has a
+# driver-green row in some round's artifact.  The event-analytics and
+# multimodal families were pruned afterwards (127 queries), then the
+# graph-analytics and temporal-KB families (114 queries remain); each
+# pruning frees window slots for the re-cert slate, which now fills 21
+# of the 50 rows.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
 # pins the invariant.  Rotation contract for FUTURE rounds: genuinely
 # new queries enter at the head of _ROUND_NEW; _RECERTIFY is the
 # priority-ordered re-certification slate (reference §2 surface first,
@@ -1478,25 +1316,24 @@ def _q_graph_conclusions(spark, sf_dir):
 # truncated from the tail so the window stays exactly 50.
 _ROUND_NEW = [
     # round-5 additions enter here, newest first
-    "graph_walks", "kb_signatures", "conv_segments",
+    "kb_signatures", "conv_segments",
     "mention_contexts", "corpus_datasheet",
     "conv_dedup", "turn_templates",
-    "sft_pairs", "tool_chains", "tool_transitions", "graph_linkpred",
-    "contrastive_incremental", "contrastive_pairs", "graph_lpa",
+    "sft_pairs", "tool_chains", "tool_transitions",
+    "contrastive_incremental", "contrastive_pairs",
     "split_leakage",
-    "search_rrf", "search_bm25", "graph_khop",
+    "search_rrf", "search_bm25",
     "entity_enrich",
-    "kb_history", "kb_history_snapshots", "kb_asof", "kg_negatives",
     "conv_transitions",
     "conv_stats", "conv_role_protocol",
     "label_consistency",
     "token_budget_sample",
     "n3_write_nquads", "token_heavy_hitters",
     "bloom_decontaminate", "ann_ivf_multitable",
-    # the six round-4 queries that overflowed CORRECTNESS_r04's window
-    # (pytest-oracle green since r4; driver-certified this round)
+    # the round-4 queries that overflowed CORRECTNESS_r04's window
+    # (pytest-oracle green since r4; driver-certified in round 5)
     "cms_freq", "relation_triples", "kb_void", "source_weights",
-    "paragraph_neardup", "triangle_counts_capped",
+    "paragraph_neardup",
 ]
 
 #: re-certification slate, priority order (sentinel trio first —
@@ -1560,12 +1397,10 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conv_dedup": lambda s, d: conv_dedup(transcripts(s, d)),
         "conv_segments": _q_conv_segments,
         "kb_signatures": _q_pred_signatures,
-        "graph_walks": _q_random_walks,
         # floor 2: the synthetic corpus's max exact-turn repeat is 3,
         # so the default floor (5) would certify an empty result
         "turn_templates": lambda s, d: turn_templates(
             transcripts(s, d), min_count=2),
-        "graph_linkpred": _q_linkpred,
         "mention_extract": _q_mentions,
         "triple_emit": _q_mention_triples,
         "entity_agg": _q_entity_triples,
@@ -1595,10 +1430,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triples_canonical": _q_canonical_triples,
         "kb_diff": _q_kb_diff,
         "entity_enrich": _q_entity_enrich,
-        "kb_history": _q_kb_history,
-        "kb_history_snapshots": _q_kb_history_snapshots,
-        "kb_asof": _q_kb_asof,
-        "kg_negatives": _q_kg_negatives,
         "entity_link_scores": _q_link_scores,
         "entity_link_best": _q_link_best,
         "n3_parse_udf": _q_parse_n3_snippets,
@@ -1634,7 +1465,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "search_topk": _q_search,
         "search_bm25": _q_search_bm25,
         "search_rrf": _q_search_rrf,
-        "graph_khop": _q_graph_khop,
         "kmv_distinct": lambda s, d: kmv_distinct_tokens(_docs(s, d)),
         "kmv_merged": _q_kmv_merged,
         "bloom_decontaminate": _q_bloom_decontaminate,
@@ -1661,10 +1491,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # selection (no per-source corpus sort)
         "token_budget_sample": lambda s, d: token_budget_sample(
             _docs(s, d), 20000, buckets=256),
-        "graph_pagerank": _q_pagerank,
-        "comention_edges": _q_comention,
-        "graph_kcore": _q_kcore,
-        "graph_lpa": _q_lpa,
         "split_leakage": _q_split_leakage,
         "contrastive_pairs": _q_contrastive,
         "lm_score": lambda s, d: lm_score(_docs(s, d)),
@@ -1680,12 +1506,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d).select("doc_id", "text").unionByName(
                 _docs(s, d).where(F.col("doc_id") < 50).select(
                     (F.col("doc_id") + 10000).alias("doc_id"), "text"))),
-        "triangle_counts": _q_triangles,
-        # celebrity cap 400 excludes the sf-graph's ~100-node dense
-        # core (sf0.01: max degree 1552 vs median 164) — the result is
-        # exactly the hub-removed subgraph's counts
-        "triangle_counts_capped": lambda s, d: _q_triangles(
-            s, d, max_degree=400),
         "boilerplate_ngrams": lambda s, d: boilerplate_ngrams(
             _docs(s, d), n=3, min_docs=5),
         "boilerplate_share": lambda s, d: boilerplate_share(
@@ -1734,39 +1554,6 @@ _CHUNKS_SQL = """
             GROUP BY doc_id, chunk_idx
             )
 """
-
-
-def _pagerank_oracle(iters: int = 3) -> str:
-    """Unrolled-CTE mirror of graph_algo.pagerank_quantized over the
-    node-ref edge set: bigint ppb ranks, `//` = Spark's `div`, sums
-    cast back to BIGINT (DuckDB widens BIGINT sums to HUGEINT)."""
-    sql = f"""
-        {_TRIPLES},
-        edges AS (
-          SELECT DISTINCT s AS src, o AS dst FROM triples
-          WHERE regexp_matches(o, '^(ent|conv|sk):')
-        ),
-        nodes AS (
-          -- explicit DISTINCT: under the WITH RECURSIVE umbrella the
-          -- bare UNION's dedup is not applied to non-recursive CTEs
-          SELECT DISTINCT node FROM (
-            SELECT src AS node FROM edges
-            UNION ALL SELECT dst AS node FROM edges)
-        ),
-        outd AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src),
-        r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank FROM nodes)"""
-    for i in range(1, iters + 1):
-        sql += f""",
-        c{i} AS (
-          SELECT e.dst AS node, CAST(sum(r.rank // o.d) AS BIGINT) AS contrib
-          FROM edges e JOIN r{i - 1} r ON r.node = e.src
-                       JOIN outd o ON o.src = e.src
-          GROUP BY e.dst),
-        r{i} AS (
-          SELECT n.node,
-                 CAST(150000000 + (85 * coalesce(c.contrib, 0)) // 100 AS BIGINT) AS rank
-          FROM nodes n LEFT JOIN c{i} c USING (node))"""
-    return sql + f"\n        SELECT node AS node_id, rank AS rank_ppb FROM r{iters}"
 
 
 # mirrors operators.sketch: bottom-k md5 per source, estimate = ONE
@@ -1953,93 +1740,6 @@ _KMV_SQL = """
 """
 
 
-def _walks_oracle(walks_per_node: int = 2, length: int = 3) -> str:
-    """Mirror of graph_algo.random_walks over the co-mention graph:
-    the L steps unroll to L chained arg-min joins (min_by over the
-    same md5(start|walk_id|step|dst) draw), sym = the UNION-deduped
-    symmetrization of the canonical u<v edge set."""
-    steps, prev = [], "s0"
-    for i in range(1, int(length) + 1):
-        steps.append(f"""
-            s{i} AS (
-              SELECT {prev}.start, {prev}.walk_id, {i} AS step,
-                     min_by(sym.dst,
-                            md5({prev}.start || '|'
-                                || CAST({prev}.walk_id AS VARCHAR)
-                                || '|{i}|' || sym.dst)) AS node
-              FROM {prev} JOIN sym ON {prev}.node = sym.src
-              GROUP BY {prev}.start, {prev}.walk_id)""")
-        prev = f"s{i}"
-    union = "\n              UNION ALL ".join(
-        f"SELECT * FROM s{i}" for i in range(int(length) + 1))
-    return f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            eg AS (SELECT a.n AS u, b.n AS v
-                   FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                   GROUP BY a.n, b.n),
-            sym AS (SELECT u AS src, v AS dst FROM eg
-                    UNION
-                    SELECT v AS src, u AS dst FROM eg),
-            w0 AS (SELECT DISTINCT src AS start FROM sym),
-            s0 AS (SELECT start,
-                          unnest(generate_series(0, {int(walks_per_node) - 1}))
-                            AS walk_id,
-                          0 AS step, start AS node
-                   FROM w0),{",".join(steps)}
-            SELECT start, CAST(walk_id AS INT) AS walk_id,
-                   CAST(step AS INT) AS step, node
-            FROM ({union})
-        """
-
-
-def _triangles_oracle(cap: int | None = None) -> str:
-    """Mirror of graph_algo.triangle_counts: degree-ordered orientation
-    → wedge join → closure, corners exploded.  ``cap`` mirrors the
-    celebrity max_degree knob — nodes above it are removed before
-    orientation and degrees are recomputed on the surviving subgraph,
-    exactly like the Spark operator."""
-    capped = "" if cap is None else f""",
-            keep AS (SELECT n FROM degs WHERE d <= {cap}),
-            eg_capped AS (
-              SELECT u, v FROM eg
-              WHERE u IN (SELECT n FROM keep) AND v IN (SELECT n FROM keep)),
-            degs_capped AS (
-              SELECT n, CAST(count(*) AS BIGINT) AS d
-              FROM (SELECT u AS n FROM eg_capped
-                    UNION ALL SELECT v AS n FROM eg_capped)
-              GROUP BY n)"""
-    eg, degs = ("eg_capped", "degs_capped") if cap is not None else ("eg", "degs")
-    return f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            eg AS (SELECT a.n AS u, b.n AS v
-                   FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                   GROUP BY a.n, b.n),
-            degs AS (
-              SELECT n, CAST(count(*) AS BIGINT) AS d
-              FROM (SELECT u AS n FROM eg UNION ALL SELECT v AS n FROM eg)
-              GROUP BY n){capped},
-            oriented AS (
-              SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
-                          THEN e.u ELSE e.v END AS s,
-                     CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
-                          THEN e.v ELSE e.u END AS t
-              FROM {eg} e JOIN {degs} du ON du.n = e.u
-                          JOIN {degs} dv ON dv.n = e.v),
-            tri AS (
-              SELECT e1.s AS a, e1.t AS b, e2.t AS c
-              FROM oriented e1
-              JOIN oriented e2 ON e2.s = e1.t
-              JOIN oriented e3 ON e3.s = e1.s AND e3.t = e2.t)
-            SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-            FROM (SELECT a AS node FROM tri
-                  UNION ALL SELECT b AS node FROM tri
-                  UNION ALL SELECT c AS node FROM tri)
-            GROUP BY node
-        """
-
-
 def oracle_sql() -> dict[str, str]:
     d = {
         "transcripts_build": f"""
@@ -2118,12 +1818,14 @@ def oracle_sql() -> dict[str, str]:
               AND nx_idx = turn_idx + 1
         """,
         # mirrors conversations.conv_dedup: hash-of-hashes — md5 over
-        # the ordered fixed-width per-turn md5("role:text") sequence
+        # the ordered fixed-width per-turn md5("role:text") sequence;
+        # concat_ws skips a NULL text like Spark's, so the turn stays
+        # in the fingerprint
         "conv_dedup": f"""
             WITH {_T},
             fp AS (
               SELECT conv_id,
-                     md5(string_agg(md5(role || ':' || text), ''
+                     md5(string_agg(md5(concat_ws(':', role, text)), ''
                                     ORDER BY turn_idx)) AS fp
               FROM transcripts GROUP BY conv_id
             )
@@ -2177,8 +1879,6 @@ def oracle_sql() -> dict[str, str]:
                            ROWS UNBOUNDED PRECEDING) - 1 AS INT) AS seg_idx
             FROM sc
         """,
-        # mirrors graph_algo.random_walks (unrolled md5-arg-min hops)
-        "graph_walks": _walks_oracle(walks_per_node=2, length=3),
         # mirrors conversations.turn_templates: one (role, text)
         # aggregate with the repeat floor
         "turn_templates": f"""
@@ -2756,85 +2456,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT 'ent:' || norm, ':retailPriceCents',
                  CAST(CAST(round(p_retailprice * 100) AS BIGINT) AS VARCHAR)
             FROM pe
-        """,
-        "kb_history": f"""
-            {_MENTIONS},
-            m0 AS (SELECT * FROM mentions WHERE turn_idx BETWEEN 0 AND 3),
-            m1 AS (SELECT * FROM mentions WHERE turn_idx BETWEEN 1 AND 4),
-            m2 AS (SELECT * FROM mentions WHERE turn_idx BETWEEN 2 AND 5),
-            t0 AS ({_triples_over('m0')}),
-            t1 AS ({_triples_over('m1')}),
-            t2 AS ({_triples_over('m2')}),
-            diffs AS (
-              SELECT 0 AS epoch, s, p, o, '+' AS change
-              FROM (SELECT DISTINCT s, p, o FROM t0)
-              UNION ALL SELECT 1, s, p, o, '+' FROM
-                (SELECT s, p, o FROM t1 EXCEPT SELECT s, p, o FROM t0)
-              UNION ALL SELECT 1, s, p, o, '-' FROM
-                (SELECT s, p, o FROM t0 EXCEPT SELECT s, p, o FROM t1)
-              UNION ALL SELECT 2, s, p, o, '+' FROM
-                (SELECT s, p, o FROM t2 EXCEPT SELECT s, p, o FROM t1)
-              UNION ALL SELECT 2, s, p, o, '-' FROM
-                (SELECT s, p, o FROM t1 EXCEPT SELECT s, p, o FROM t2)
-            ),
-            hist AS (
-              SELECT s, p, o, change, epoch,
-                     LEAD(epoch) OVER (PARTITION BY s, p, o
-                                       ORDER BY epoch) AS nxt
-              FROM diffs
-            )
-            SELECT s, p, o, epoch AS valid_from,
-                   COALESCE(nxt, -1) AS valid_to
-            FROM hist WHERE change = '+'
-        """,
-        # kb_history_snapshots: same oracle as kb_history (the one-
-        # exchange fold must produce identical intervals) — aliased
-        # after the literal below
-        "kb_asof": f"""
-            -- independent formulation: asof(1) over the folded history
-            -- must equal snapshot 1 built directly
-            {_MENTIONS},
-            m1 AS (SELECT * FROM mentions WHERE turn_idx BETWEEN 1 AND 4),
-            t1 AS ({_triples_over('m1')})
-            SELECT DISTINCT s, p, o FROM t1
-        """,
-        "kg_negatives": f"""
-            {_MENTIONS},
-            trips AS ({_triples_over('mentions')}),
-            pos AS (SELECT DISTINCT s, p, o FROM trips
-                    WHERE p = ':refersTo'),
-            vocab AS (SELECT DISTINCT o AS cand FROM pos),
-            vb AS (SELECT cand,
-                     ('0x' || substr(md5('neg-v1|vb|' || cand), 1, 8))::BIGINT
-                       % 64 AS b
-                   FROM vocab),
-            ranked AS (SELECT cand, b,
-                         ROW_NUMBER() OVER (PARTITION BY b ORDER BY cand) - 1
-                           AS r
-                       FROM vb),
-            sizes AS (SELECT b, COUNT(*) AS sz FROM vb GROUP BY b),
-            dsz AS (SELECT b, sz,
-                      ROW_NUMBER() OVER (ORDER BY b) - 1 AS db,
-                      COUNT(*) OVER () AS nb
-                    FROM sizes),
-            draws AS (SELECT s, p, o, neg_rank
-                      FROM pos CROSS JOIN
-                        (SELECT unnest(range(2)) AS neg_rank)),
-            d2 AS (SELECT s, p, o, neg_rank,
-                     ('0x' || substr(md5('neg-v1|db|' || s || '|' || p ||
-                        '|' || o || '|' || CAST(neg_rank AS VARCHAR)),
-                        1, 8))::BIGINT % (SELECT MAX(nb) FROM dsz) AS db
-                   FROM draws),
-            d3 AS (SELECT d2.s, d2.p, d2.o, d2.neg_rank, z.b,
-                     ('0x' || substr(md5('neg-v1|r|' || d2.s || '|' || d2.p ||
-                        '|' || d2.o || '|' || CAST(d2.neg_rank AS VARCHAR)),
-                        1, 8))::BIGINT % z.sz AS r
-                   FROM d2 JOIN dsz z USING (db))
-            SELECT d3.s, d3.p, rk.cand AS o_neg, d3.neg_rank
-            FROM d3 JOIN ranked rk ON rk.b = d3.b AND rk.r = d3.r
-            WHERE NOT EXISTS (SELECT 1 FROM pos
-                              WHERE pos.s = d3.s AND pos.p = d3.p
-                                AND pos.o = rk.cand)
         """,
         "entity_link_scores": f"""
             {_CANON},
@@ -3514,37 +3135,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
                    CAST(row_number() OVER (ORDER BY n DESC, v) AS INT) AS rank
             FROM cnt QUALIFY rank <= 20
         """,
-        "graph_pagerank": _pagerank_oracle(3),
-        # mirrors graph_algo.cooccurrence_edges over (conv_id, norm)
-        "comention_edges": f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions)
-            SELECT a.n AS u, b.n AS v, CAST(count(*) AS BIGINT) AS weight
-            FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-            GROUP BY a.n, b.n
-        """,
-        # mirrors graph_algo.khop_neighbors (k=2) over the same
-        # co-mention edge set: unrolled BFS levels, min-hop grouping
-        # (the operator's level-order anti-join realizes the same min)
-        "graph_khop": f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            e AS (SELECT a.n AS u, b.n AS v
-                  FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                  GROUP BY a.n, b.n),
-            sym AS (SELECT u AS src, v AS dst FROM e
-                    UNION ALL SELECT v AS src, u AS dst FROM e),
-            seeds(seed) AS (VALUES ('part_hub'), ('supp_1')),
-            d0 AS (SELECT seed, seed AS node, 0 AS dist FROM seeds),
-            d1 AS (SELECT DISTINCT seed, dst AS node, 1 AS dist
-                   FROM d0 JOIN sym ON d0.node = sym.src),
-            d2 AS (SELECT DISTINCT d1.seed, dst AS node, 2 AS dist
-                   FROM d1 JOIN sym ON d1.node = sym.src),
-            alln AS (SELECT * FROM d0 UNION ALL SELECT * FROM d1
-                     UNION ALL SELECT * FROM d2)
-            SELECT seed, node, CAST(min(dist) AS INT) AS dist
-            FROM alln GROUP BY seed, node
-        """,
         # mirrors curation.paragraph_dedup over the same self-union
         # (docs < 50 duplicated at +10000 ids): corpus-first occurrence
         # of each paragraph hash survives, every other copy is_dup=1
@@ -3631,97 +3221,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             SELECT doc_id, CAST(dim AS BIGINT) AS dim,
                    CAST(sum(v) AS BIGINT) AS value
             FROM keyed GROUP BY doc_id, dim HAVING sum(v) <> 0
-        """,
-        # mirrors graph_algo.kcore_fixed (k=3, rounds=3): unrolled
-        # peel — survivors = nodes of degree >= 3 three rounds running
-        "graph_kcore": f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            eg AS (SELECT a.n AS u, b.n AS v
-                   FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                   GROUP BY a.n, b.n),
-            sym0 AS (SELECT u, v FROM eg UNION SELECT v AS u, u AS v FROM eg),
-            alln AS (SELECT DISTINCT u AS node FROM sym0),
-            k1 AS (SELECT u FROM sym0 GROUP BY u HAVING count(*) >= 3),
-            sym1 AS (SELECT s.u, s.v FROM sym0 s
-                     JOIN k1 a ON s.u = a.u JOIN k1 b ON s.v = b.u),
-            k2 AS (SELECT u FROM sym1 GROUP BY u HAVING count(*) >= 3),
-            sym2 AS (SELECT s.u, s.v FROM sym1 s
-                     JOIN k2 a ON s.u = a.u JOIN k2 b ON s.v = b.u),
-            k3 AS (SELECT u FROM sym2 GROUP BY u HAVING count(*) >= 3),
-            sym3 AS (SELECT s.u, s.v FROM sym2 s
-                     JOIN k3 a ON s.u = a.u JOIN k3 b ON s.v = b.u),
-            surv AS (SELECT DISTINCT u FROM sym3)
-            SELECT alln.node,
-                   CAST(CASE WHEN surv.u IS NOT NULL THEN 1 ELSE 0 END AS INT)
-                     AS in_core
-            FROM alln LEFT JOIN surv ON alln.node = surv.u
-        """,
-        # mirrors graph_algo.triangle_counts: degree-ordered
-        # orientation → wedge join → closure; explode corners
-        "triangle_counts": _triangles_oracle(),
-        "triangle_counts_capped": _triangles_oracle(cap=400),
-        # mirrors graph_algo.linkpred_scores over the co-mention
-        # graph: wedges through capped mids (endpoint degrees stay
-        # full-graph), min_common=16 (the co-mention graph is dense:
-        # lower floors emit millions of weak pairs), linked pairs cut
-        "graph_linkpred": f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            eg AS (SELECT a.n AS u, b.n AS v
-                   FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                   GROUP BY a.n, b.n),
-            adj AS (SELECT u AS n, v AS nbr FROM eg
-                    UNION ALL SELECT v AS n, u AS nbr FROM eg),
-            degs AS (SELECT n, CAST(count(*) AS BIGINT) AS d
-                     FROM adj GROUP BY n),
-            mids AS (SELECT adj.n, adj.nbr FROM adj
-                     JOIN degs ON degs.n = adj.n WHERE degs.d <= 400),
-            common AS (
-              SELECT a.nbr AS u, b.nbr AS v,
-                     CAST(count(*) AS BIGINT) AS n_common
-              FROM mids a JOIN mids b ON a.n = b.n AND a.nbr < b.nbr
-              GROUP BY a.nbr, b.nbr
-              HAVING count(*) >= 16),
-            unlinked AS (
-              SELECT c.u, c.v, c.n_common FROM common c
-              WHERE NOT EXISTS (SELECT 1 FROM eg
-                                WHERE eg.u = c.u AND eg.v = c.v))
-            SELECT ul.u, ul.v, ul.n_common,
-                   du.d AS deg_u, dv.d AS deg_v
-            FROM unlinked ul
-            JOIN degs du ON du.n = ul.u
-            JOIN degs dv ON dv.n = ul.v
-        """,
-        # mirrors graph_algo.lpa_communities (rounds=2) over the same
-        # co-mention edge set: unrolled synchronous rounds — weighted
-        # vote sum per (node, label), argmax by (w DESC, lab ASC) =
-        # the operator's min over the (-w, lab) struct
-        "graph_lpa": f"""
-            {_MENTIONS},
-            mn AS (SELECT DISTINCT conv_id AS g, norm AS n FROM mentions),
-            eg AS (SELECT a.n AS u, b.n AS v,
-                          CAST(count(*) AS BIGINT) AS w
-                   FROM mn a JOIN mn b ON a.g = b.g AND a.n < b.n
-                   GROUP BY a.n, b.n),
-            sym AS (SELECT u AS src, v AS dst, w FROM eg
-                    UNION ALL SELECT v AS src, u AS dst, w FROM eg),
-            l0 AS (SELECT DISTINCT src AS node, src AS lab FROM sym),
-            v1 AS (SELECT s.src AS node, l.lab, sum(s.w) AS w
-                   FROM sym s JOIN l0 l ON s.dst = l.node
-                   GROUP BY s.src, l.lab),
-            l1 AS (SELECT node, lab FROM (
-                     SELECT node, lab, row_number() OVER (
-                       PARTITION BY node ORDER BY w DESC, lab ASC) AS rn
-                     FROM v1) WHERE rn = 1),
-            v2 AS (SELECT s.src AS node, l.lab, sum(s.w) AS w
-                   FROM sym s JOIN l1 l ON s.dst = l.node
-                   GROUP BY s.src, l.lab),
-            l2 AS (SELECT node, lab FROM (
-                     SELECT node, lab, row_number() OVER (
-                       PARTITION BY node ORDER BY w DESC, lab ASC) AS rn
-                     FROM v2) WHERE rn = 1)
-            SELECT node, lab AS community FROM l2
         """,
         # mirrors dedup.contrastive_pairs: the same banded candidate
         # set, labeled by exact integer-arithmetic Jaccard bands
@@ -4242,5 +3741,4 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             FROM base WHERE rn = 1
         """,
     }
-    d["kb_history_snapshots"] = d["kb_history"]
     return d

@@ -103,11 +103,32 @@ def main() -> None:
     stat = os.environ.get("BENCH_STAT", "median")
 
     from rdf_n3_spark.session import get_spark
+    from rdf_n3_spark.functions.text import keyword_topk, search_bm25
     from rdf_n3_spark.operators.canon import canonical_map
+    from rdf_n3_spark.operators.conversations import (
+        conv_dedup,
+        conv_segments,
+        conversation_stats,
+        sft_pairs,
+        turn_transitions,
+    )
+    from rdf_n3_spark.operators.curation import split_leakage
     from rdf_n3_spark.operators.dedup import minhash_neardup_pairs
+    from rdf_n3_spark.operators.kb_stats import (
+        characteristic_sets,
+        predicate_signatures,
+    )
     from rdf_n3_spark.operators.mentions import extract_mentions
-    from rdf_n3_spark.operators.similarity import ivf_topk
+    from rdf_n3_spark.operators.relations import relation_candidates
+    from rdf_n3_spark.operators.similarity import ivf_topk, ivf_topk_tables
+    from rdf_n3_spark.operators.sketch import (
+        bloom_decontaminate,
+        kmv_distinct_tokens,
+        token_heavy_hitters,
+    )
+    from rdf_n3_spark.operators.substrings import dup_spans
     from rdf_n3_spark.operators.triples import entity_triples, mention_triples
+    from rdf_n3_spark.sources.n3_sink import serialize_nquads
     from rdf_n3_spark.sources.n3_source import parse_documents
 
     spark = get_spark(
@@ -132,8 +153,7 @@ def main() -> None:
         return df.select(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n"))
 
     m = extract_mentions(transcripts_df)
-    kg = sink(mention_triples(m).unionByName(entity_triples(m)))
-
+    kb = mention_triples(m).unionByName(entity_triples(m))
     docs = (
         transcripts_df.where(F.col("turn_idx") == 0)
         .select(
@@ -141,285 +161,67 @@ def main() -> None:
             F.regexp_extract("text", r"(:\S+ :suppliedBy :\S+ \.)$", 1).alias("n3_text"),
         )
     )
-    parse = sink(parse_documents(docs).where(F.col("ok")).select("doc_id", "s", "p", "o"))
-    canon = sink(canonical_map(extract_mentions(transcripts_df)))
-
-    # flat-export path: parse + line-per-statement N-Quads serialization
-    # (the zero-shuffle sink a 100 TB export job writes); the delta over
-    # n3_parse_udf is the serialization cost itself
-    from rdf_n3_spark.sources.n3_sink import serialize_nquads
-
-    nquads = sink(serialize_nquads(
-        parse_documents(docs).where(F.col("ok")).select("s", "p", "o")))
-
+    parsed = parse_documents(docs).where(F.col("ok"))
     # training-data operators over the sf documents/embeddings tables
     # (size-independent of MULT; evidence rows, not the headline)
     docs_tbl = spark.read.parquet(f"{sf_dir}/documents.parquet")
     embs_tbl = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    minhash = sink(minhash_neardup_pairs(docs_tbl))
-    ann = sink(ivf_topk(embs_tbl, hamming=1).drop("cos"))
-
-    # one representative per round-3 family (VERDICT r3 item 6), so
-    # their regressions are bench-visible round-over-round:
-    # substrings / text-search / graph-analytics
-    from rdf_n3_spark.operators.graph_algo import (
-        cooccurrence_edges,
-        triangle_counts,
-    )
-    from rdf_n3_spark.functions.text import keyword_topk
-    from rdf_n3_spark.operators.substrings import dup_spans
-    from rdf_n3_spark.sources.transcripts import transcripts as mk_transcripts
-
-    substr = sink(dup_spans(docs_tbl, k=8))
-    kw = sink(keyword_topk(docs_tbl))
-    # weight ≥ 3: the curation noise floor (entities co-occurring in
-    # <3 conversations are incidental).  The UNFILTERED sf0.1 hub graph
-    # is a ~1000-node quasi-clique whose exact triangle OUTPUT costs
-    # ~190 s regardless of algorithm (measured; BENCH/BASELINE.md) —
-    # an output-size fact, not a plan defect; the operator's
-    # max_degree celebrity cap is the documented mitigation.
-    m1 = extract_mentions(mk_transcripts(spark, sf_dir, mult=1))
-    tri = sink(triangle_counts(
-        cooccurrence_edges(m1, group="conv_id", node="norm")
-        .where(F.col("weight") >= 3)))
-
-    # one representative per round-4/5 family (VERDICT r4 item 6):
-    # relation mining + KB profile (both scan-heavy aggregations over
-    # the REPLICATED corpus — they must scale with the headline), the
-    # mergeable-sketch family, and the multi-table ANN index
-    from rdf_n3_spark.operators.kb_stats import characteristic_sets
-    from rdf_n3_spark.operators.relations import relation_candidates
-    from rdf_n3_spark.operators.sketch import (
-        bloom_decontaminate,
-        kmv_distinct_tokens,
-        token_heavy_hitters,
-    )
-    from rdf_n3_spark.operators.similarity import ivf_topk_tables
-
-    # conversation-grain profile over the REPLICATED corpus (scales
-    # with the headline)
-    from rdf_n3_spark.operators.conversations import (
-        conv_dedup,
-        conversation_stats,
-        sft_pairs,
-        turn_transitions,
-    )
-
-    conv = sink(conversation_stats(transcripts_df).drop(
-        "first_ts", "last_ts"))
-    trans = sink(turn_transitions(transcripts_df))
-    # round-5 transcripts-grain additions, both over the REPLICATED
-    # corpus (they must scale with the headline): the SFT pair
-    # constructor (one lead window) and the conversation-grain exact
-    # dedup (collect_list fold + conv-grain window)
-    sft = sink(sft_pairs(transcripts_df))
-    cdedup = sink(conv_dedup(transcripts_df))
-    # topic segmentation over the REPLICATED corpus (one conv_id
-    # exchange + in-row set algebra — must track the headline)
-    from rdf_n3_spark.operators.conversations import conv_segments
-
-    segs = sink(conv_segments(transcripts_df))
-
-    # temporal-KB family: fold three sliding KB builds over the
-    # REPLICATED corpus into validity intervals (diff + window), and
-    # the corrupt-tail negative draw over the :refersTo edges
-    from rdf_n3_spark.operators.triples import (
-        kb_history_snapshots,
-        kg_negatives,
-    )
-
-    # evidence rows over the UNREPLICATED corpus (mult-independent,
-    # like triangle_counts/pagerank): the operators' real input
-    # contract is MATERIALIZED stores (a nightly rebuild folds parquet
-    # snapshots; negatives draw from a committed triple table), so the
-    # snapshot builds are checkpointed once in setup — otherwise Spark
-    # recomputes each snapshot subtree per consumer (the negative draw
-    # scans its input four times) and the row times corpus
-    # re-tokenization, not the operator.  The fold itself is
-    # data-sized by nature (one (s,p,o) exchange over ALL snapshots),
-    # measured at mult=10 in BENCH/BASELINE.md.
-    t1 = mk_transcripts(spark, sf_dir, mult=1)
-
-    def _kb_slice(lo, hi):
-        mm = extract_mentions(t1.where(F.col("turn_idx").between(lo, hi)))
-        return (mention_triples(mm).unionByName(entity_triples(mm))
-                .localCheckpoint())
-
-    snaps = [(0, _kb_slice(0, 3)), (1, _kb_slice(1, 4)),
-             (2, _kb_slice(2, 5))]
-    # the one-exchange snapshot fold (kb_history_snapshots) IS the
-    # rebuild-pipeline scale path; the diff-stream pair is equality-
-    # pinned to it in tests and adds nothing bench-wise but shuffles
-    hist = sink(
-        kb_history_snapshots(snaps)
-        .select("s", "p", "o", "valid_from",
-                F.coalesce("valid_to", F.lit(-1)).alias("valid_to")))
-    refs = (mention_triples(m1).where(F.col("p") == ":refersTo")
-            .localCheckpoint())
-    negs = sink(kg_negatives(refs, k=2))
-
-    # round-5 closing additions: BM25 retrieval (same corpus-derived
-    # query set as the driver row) and the seed-set k-hop harvest —
-    # one row per new family
-    from rdf_n3_spark.functions.text import search_bm25
-    from rdf_n3_spark.operators.graph_algo import khop_neighbors
-
+    # BM25 retrieval over the same corpus-derived query set as the
+    # driver row
     bm25_q = docs_tbl.where(F.col("doc_id") < 20).select(
         F.col("doc_id").alias("query_id"),
         F.concat_ws(
             " ", F.slice(F.split(F.lower("text"), " "), 1, 3)).alias("qtext"))
-    bm25 = sink(search_bm25(docs_tbl, bm25_q))
-    # the harvest's input contract is a MATERIALIZED edge table (same
-    # convention as kb_history/kg_negatives) — without the checkpoint
-    # every hop's eager localCheckpoint re-derives the co-mention
-    # groupBy self-join and the row times graph construction instead
-    khop_edges = (cooccurrence_edges(m1, group="conv_id", node="norm")
-                  .localCheckpoint())
-    khop_seeds = spark.createDataFrame(
-        [("part_hub",), ("supp_1",)], "seed string")
 
-    # last round-5 family pair: LPA communities over the same
-    # materialized edge table, and the split-leakage audit (the
-    # minhash pair set + narrow split map — its delta vs the
-    # dedup_minhash row IS the audit's marginal cost)
-    from rdf_n3_spark.operators.curation import split_leakage
-    from rdf_n3_spark.operators.graph_algo import lpa_communities
-
-    def timed_lpa() -> tuple[float, float]:
-        # per-round eager localCheckpoint (like PageRank/khop): each
-        # timed run must re-invoke the operator itself
-        def run():
-            t0 = time.perf_counter()
-            sink(lpa_communities(khop_edges, rounds=2)).collect()
-            return time.perf_counter() - t0
-        run()  # warm
-        times = [run() for _ in range(runs)]
-        agg = min if stat == "min" else statistics.median
-        return round(agg(times), 4), round(min(times), 4)
-
-    leak = sink(split_leakage(docs_tbl))
-
-    # link-prediction evidence row (mult-independent like the other
-    # graph rows), at the SAME weight ≥ 3 curation noise floor as the
-    # triangle row: the unfiltered sf0.1 hub graph's wedge set through
-    # even capped mids costs ~130 s — an input-density fact (incidental
-    # co-occurrence edges), not a plan defect
-    from rdf_n3_spark.operators.graph_algo import linkpred_scores
-
-    linkpred_edges = (khop_edges.where(F.col("weight") >= 3)
-                      .localCheckpoint())
-    linkpred = sink(linkpred_scores(linkpred_edges, max_degree=400,
-                                    min_common=16))
-
-    def timed_khop() -> tuple[float, float]:
-        # khop_neighbors checkpoints per hop eagerly (like PageRank),
-        # so each timed run must re-invoke the operator itself
-        def run():
-            t0 = time.perf_counter()
-            sink(khop_neighbors(khop_edges, khop_seeds, k=2)).collect()
-            return time.perf_counter() - t0
-        run()  # warm
-        times = [run() for _ in range(runs)]
-        agg = min if stat == "min" else statistics.median
-        return round(agg(times), 4), round(min(times), 4)
-
-    rel = sink(relation_candidates(transcripts_df))
-    cs = sink(characteristic_sets(
-        mention_triples(m).unionByName(entity_triples(m))))
-    # predicate domain/range signatures over the same replicated KB
-    from rdf_n3_spark.operators.kb_stats import predicate_signatures
-
-    sigs = sink(predicate_signatures(
-        mention_triples(m).unionByName(entity_triples(m))))
-    kmv = sink(kmv_distinct_tokens(docs_tbl))
-    ann_mt = sink(ivf_topk_tables(embs_tbl).drop("cos"))
-    bloom = sink(bloom_decontaminate(
-        docs_tbl.where(F.col("doc_id") % 20 != 7),
-        docs_tbl.where(F.col("doc_id") % 20 == 7)))
-    hh = sink(token_heavy_hitters(docs_tbl))
-
-    # iterative-path evidence row: PageRank over the UNREPLICATED
-    # sf-dir entity graph (mult-independent like the other evidence
-    # rows). pagerank_quantized materializes per-iteration checkpoints
-    # eagerly, so each timed run re-invokes the whole function — the
-    # plan-rewrap trick would only re-scan the final checkpoint.
-    from rdf_n3_spark.operators.graph_algo import pagerank_quantized
-
-    edges = (
-        mention_triples(m1).unionByName(entity_triples(m1))
-        .where(F.col("o").rlike("^(ent|conv|sk):"))
-        .select(F.col("s").alias("src"), F.col("o").alias("dst"))
-        .localCheckpoint()
-    )
-
-    def timed_pagerank() -> tuple[float, float]:
-        def run():
-            t0 = time.perf_counter()
-            sink(pagerank_quantized(edges, iterations=3)).collect()
-            return time.perf_counter() - t0
-        run()  # warm
-        times = [run() for _ in range(runs)]
-        agg = min if stat == "min" else statistics.median
-        return round(agg(times), 4), round(min(times), 4)
-
-    # random-walk corpus over the UNREPLICATED co-mention graph
-    # (mult-independent iterative evidence row, like pagerank/khop):
-    # the operator checkpoints its neighbor table eagerly, so each
-    # timed run re-invokes the whole function
-    from rdf_n3_spark.operators.graph_algo import random_walks
-
-    walk_edges = (cooccurrence_edges(m1, group="conv_id", node="norm")
-                  .localCheckpoint())
-
-    def timed_walks() -> tuple[float, float]:
-        def run():
-            t0 = time.perf_counter()
-            sink(random_walks(walk_edges, walks_per_node=2,
-                              length=3)).collect()
-            return time.perf_counter() - t0
-        run()  # warm
-        times = [run() for _ in range(runs)]
-        agg = min if stat == "min" else statistics.median
-        return round(agg(times), 4), round(min(times), 4)
-
+    # the headline, one representative per operator family (so its
+    # regressions are bench-visible round-over-round), and the
+    # transcripts-grain rows over the REPLICATED corpus, which must
+    # scale with the headline
+    plans = {
+        "kg_pipeline": sink(kb),
+        "n3_parse_udf": sink(parsed.select("doc_id", "s", "p", "o")),
+        # flat-export path: parse + line-per-statement N-Quads
+        # serialization (the zero-shuffle sink a 100 TB export job
+        # writes); the delta over n3_parse_udf is the serialization
+        # cost itself
+        "n3_write_nquads": sink(serialize_nquads(parsed.select("s", "p", "o"))),
+        "entity_canon": sink(canonical_map(extract_mentions(transcripts_df))),
+        "dedup_minhash": sink(minhash_neardup_pairs(docs_tbl)),
+        "ann_ivf_multiprobe": sink(ivf_topk(embs_tbl, hamming=1).drop("cos")),
+        "substring_spans": sink(dup_spans(docs_tbl, k=8)),
+        "keyword_topk": sink(keyword_topk(docs_tbl)),
+        "relation_candidates": sink(relation_candidates(transcripts_df)),
+        "kb_char_sets": sink(characteristic_sets(kb)),
+        "kmv_distinct": sink(kmv_distinct_tokens(docs_tbl)),
+        "ann_ivf_multitable": sink(ivf_topk_tables(embs_tbl).drop("cos")),
+        "bloom_decontaminate": sink(bloom_decontaminate(
+            docs_tbl.where(F.col("doc_id") % 20 != 7),
+            docs_tbl.where(F.col("doc_id") % 20 == 7))),
+        "token_heavy_hitters": sink(token_heavy_hitters(docs_tbl)),
+        "conv_stats": sink(conversation_stats(transcripts_df).drop(
+            "first_ts", "last_ts")),
+        "conv_transitions": sink(turn_transitions(transcripts_df)),
+        "search_bm25": sink(search_bm25(docs_tbl, bm25_q)),
+        # the minhash pair set + narrow split map — its delta vs the
+        # dedup_minhash row IS the audit's marginal cost
+        "split_leakage": sink(split_leakage(docs_tbl)),
+        # round-5 transcripts-grain additions over the REPLICATED
+        # corpus: the SFT pair constructor (one lead window), the
+        # conversation-grain exact dedup (collect_list fold +
+        # conv-grain window) and topic segmentation (one conv_id
+        # exchange + in-row set algebra)
+        "sft_pairs": sink(sft_pairs(transcripts_df)),
+        "conv_dedup": sink(conv_dedup(transcripts_df)),
+        "conv_segments": sink(conv_segments(transcripts_df)),
+        # predicate domain/range signatures over the replicated KB
+        "kb_signatures": sink(predicate_signatures(kb)),
+    }
     # BENCH_QUERIES: comma-separated subset to time (default: all).
     # bench_scaling.py restricts to the headline trio so the scaling
     # rounds don't pay for every evidence row.
-    thunks = {
-        "kg_pipeline": lambda: timed_runs(kg, runs, stat),
-        "n3_parse_udf": lambda: timed_runs(parse, runs, stat),
-        "n3_write_nquads": lambda: timed_runs(nquads, runs, stat),
-        "entity_canon": lambda: timed_runs(canon, runs, stat),
-        "dedup_minhash": lambda: timed_runs(minhash, runs, stat),
-        "ann_ivf_multiprobe": lambda: timed_runs(ann, runs, stat),
-        "graph_pagerank": timed_pagerank,
-        "substring_spans": lambda: timed_runs(substr, runs, stat),
-        "keyword_topk": lambda: timed_runs(kw, runs, stat),
-        "triangle_counts": lambda: timed_runs(tri, runs, stat),
-        "relation_candidates": lambda: timed_runs(rel, runs, stat),
-        "kb_char_sets": lambda: timed_runs(cs, runs, stat),
-        "kmv_distinct": lambda: timed_runs(kmv, runs, stat),
-        "ann_ivf_multitable": lambda: timed_runs(ann_mt, runs, stat),
-        "bloom_decontaminate": lambda: timed_runs(bloom, runs, stat),
-        "token_heavy_hitters": lambda: timed_runs(hh, runs, stat),
-        "conv_stats": lambda: timed_runs(conv, runs, stat),
-        "conv_transitions": lambda: timed_runs(trans, runs, stat),
-        "kb_history": lambda: timed_runs(hist, runs, stat),
-        "kg_negatives": lambda: timed_runs(negs, runs, stat),
-        "search_bm25": lambda: timed_runs(bm25, runs, stat),
-        "graph_khop": timed_khop,
-        "graph_lpa": timed_lpa,
-        "split_leakage": lambda: timed_runs(leak, runs, stat),
-        "sft_pairs": lambda: timed_runs(sft, runs, stat),
-        "conv_dedup": lambda: timed_runs(cdedup, runs, stat),
-        "graph_linkpred": lambda: timed_runs(linkpred, runs, stat),
-        "conv_segments": lambda: timed_runs(segs, runs, stat),
-        "kb_signatures": lambda: timed_runs(sigs, runs, stat),
-        "graph_walks": timed_walks,
-    }
     subset = os.environ.get("BENCH_QUERIES", "")
-    names = [n.strip() for n in subset.split(",") if n.strip()] or list(thunks)
-    timed = {n: thunks[n]() for n in names}
+    names = [n.strip() for n in subset.split(",") if n.strip()] or list(plans)
+    timed = {n: timed_runs(plans[n], runs, stat) for n in names}
     per_query = {n: v[0] for n, v in timed.items()}
     per_query_min = {n: v[1] for n, v in timed.items()}
     total = sum(per_query.values())

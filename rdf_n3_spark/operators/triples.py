@@ -16,7 +16,7 @@ zero Python in the hot path, fully codegen'd.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TRIPLE_COLS = ("s", "p", "o")
@@ -169,214 +169,4 @@ def kb_diff(old: DataFrame, new: DataFrame) -> DataFrame:
             F.when(F.col("__n") == 1, F.lit("+"))
             .otherwise(F.lit("-")).alias("change"),
         )
-    )
-
-
-def kb_timeline(snapshots: "list[tuple[int, DataFrame]]") -> DataFrame:
-    """(epoch, s, p, o, change) — the diff STREAM for a sequence of KB
-    builds: the first snapshot's triples bootstrap as ``'+'`` rows at
-    its epoch, every later snapshot contributes its :func:`kb_diff`
-    against the previous one, tagged with its epoch.  This is exactly
-    what a nightly rebuild publishes (delta-sized, never
-    snapshot-sized after the bootstrap) and what :func:`kb_history`
-    folds into validity intervals.
-
-    Epochs must be strictly increasing; each element is
-    ``(epoch, triples_df)``.
-    """
-    (e0, s0), rest = snapshots[0], snapshots[1:]
-    out = (
-        s0.select(*TRIPLE_COLS).distinct()
-        .select(F.lit(e0).alias("epoch"), *TRIPLE_COLS,
-                F.lit("+").alias("change"))
-    )
-    for (_, prev), (e, cur) in zip(snapshots, rest):
-        out = out.unionByName(
-            kb_diff(prev, cur)
-            .select(F.lit(e).alias("epoch"), *TRIPLE_COLS, "change"))
-    return out
-
-
-def kb_history(diffs: DataFrame) -> DataFrame:
-    """(s, p, o, valid_from, valid_to) — fold a diff stream
-    (:func:`kb_timeline` shape: ``epoch, s, p, o, change``) into
-    SCD2-style validity intervals: each ``'+'`` opens an interval at
-    its epoch, closed by the triple's next ``'-'`` (``valid_to`` NULL
-    while still live).  The temporal completion of the repository's
-    set semantics: "was this statement in the store at epoch t?"
-    becomes a plain interval filter (:func:`kb_asof`), with history
-    storage proportional to CHANGE volume, not epochs × snapshot.
-
-    Precondition (guaranteed by :func:`kb_timeline` over set-semantic
-    snapshots): per (s, p, o) the changes alternate ``+ - + - …``
-    starting with ``'+'`` — re-added triples simply open a new row.
-
-    Scale shape: ONE exchange — a (s, p, o)-keyed window ordered by
-    epoch; each partition holds only that triple's transitions (a few
-    rows even over years of rebuilds), so the sort inside the window
-    is trivially small and never spills."""
-    w = Window.partitionBy(*TRIPLE_COLS).orderBy("epoch")
-    return (
-        diffs.select("epoch", *TRIPLE_COLS, "change")
-        .withColumn("__next", F.lead("epoch").over(w))
-        .where(F.col("change") == "+")
-        .select(*TRIPLE_COLS,
-                F.col("epoch").alias("valid_from"),
-                F.col("__next").alias("valid_to"))
-    )
-
-
-def kb_asof(history: DataFrame, epoch: int) -> DataFrame:
-    """(s, p, o) — the store as of ``epoch``, reconstructed from a
-    :func:`kb_history` interval table: rows whose interval covers the
-    epoch.  A pure filter — no shuffle, no join; with the history
-    parquet partitioned or z-ordered on ``valid_from`` the scan prunes
-    too.  Point-in-time audit / reproducible-training-snapshot
-    primitive: "train on the KG exactly as it stood at epoch t"."""
-    return history.where(
-        (F.col("valid_from") <= F.lit(epoch))
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > F.lit(epoch)))
-    ).select(*TRIPLE_COLS)
-
-
-def _hmod(key: Column, seed: str, mod: Column) -> Column:
-    """First 8 md5 hex chars of ``seed || '|' || key`` as an int in
-    [0, mod) — the engine-portable hash (sampling._bucket) with a
-    COLUMN modulus (DuckDB: ``('0x' || substr(md5(...), 1, 8))::BIGINT
-    % mod``)."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(seed + "|"), key)), 1, 8),
-            16, 10,
-        ).cast("long"),
-        mod,
-    )
-
-
-def kg_negatives(triples: DataFrame, k: int = 2, n_buckets: int = 64,
-                 seed: str = "neg-v1") -> DataFrame:
-    """(s, p, o_neg, neg_rank) — deterministic corrupt-tail negative
-    sampling for link-prediction training (TransE-style): for every
-    distinct positive triple, draw ``k`` replacement objects from the
-    store's object vocabulary by seeded hash, then anti-join the true
-    triples away so no accidental positive survives.  Same seed + same
-    store ⇒ the same negatives on every run, cluster size, and engine
-    (the md5 draw is the repo's portable-hash contract).
-
-    Draw scheme (all equi-joins, no global index): the vocabulary is
-    hash-bucketed and ranked WITHIN each bucket (parallel window,
-    bucket-sized partitions); a draw picks a non-empty bucket by dense
-    bucket index, then a rank inside it from the bucket's size.  Pick
-    probability is uniform within a bucket and ∝ 1/(nb·size_b) across
-    buckets — negligibly non-uniform for vocab ≫ n_buckets, and a
-    documented trade against the single-partition global row_number a
-    flat index would need.
-
-    Scale shape: vocab (entity-sized, ≪ triples) shuffles once for
-    the per-bucket rank; bucket sizes / dense ids are a ≤ n_buckets-row
-    aggregate, broadcast onto the draws; draws join the ranked vocab on
-    (bucket, rank) — uniform keys by construction, no skew; the final
-    left_anti against the positives is the only triple-sized shuffle.
-    Collision-dropped draws (the sampled object was a true object for
-    that (s, p)) are NOT resampled: resampling needs iterative joins,
-    and the loss rate is |true objects of (s,p)| / |vocab| — noise at
-    corpus scale.  ``triples`` is consumed by FOUR plan branches
-    (positives, vocabulary, draws, anti-join): feed a materialized
-    table (the committed store / a checkpoint), not an expensive live
-    subtree, or Spark recomputes it per branch."""
-    pos = triples.select(*TRIPLE_COLS).distinct()
-    vocab = (
-        pos.select(F.col("o").alias("cand")).distinct()
-        .withColumn("__b", _hmod(F.col("cand"), seed + "|vb",
-                                 F.lit(n_buckets)))
-    )
-    ranked = vocab.withColumn(
-        "__r",
-        F.row_number().over(Window.partitionBy("__b").orderBy("cand")) - 1,
-    )
-    # ≤ n_buckets rows: per-bucket size + dense id (the global
-    # row_number window runs over this tiny aggregate, never the data)
-    sizes = (
-        vocab.groupBy("__b").agg(F.count(F.lit(1)).alias("__sz"))
-        .withColumn("__db", F.row_number().over(Window.orderBy("__b")) - 1)
-    )
-    nb = sizes.agg(F.count(F.lit(1)).alias("__nb"))
-    key = F.concat_ws("|", "s", "p", "o",
-                      F.col("neg_rank").cast("string"))
-    draws = (
-        pos.select(
-            *TRIPLE_COLS,
-            F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("neg_rank"))
-        .crossJoin(F.broadcast(nb))
-        .withColumn("__db", _hmod(key, seed + "|db", F.col("__nb")))
-        .drop("__nb")
-        .join(F.broadcast(sizes.select("__db", "__b", "__sz")), "__db")
-        .withColumn("__r", _hmod(key, seed + "|r", F.col("__sz")))
-    )
-    return (
-        draws.join(ranked, ["__b", "__r"])
-        .select("s", "p", F.col("cand").alias("o_neg"), "neg_rank")
-        .join(pos.select("s", "p", F.col("o").alias("o_neg")),
-              ["s", "p", "o_neg"], "left_anti")
-    )
-
-
-def kb_history_snapshots(
-        snapshots: "list[tuple[int, DataFrame]]") -> DataFrame:
-    """(s, p, o, valid_from, valid_to) — :func:`kb_history` computed
-    directly from materialized snapshot tables in ONE exchange.
-    Provably equal to ``kb_history(kb_timeline(snapshots))`` (pinned by
-    a property test), but that composition pays one (s, p, o) shuffle
-    per consecutive diff PLUS the window's — this fold pays exactly
-    one: every snapshot's rows are tagged with their epoch and a
-    single (s, p, o)-keyed ``collect_set(epoch)`` (map-side partial,
-    per-key state ≤ #epochs) captures the full presence bitmap, from
-    which interval rows are derived with array expressions —
-    JVM-codegen'd, zero Python, no window, no join.
-
-    Use this for rebuild pipelines where the snapshots exist on disk;
-    use the :func:`kb_timeline` → :func:`kb_history` pair when only
-    diffs are stored (storage ∝ change volume).  Duplicate rows within
-    a snapshot are absorbed by the set-collect (repository set
-    semantics), so inputs need no pre-distinct."""
-    epochs = [e for e, _ in snapshots]
-    n = len(epochs)
-    eps_sql = "array(" + ", ".join(str(e) for e in epochs) + ")"
-    tagged = None
-    for e, df in snapshots:
-        part = df.select(*TRIPLE_COLS).withColumn("__e", F.lit(e))
-        tagged = part if tagged is None else tagged.unionByName(part)
-    agg = tagged.groupBy(*TRIPLE_COLS).agg(
-        F.collect_set("__e").alias("__es"))
-    # 1-indexed positions; an interval opens at i when present[i] and
-    # not present[i-1]; it closes at the first absent position after i
-    # (__cls, precomputed per position; the i = n guard matters —
-    # sequence(n+1, n) is a DESCENDING sequence in Spark, not empty)
-    cls = f"""
-      transform(sequence(1, {n}), i ->
-        IF(i = {n}, CAST(NULL AS INT),
-           try_element_at(
-             filter(sequence(i + 1, {n}),
-                    j -> NOT element_at(__pres, j)), 1)))
-    """
-    iv = f"""
-      filter(
-        transform(sequence(1, {n}), i ->
-          IF(element_at(__pres, i)
-             AND (i = 1 OR NOT element_at(__pres, i - 1)),
-             named_struct(
-               'valid_from', element_at({eps_sql}, i),
-               'valid_to', IF(element_at(__cls, i) IS NULL,
-                              CAST(NULL AS INT),
-                              element_at({eps_sql}, element_at(__cls, i)))),
-             CAST(NULL AS STRUCT<valid_from: INT, valid_to: INT>))),
-        x -> x IS NOT NULL)
-    """
-    return (
-        agg.withColumn(
-            "__pres",
-            F.expr(f"transform({eps_sql}, e -> array_contains(__es, e))"))
-        .withColumn("__cls", F.expr(cls))
-        .select(*TRIPLE_COLS, F.explode(F.expr(iv)).alias("__iv"))
-        .select(*TRIPLE_COLS, "__iv.valid_from", "__iv.valid_to")
     )

@@ -57,16 +57,5 @@ def get_spark(
 
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "region nation supplier part lineitem events documents embeddings"
 ).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver-generated parquet tables and register temp views."""
-    out = {}
-    for t in TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out

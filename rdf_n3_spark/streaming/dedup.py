@@ -163,9 +163,10 @@ def stream_conv_dedup(stream: DataFrame, corpus_fps: DataFrame,
 
     ``corpus_fps`` is a static snapshot with an ``fp`` column (e.g.
     yesterday's committed keep-map), refreshed between runs exactly
-    like the near-dup gates' LSH indexes; copies arriving in two
-    different runs of the SAME snapshot may both pass — the standard
-    gate contract, with batch conv_dedup as the end-of-day sweep.
+    like the near-dup gates' LSH indexes.  Nothing accumulates across
+    epochs: copies arriving in two micro-batches of ONE run, or in two
+    runs against the SAME snapshot, may both pass — the standard gate
+    contract, with batch conv_dedup as the end-of-day sweep.
 
     Scale: per micro-batch work is batch-sized (one conv-keyed fold)
     plus one fp anti-join against the index — fingerprints are 32-hex

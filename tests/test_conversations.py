@@ -259,6 +259,42 @@ def test_conv_dedup_partitioning_independent(spark):
     assert sum(r[3] for r in a) == 1
 
 
+def test_conv_dedup_null_text_matches_oracle(spark):
+    """A NULL-text turn still counts toward the fingerprint on both
+    engines: Spark's and DuckDB's concat_ws both skip the NULL, so the
+    turn hashes as md5("assistant") and a conversation with an extra
+    NULL-text turn is not a duplicate of its copy without it."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from rdf_n3_spark.operators.conversations import conv_dedup
+
+    rows = [
+        ("a", 0, "user", "hi", "", 0),
+        ("a", 1, "assistant", None, "", 1),
+        ("a", 2, "user", "bye", "", 2),
+        ("b", 0, "user", "hi", "", 10),
+        ("b", 1, "user", "bye", "", 12),
+    ]
+    t = _t(spark, rows)
+    got = {r["conv_id"]: r.asDict() for r in conv_dedup(t).collect()}
+    assert got["a"]["fp"] != got["b"]["fp"]
+    assert got["a"]["keep"] == 1 and got["b"]["keep"] == 1
+
+    # the oracle SQL over the same rows: swap the sf-derived
+    # transcripts CTE for the hand-built table
+    sql = entry_mod.oracle_sql()["conv_dedup"].replace(
+        entry_mod._T, "transcripts AS (SELECT * FROM t_rows)")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t_rows (conv_id VARCHAR, turn_idx INTEGER, "
+                "role VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO t_rows VALUES (?, ?, ?, ?)",
+                    [r[:4] for r in rows])
+    want = {r[0]: r for r in con.sql(sql).fetchall()}
+    assert {c: (c, g["fp"], g["keeper_conv_id"], g["keep"])
+            for c, g in got.items()} == want
+
+
 def test_turn_templates_floor_and_conv_spread(spark):
     from rdf_n3_spark.operators.conversations import turn_templates
 

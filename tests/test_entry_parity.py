@@ -41,9 +41,9 @@ def test_all_queries_have_oracles_or_are_flagged():
 
 def test_driver_window_covers_uncertified():
     """The driver certifies queries()[0:50] only.  Round-5 rotation
-    invariant (VERDICT r4 item 1): the six round-4 overflow queries —
-    the last rows with no driver CORRECTNESS artifact through r4 —
-    lead the window, new-round queries enter ahead of the re-cert
+    invariant (VERDICT r4 item 1): the surviving round-4 overflow
+    queries — the last rows with no driver CORRECTNESS artifact
+    through r4 — lead the window, new-round queries enter ahead of the re-cert
     slate, and the ordering helper must not drop or duplicate any
     query."""
     names = list(QUERIES)
@@ -51,7 +51,7 @@ def test_driver_window_covers_uncertified():
     window = set(names[:50])
     overflow_r4 = {
         "cms_freq", "relation_triples", "kb_void", "source_weights",
-        "paragraph_neardup", "triangle_counts_capped",
+        "paragraph_neardup",
     }
     assert overflow_r4 <= set(entry_mod._ROUND_NEW)
     # every round's new queries enter the window head (rotation contract)
@@ -93,11 +93,11 @@ CROSS_SF = [
     "dedup_embedding", "ann_topk_partial",
     # round-3 queries whose dedicated test files don't already pin
     # sf0.001 parity themselves
-    "gopher_quality", "paragraph_dedup", "hash_embed", "graph_kcore",
+    "gopher_quality", "paragraph_dedup", "hash_embed",
     "lm_score", "dedup_incremental",
     # round-4 queries (each was verified at both SFs when added; this
     # pins the SF-independence going forward)
-    "kmv_merged", "cms_freq", "cms_merged", "triangle_counts_capped",
+    "kmv_merged", "cms_freq", "cms_merged",
     "embedding_incremental", "kb_char_sets", "kb_void", "kb_star_card",
     "paragraph_neardup", "source_weights", "relation_candidates",
     "relation_triples",
@@ -105,9 +105,7 @@ CROSS_SF = [
     "ann_ivf_multitable", "bloom_decontaminate", "token_heavy_hitters",
     "n3_write_nquads", "token_budget_sample",
     "label_consistency", "conv_stats", "conv_role_protocol",
-    "conv_transitions", "kb_history", "kb_history_snapshots", "kb_asof",
-    "kg_negatives", "entity_enrich", "search_bm25", "search_rrf",
-    "graph_khop",
+    "conv_transitions", "entity_enrich", "search_bm25", "search_rrf",
 ]
 
 

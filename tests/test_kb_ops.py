@@ -5,8 +5,6 @@ runs in test_entry_parity via the driver contract).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from rdf_n3_spark.operators.triples import canonical_triples, kb_diff
 
 MENTION_SCHEMA = "conv_id string, turn_idx int, pos int, surface string, norm string"
@@ -93,130 +91,3 @@ def test_canonical_rewrite_broadcasts_the_map(spark):
     df = canonical_triples(_mentions(spark, rows))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-
-
-# ---------------------------------------------------------------- temporal KB
-
-from rdf_n3_spark.operators.triples import (  # noqa: E402
-    kb_asof, kb_history, kb_timeline, kg_negatives,
-)
-
-
-def _snaps(spark):
-    """Three builds: x stable, y removed at 1, z added at 1 and removed
-    at 2, w added at 2, y re-added at 2."""
-    s0 = _kb(spark, [("x", "p", "1"), ("y", "p", "1")])
-    s1 = _kb(spark, [("x", "p", "1"), ("z", "p", "1")])
-    s2 = _kb(spark, [("x", "p", "1"), ("w", "p", "1"), ("y", "p", "1")])
-    return [(0, s0), (1, s1), (2, s2)]
-
-
-def test_kb_history_intervals(spark):
-    hist = kb_history(kb_timeline(_snaps(spark)))
-    got = {(r["s"], r["valid_from"], r["valid_to"]) for r in hist.collect()}
-    assert got == {
-        ("x", 0, None),          # never removed
-        ("y", 0, 1), ("y", 2, None),  # removed then re-added: two rows
-        ("z", 1, 2),             # transient
-        ("w", 2, None),
-    }
-
-
-def test_kb_asof_reconstructs_each_snapshot(spark):
-    snaps = _snaps(spark)
-    hist = kb_history(kb_timeline(snaps))
-    for epoch, snap in snaps:
-        got = {tuple(r) for r in kb_asof(hist, epoch).collect()}
-        want = {tuple(r) for r in snap.distinct().collect()}
-        assert got == want, f"epoch {epoch}"
-
-
-def test_kb_history_single_exchange(spark):
-    """Plan audit: folding an already-materialized diff stream costs
-    one (s,p,o) window exchange — no joins."""
-    diffs = spark.createDataFrame(
-        [(0, "a", "p", "1", "+"), (1, "a", "p", "1", "-")],
-        "epoch int, s string, p string, o string, change string")
-    plan = kb_history(diffs)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "Join" not in plan, plan
-
-
-# ------------------------------------------------------- negative sampling
-
-def _ref_triples(spark):
-    rows = [("m%d" % i, ":refersTo", "ent:e%d" % (i % 7)) for i in range(40)]
-    return _kb(spark, rows)
-
-
-def test_kg_negatives_deterministic_and_clean(spark):
-    t = _ref_triples(spark)
-    a = sorted(map(tuple, kg_negatives(t, k=2).collect()))
-    b = sorted(map(tuple, kg_negatives(t, k=2).collect()))
-    assert a == b and len(a) > 0
-    # no accidental positive survives the anti-join
-    pos = {(r["s"], r["p"], r["o"]) for r in t.collect()}
-    assert all((s, p, o) not in pos for s, p, o, _ in a)
-    # at most k draws per positive, ranks within [0, k)
-    from collections import Counter
-    per = Counter((s, p) for s, p, _, _ in a)
-    assert max(per.values()) <= 2
-    assert {r for *_, r in a} <= {0, 1}
-
-
-def test_kg_negatives_seed_changes_draws(spark):
-    t = _ref_triples(spark)
-    a = set(map(tuple, kg_negatives(t, k=1, seed="A").collect()))
-    b = set(map(tuple, kg_negatives(t, k=1, seed="B").collect()))
-    assert a != b
-
-
-def test_kg_negatives_draws_from_vocab_only(spark):
-    t = _ref_triples(spark)
-    vocab = {r["o"] for r in t.select("o").distinct().collect()}
-    negs = kg_negatives(t, k=3).collect()
-    assert {r["o_neg"] for r in negs} <= vocab
-
-
-from rdf_n3_spark.operators.triples import kb_history_snapshots  # noqa: E402
-
-
-def test_kb_history_snapshots_equals_diff_fold(spark):
-    """Property: the one-exchange snapshot fold computes EXACTLY
-    kb_history(kb_timeline(...)) — random presence bitmaps over 4
-    epochs cover open/closed/reopened/transient interval shapes."""
-    import random
-
-    rng = random.Random(7)
-    epochs = [0, 1, 2, 3]
-    rows = {e: [] for e in epochs}
-    for t in range(60):
-        # random non-empty presence set; dup rows in random snapshots
-        # exercise the no-pre-distinct contract
-        pres = [e for e in epochs if rng.random() < 0.5] or [rng.choice(epochs)]
-        for e in pres:
-            rows[e].append((f"s{t}", "p", "1"))
-            if rng.random() < 0.2:
-                rows[e].append((f"s{t}", "p", "1"))
-    snaps = [(e, _kb(spark, rows[e])) for e in epochs if rows[e]]
-    a = {tuple(r) for r in kb_history_snapshots(snaps).collect()}
-    b = {tuple(r) for r in kb_history(kb_timeline(snaps)).collect()}
-    assert a == b and len(a) > 0
-
-
-def test_kb_history_snapshots_single_exchange(spark):
-    """Plan audit: the snapshot fold pays ONE shuffle for any number
-    of snapshots — no joins, no window sort beyond the aggregate."""
-    snaps = _snaps(spark)
-    plan = (kb_history_snapshots(snaps)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("Exchange") == 1, plan
-    assert "Join" not in plan and "Window" not in plan, plan
-
-
-def test_kb_asof_on_snapshot_fold(spark):
-    snaps = _snaps(spark)
-    hist = kb_history_snapshots(snaps)
-    for epoch, snap in snaps:
-        got = {tuple(r) for r in kb_asof(hist, epoch).collect()}
-        assert got == {tuple(r) for r in snap.distinct().collect()}

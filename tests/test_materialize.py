@@ -152,6 +152,42 @@ def test_unreadable_lineage_raises(spark, triples, tmp_path):
             reader(spark, root)
 
 
+def test_crash_before_lineage_commit_resumes_cleanly(spark, triples, tmp_path,
+                                                     monkeypatch):
+    """A crash after all three table writes and before the lineage
+    append commits nothing; re-running the same batch id rewrites its
+    files and commits exactly what a clean run into a fresh root
+    commits, with no duplicate rows."""
+    import types
+
+    import rdf_n3_spark.operators.materialize as mat
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before the lineage append")
+
+    root = str(tmp_path / "graph")
+    monkeypatch.setattr(mat, "pd", types.SimpleNamespace(DataFrame=crash))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        materialize_graph(spark, triples, root, batch_id="b001")
+    monkeypatch.undo()
+    for table in ("nodes", "edges", "node_props"):
+        assert (tmp_path / "graph" / table / "batch=b001").is_dir()
+    assert committed_batches(spark, root) == set()
+    assert read_store(spark, root).count() == 0
+
+    def lineage(r):
+        return sorted(map(tuple, mat.read_lineage(spark, r).select(
+            "table", "bucket", "n_rows", "content_hash").collect()))
+
+    materialize_graph(spark, triples, root, batch_id="b001")
+    clean = str(tmp_path / "clean")
+    materialize_graph(spark, triples, clean, batch_id="b001")
+    assert lineage(root) == lineage(clean)
+    for table in ("nodes", "edges", "node_props"):
+        df = read_graph(spark, root, table)
+        assert df.count() == df.distinct().count() > 0, table
+
+
 def test_materialize_set_semantics(spark, tmp_path):
     """Duplicate triples in a batch collapse (repository.rb:297-307)."""
     dup = spark.createDataFrame(TRIPLES + TRIPLES, "s string, p string, o string")
