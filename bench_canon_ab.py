@@ -33,52 +33,40 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rounds = int(os.environ.get("AB_ROUNDS", "5"))
 
+    from bench import bench_session
     from rdf_n3_spark.operators.canon import canonical_map
     from rdf_n3_spark.operators.mentions import extract_mentions
-    from rdf_n3_spark.session import get_spark
     from rdf_n3_spark.sources.transcripts import transcripts
 
-    spark = get_spark(
-        "bench_canon_ab",
-        cores=cpus,
-        shuffle_partitions=64,
-        extra={
-            "spark.driver.extraJavaOptions":
-                f"-XX:ActiveProcessorCount={cpus} -XX:+UseParallelGC",
-            "spark.local.dir": "/dev/shm/spark-bench",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    t = transcripts(spark, sf_dir).localCheckpoint()  # input prep untimed
+    with bench_session("bench_canon_ab", cpus) as (spark, _):
+        t = transcripts(spark, sf_dir).localCheckpoint()  # input prep untimed
 
-    def run(pointer_jump: bool) -> float:
-        t0 = time.perf_counter()
-        df = canonical_map(extract_mentions(t), pointer_jump=pointer_jump)
-        h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
-        df.select(F.sum(h), F.count(F.lit(1))).collect()
-        return time.perf_counter() - t0
+        def run(pointer_jump: bool) -> float:
+            t0 = time.perf_counter()
+            df = canonical_map(extract_mentions(t), pointer_jump=pointer_jump)
+            h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
+            df.select(F.sum(h), F.count(F.lit(1))).collect()
+            return time.perf_counter() - t0
 
-    variants = (True, False, "auto")
-    for v in variants:  # warm: JIT, codegen, parquet footers
-        run(v)
-    times = {v: [] for v in variants}
-    for _ in range(rounds):
-        for v in variants:
-            times[v].append(run(v))
-    out = {
-        "metric": "entity_canon_end_to_end_sec",
-        "protocol": "interleaved min-of-rounds, one JVM, end-to-end "
-                    "(plan + CC driver loop + collect)",
-        "rounds": rounds,
-        "jump_min_sec": round(min(times[True]), 3),
-        "nojump_min_sec": round(min(times[False]), 3),
-        "auto_min_sec": round(min(times["auto"]), 3),
-        "all": {str(v): [round(x, 3) for x in times[v]] for v in variants},
-        "sf": sf_dir,
-        "cpus": cpus,
-    }
-    print(json.dumps(out))
-    spark.stop()
+        variants = (True, False, "auto")
+        for v in variants:  # warm: JIT, codegen, parquet footers
+            run(v)
+        times = {v: [] for v in variants}
+        for _ in range(rounds):
+            for v in variants:
+                times[v].append(run(v))
+        print(json.dumps({
+            "metric": "entity_canon_end_to_end_sec",
+            "protocol": "interleaved min-of-rounds, one JVM, end-to-end "
+                        "(plan + CC driver loop + collect)",
+            "rounds": rounds,
+            "jump_min_sec": round(min(times[True]), 3),
+            "nojump_min_sec": round(min(times[False]), 3),
+            "auto_min_sec": round(min(times["auto"]), 3),
+            "all": {str(v): [round(x, 3) for x in times[v]] for v in variants},
+            "sf": sf_dir,
+            "cpus": cpus,
+        }))
 
 
 if __name__ == "__main__":

@@ -32,41 +32,30 @@ MULTS = tuple(int(x) for x in
 
 
 def main() -> None:
-    from bench import prepare_input
-    from rdf_n3_spark.session import get_spark
+    from bench import bench_session, prepare_input
     from rdf_n3_spark.operators.mentions import extract_mentions
     from rdf_n3_spark.operators.triples import entity_triples, mention_triples
 
-    spark = get_spark(
-        "bench-linearity",
-        cores=CPUS,
-        shuffle_partitions=64,
-        extra={
-            "spark.driver.extraJavaOptions":
-                f"-XX:ActiveProcessorCount={CPUS} -XX:+UseParallelGC",
-            "spark.local.dir": "/dev/shm/spark-bench",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
+    with bench_session("bench-linearity", CPUS) as (spark, scratch):
+        def sink(df):
+            h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
+            return df.select(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n"))
 
-    def sink(df):
-        h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
-        return df.select(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n"))
+        plans, turns = {}, {}
+        for mult in MULTS:
+            t = spark.read.parquet(prepare_input(spark, SF_DIR, mult, scratch))
+            turns[mult] = t.count()
+            m = extract_mentions(t)
+            plans[mult] = sink(mention_triples(m).unionByName(entity_triples(m)))
+            plans[mult].collect()  # warm: JIT, codegen, parquet footers
 
-    plans, turns = {}, {}
-    for mult in MULTS:
-        t = spark.read.parquet(prepare_input(spark, SF_DIR, mult))
-        turns[mult] = t.count()
-        m = extract_mentions(t)
-        plans[mult] = sink(mention_triples(m).unionByName(entity_triples(m)))
-        plans[mult].collect()  # warm: JIT, codegen, parquet footers
+        walls: dict[int, list[float]] = {m: [] for m in MULTS}
+        for i in range(RUNS):
+            for mult in MULTS:  # interleave levels within each round
+                t0 = time.perf_counter()
+                plans[mult].where(F.lit(i) >= 0).collect()
+                walls[mult].append(time.perf_counter() - t0)
 
-    walls: dict[int, list[float]] = {m: [] for m in MULTS}
-    for i in range(RUNS):
-        for mult in MULTS:  # interleave levels within each round
-            t0 = time.perf_counter()
-            plans[mult].where(F.lit(i) >= 0).collect()
-            walls[mult].append(time.perf_counter() - t0)
     med = {m: statistics.median(walls[m]) for m in MULTS}
     lo, hi = MULTS
     ratio = med[hi] / med[lo]
@@ -92,7 +81,6 @@ def main() -> None:
     with open("BENCH/BASELINE.md", "a") as f:
         f.writelines(lines)
     print("".join(lines[4:]))
-    spark.stop()
 
 
 if __name__ == "__main__":

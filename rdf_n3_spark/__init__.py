@@ -7,14 +7,12 @@ re-expressed Spark-first:
 - ``sources``    — transcript/document readers and the deterministic
                    synthetic transcripts derivation (input_hint shape).
 - ``functions``  — pure-Python N3 parser/writer, builtin vocabulary
-                   (math/string/time/list/log) as Column transforms,
-                   text-analysis functions.
+                   (math/string/time/list/log) as Column transforms.
 - ``operators``  — mention detection, triple emission/skolemization,
                    entity canonicalization (MinHash-LSH + connected
                    components), dedup, similarity search.
 - ``plans``      — rule compilation + semi-naive fixpoint reasoner
                    (the DataFrame equivalent of rdf-n3's Reasoner).
-- ``streaming``  — Structured Streaming variants of the triple pipeline.
 
 Everything in the hot path is DataFrame/Column expressions (JVM-side,
 whole-stage-codegen'd); Python appears only inside Arrow-batched pandas

@@ -301,9 +301,8 @@ def corpus_rep_neardups(new_docs: DataFrame, corpus: DataFrame,
     """(doc_id, rep) — NEW documents whose exact word-shingle Jaccard
     against their LSH-bucket REPRESENTATIVE in the persisted corpus
     index clears ``threshold``: the corpus-side half of
-    :func:`incremental_neardup`, factored out so composites (the
-    streaming split-leakage audit) can consume the verified (new,
-    corpus) pairs themselves rather than only the keep/drop verdict.
+    :func:`incremental_neardup`, returning the verified (new, corpus)
+    pairs themselves rather than only the keep/drop verdict.
     Same bounded-skew representative-verify trade as the ingest gate;
     per-batch work is index-sized + batch-sized, never corpus-sized."""
     return (

@@ -21,9 +21,7 @@ Scale shape: both are two-exchange profiles.  `characteristic_sets`
 groups by subject (collect_set over the FEW distinct predicates a
 subject carries — bounded by schema width, not data; partial-merged
 map-side) then by the set itself; `void_stats` is one predicate-keyed
-agg whose count-distincts Spark expands and partial-aggregates.  For
-web-scale distinct counts where exactness isn't required, the
-mergeable `sketch.kmv_distinct` is the drop-in.
+agg whose count-distincts Spark expands and partial-aggregates.
 """
 
 from __future__ import annotations
@@ -232,62 +230,3 @@ def star_cardinality(triples: DataFrame, predicates: list[str]) -> DataFrame:
     return cs.where(cond).agg(
         F.coalesce(F.sum("n_subjects"), F.lit(0)).cast("bigint")
         .alias("n_subjects"))
-
-
-#: prefixed-name namespace: scheme-like prefix before the first colon
-_NS_RE = "^([A-Za-z][A-Za-z0-9+.-]*):"
-
-
-def _term_ns(c: "F.Column"):
-    """Namespace tag of a compact KB term: its pname prefix, the empty
-    marker ``(default)`` for default-namespace terms (``:surface``),
-    or ``(lit)`` for literals.  Never null, so group keys hash
-    portably."""
-    return (
-        F.when(c.rlike(_NS_RE), F.regexp_extract(c, _NS_RE, 1))
-        .when(c.startswith(":"), F.lit("(default)"))
-        .otherwise(F.lit("(lit)"))
-    )
-
-
-def predicate_signatures(triples: DataFrame) -> DataFrame:
-    """(p, subj_ns, obj_kind, obj_ns, n, n_subjects, n_objects) — the
-    domain/range signature induced per predicate: for every predicate,
-    how its subjects and objects distribute over namespaces and term
-    kinds (prefixed IRI / default-ns IRI / integer literal / string
-    literal).  The class-partition analog VoID adds on top of
-    per-predicate counts: schema induction for a KG assembled from
-    heterogeneous extraction tiers, and the input for range-violation
-    audits (a ``:mentionCount`` object that is suddenly a string is an
-    upstream extraction bug, not data).
-
-    Term-kind classification is pure regex on the compact term forms
-    the triple emitters produce (``sk:``/``ent:``/``conv:`` IRIs,
-    ``:name`` default-ns IRIs, bare literals) — portable to any SQL
-    engine, no UDF.
-
-    Scale shape: ONE map-side-combinable groupBy on the tiny
-    (p, ns, kind) key space — signature keys are hot by definition and
-    partials collapse them; the two distinct-counts expand to the
-    standard two-phase exact plan on the same key.
-    """
-    o = F.col("o")
-    obj_kind = (
-        F.when(o.rlike(_NS_RE) | o.startswith(":"), F.lit("iri"))
-        .when(o.rlike("^-?[0-9]+$"), F.lit("int"))
-        .otherwise(F.lit("str"))
-    )
-    return (
-        triples.select(
-            "p", "s", "o",
-            _term_ns(F.col("s")).alias("subj_ns"),
-            obj_kind.alias("obj_kind"),
-            _term_ns(o).alias("obj_ns"),
-        )
-        .groupBy("p", "subj_ns", "obj_kind", "obj_ns")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.countDistinct("s").cast("bigint").alias("n_subjects"),
-            F.countDistinct("o").cast("bigint").alias("n_objects"),
-        )
-    )

@@ -235,53 +235,6 @@ def materialize_graph(
     return metrics
 
 
-def materialize_bucketed(df: DataFrame, table: str, key: str,
-                         n_buckets: int = 64,
-                         sort: bool = True) -> DataFrame:
-    """Persist ``df`` as a Spark-BUCKETED (and, by default, per-bucket
-    SORTED) catalog table, and return the re-read table.
-
-    This is the co-location contract the directory-bucketed layout
-    above can't give Spark's planner: a catalog table written with
-    ``bucketBy(n, key)`` carries its hash distribution into every scan,
-    so downstream equi-joins and aggregations on ``key`` between tables
-    bucketed the same way (same key, same n) run EXCHANGE-FREE — the
-    shuffle is paid ONCE at write time instead of once per query.  At
-    100 TB this is the difference between a curation pass that joins
-    doc-keyed signal tables five times (``curate_corpus``) re-shuffling
-    the corpus five times, and one that reads co-located buckets.
-
-    ``sortBy`` additionally lays each bucket out key-sorted; readers
-    that opt in (``spark.sql.legacy.bucketedTableScan.outputOrdering``,
-    off by default since 3.0 because multi-file buckets can't
-    guarantee order — our one-file-per-bucket write can) drop the
-    sort-merge join's per-task Sort too.
-
-    The exchange-free property is pinned by plan audits in
-    ``tests/test_bucketed.py`` (join of two bucketed tables: zero
-    Exchange, zero Sort; groupBy on the bucket key: zero Exchange).
-
-    The pre-write ``repartition(n_buckets, key)`` aligns the write
-    tasks with the bucket assignment (both are pmod-of-murmur3), so
-    each bucket lands in EXACTLY ONE file.  That matters twice: the
-    reader drops the per-task Sort only when buckets are single-file,
-    and without it a 1000-executor write of 64 buckets scatters 64,000
-    small files (every task writes every bucket it sees).
-
-    Parquet-backed managed table (``saveAsTable`` is the API that
-    records bucketing metadata; path-based ``.parquet()`` writes
-    cannot).  In production the same call targets a shared metastore /
-    Iceberg catalog with its native ``bucket(N, key)`` transform."""
-    w = (
-        df.repartition(n_buckets, key)
-        .write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    )
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-    return df.sparkSession.table(table)
-
-
 def _scan(spark: SparkSession, root: str, table: str, committed: set) -> DataFrame:
     return (spark.read.schema(TABLE_SCHEMAS[table]).parquet(os.path.join(root, table))
             .where(F.col("batch").isin(sorted(committed))))

@@ -10,9 +10,9 @@ Architecture (two scales, one core):
   driver-side (or per-document inside a pandas UDF) — evaluating them
   with Python dicts is orders of magnitude cheaper than launching a
   Spark job per rule per fixpoint round *for a single document*.
-* ``rdf_n3_spark/streaming``/``operators`` wrap this core in
-  ``mapInPandas`` for corpus-scale *per-document* reasoning
-  (documents are independent ⇒ embarrassingly parallel).
+* Corpus-scale *per-document* reasoning runs this core inside
+  ``mapInPandas`` (documents are independent ⇒ embarrassingly
+  parallel).
 * For ONE global rulebase over a distributed triple set, the BGP is
   re-planned as DataFrame joins (plans/bgp.py) — same compiled rules,
   different executor.

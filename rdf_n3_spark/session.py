@@ -57,5 +57,5 @@ def get_spark(
 
 
 TABLES = (
-    "region nation supplier part lineitem events documents embeddings"
+    "lineitem events documents embeddings"
 ).split()

@@ -1,10 +1,7 @@
-"""Embedding-space incremental ingest gate (batch + streaming):
-corpus-dup / batch-dup / novel verdicts, zero-norm NaN guard, and the
-epoch-idempotent streaming sink."""
+"""Embedding-space incremental ingest gate: corpus-dup / batch-dup /
+novel verdicts, the zero-norm NaN guard and the plan shape."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from rdf_n3_spark.operators.dedup import (
     embedding_band_index,
@@ -75,56 +72,6 @@ def test_band_index_is_one_row_per_key(spark):
     idx = embedding_band_index(corpus).collect()
     assert len({r["band_key"] for r in idx}) == len(idx)
     assert {r["rep"] for r in idx} == {1}  # identical vectors → min id
-
-
-def test_stream_gate_matches_batch_verdict(spark, tmp_path):
-    """The streamed keep-set equals the batch verdict on the same
-    micro-batch — the gate IS the batch operator run per epoch."""
-    from rdf_n3_spark.streaming.dedup import stream_embedding_gate
-
-    base = _vec({0: 1.0, 1: 0.5})
-    corpus = _mk(spark, [(1, base)])
-    novel = _vec({30: 1.0})
-    batch_rows = [(100, base), (101, novel), (102, novel)]
-    src = str(tmp_path / "in")
-    _mk(spark, batch_rows).coalesce(1).write.parquet(src)
-
-    out = str(tmp_path / "kept")
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>").parquet(src)
-    q = stream_embedding_gate(stream, corpus, out,
-                              str(tmp_path / "ck")).start()
-    q.awaitTermination(120)
-
-    kept = {r.vec_id for r in spark.read.parquet(out).collect()}
-    batch_verdict = {
-        r["vec_id"]
-        for r in incremental_embedding_neardup(
-            spark.read.parquet(src), corpus).collect()
-        if r["keep"] == 1
-    }
-    assert kept == batch_verdict == {101}
-
-
-def test_stream_gate_epoch_replay_is_idempotent(spark, tmp_path):
-    """A crash-replayed epoch overwrites its own partition (dynamic
-    partition overwrite) instead of appending a second copy."""
-    from rdf_n3_spark.streaming.dedup import stream_embedding_gate
-
-    corpus = _mk(spark, [(1, _vec({0: 1.0}))])
-    src = str(tmp_path / "in")
-    _mk(spark, [(100, _vec({30: 1.0}))]).coalesce(1).write.parquet(src)
-    out = str(tmp_path / "kept")
-
-    for attempt in range(2):
-        ck = str(tmp_path / f"ck{attempt}")
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<float>").parquet(src)
-        q = stream_embedding_gate(stream, corpus, out, ck).start()
-        q.awaitTermination(120)
-
-    rows = spark.read.parquet(out).collect()
-    assert [(r.vec_id, r.epoch) for r in rows] == [(100, 0)]
 
 
 def test_gate_plan_has_no_cartesian(spark):

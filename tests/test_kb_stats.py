@@ -191,43 +191,3 @@ def test_load_profile_raises_on_unreadable_meta(spark, tmp_path):
     part.write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
         load_profile(spark, str(root))
-
-
-def test_predicate_signatures_classification(spark):
-    """Domain/range induction classifies every compact term shape the
-    emitters produce: prefixed IRI, default-ns IRI, int literal,
-    string literal — with exact distinct counts per signature key."""
-    from rdf_n3_spark.operators.kb_stats import predicate_signatures
-
-    t = spark.createDataFrame([
-        ("sk:aa", "rdf:type", ":Mention"),
-        ("sk:bb", "rdf:type", ":Mention"),
-        ("sk:aa", ":surface", "Part_3"),
-        ("sk:aa", ":atTurn", "7"),
-        ("sk:aa", ":atTurn", "-2"),
-        ("ent:part_3", ":mentionCount", "12"),
-        ("ent:part_3", ":linksTo", "conv:c9"),
-    ], "s string, p string, o string")
-    got = {(r["p"], r["subj_ns"], r["obj_kind"], r["obj_ns"]): r.asDict()
-           for r in predicate_signatures(t).collect()}
-    ty = got[("rdf:type", "sk", "iri", "(default)")]
-    assert ty["n"] == 2 and ty["n_subjects"] == 2 and ty["n_objects"] == 1
-    assert ("(lit)" ==
-            got[(":surface", "sk", "str", "(lit)")]["obj_ns"])
-    at = got[(":atTurn", "sk", "int", "(lit)")]
-    assert at["n"] == 2 and at["n_objects"] == 2  # negative int counts
-    assert (":mentionCount", "ent", "int", "(lit)") in got
-    assert (":linksTo", "ent", "iri", "conv") in got
-    assert len(got) == 5
-
-
-def test_predicate_signatures_partial_aggregation(spark):
-    """The signature groupBy must be two-phase (map-side partials) —
-    signature keys are hot by construction."""
-    from rdf_n3_spark.operators.kb_stats import predicate_signatures
-
-    t = spark.createDataFrame(
-        [("sk:a", "rdf:type", ":Mention")], "s string, p string, o string")
-    plan = (predicate_signatures(t)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "partial" in plan.lower()
