@@ -15,6 +15,46 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_n3_spark.functions.builtins import LIST, LOG, MATH, STR, TIME
+from rdf_n3_spark.functions.text import (
+    fingerprint,
+    gopher_quality,
+    hash_embed,
+    keyword_topk,
+    lang_id,
+    lm_score,
+    search_bm25,
+    search_rrf,
+    search_topk,
+    quality_score,
+    redact,
+    repetition_stats,
+    token_stats,
+)
+from rdf_n3_spark.operators.sampling import (
+    corpus_sample,
+    shuffle_shards,
+    source_mix,
+    source_weights,
+    stratified_sample,
+    token_budget_sample,
+)
+from rdf_n3_spark.operators.curation import (
+    boilerplate_ngrams,
+    boilerplate_share,
+    chunk_dedup,
+    chunk_documents,
+    corpus_split,
+    curate_corpus,
+    corpus_datasheet,
+    decontaminate,
+    pack_sequences,
+    paragraph_dedup,
+    paragraph_neardup,
+)
+from rdf_n3_spark.operators.substrings import (
+    dup_spans,
+    substring_dup_stats,
+)
 from rdf_n3_spark.operators.clustering import (
     cluster_sample,
     embed_kmeans,
@@ -37,8 +77,16 @@ from rdf_n3_spark.operators.dedup import (
     source_dup_matrix,
 )
 from rdf_n3_spark.operators.materialize import graph_edges, graph_nodes
+from rdf_n3_spark.operators.sketch import (
+    cms_token_freq,
+    kmv_distinct_tokens,
+    token_heavy_hitters,
+)
 from rdf_n3_spark.operators.conversations import conv_dedup
-from rdf_n3_spark.operators.mentions import extract_mentions
+from rdf_n3_spark.operators.mentions import (
+    extract_mentions,
+    mention_contexts,
+)
 from rdf_n3_spark.operators.similarity import (
     ann_topk,
     ann_topk_exact_oracle,
@@ -68,6 +116,148 @@ def _docs(spark, sf_dir):
 
 def _embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def _q_search(spark, sf_dir):
+    """Inverted-index retrieval: the query set is derived
+    deterministically from the corpus itself (first 3 tokens of the 20
+    lowest-doc_id documents) so the oracle replays it exactly — no
+    external query log in the sandbox."""
+    docs = _docs(spark, sf_dir)
+    queries = docs.where(F.col("doc_id") < 20).select(
+        F.col("doc_id").alias("query_id"),
+        F.concat_ws(
+            " ", F.slice(F.split(F.lower("text"), " "), 1, 3)
+        ).alias("qtext"),
+    )
+    return search_topk(docs, queries, k=10)
+
+
+def _q_search_queries(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    return docs.where(F.col("doc_id") < 20).select(
+        F.col("doc_id").alias("query_id"),
+        F.concat_ws(
+            " ", F.slice(F.split(F.lower("text"), " "), 1, 3)
+        ).alias("qtext"),
+    )
+
+
+def _q_search_bm25(spark, sf_dir):
+    """BM25 retrieval over the same corpus-derived query set as
+    ``search_topk`` — integer-exact fixed-point BM25 (functions/text.py
+    :func:`search_bm25`), length-normalized where plain tf-idf is not."""
+    docs = _docs(spark, sf_dir)
+    return search_bm25(docs, _q_search_queries(spark, sf_dir), k=10)
+
+
+def _q_search_rrf(spark, sf_dir):
+    """Reciprocal-rank fusion of the tf-idf and BM25 rankings — the
+    calibration-free way to combine retrieval systems; integer
+    micro-unit 1/(60+rank) contributions keep the fused order
+    engine-portable."""
+    docs = _docs(spark, sf_dir)
+    q = _q_search_queries(spark, sf_dir)
+    return search_rrf([
+        search_topk(docs, q, k=10),
+        search_bm25(docs, q, k=10),
+    ])
+
+
+def _q_redact(spark, sf_dir):
+    """PII/link scrub over documents ENRICHED with deterministic
+    redactables (a contact line derived from doc_id) — the synthetic
+    corpus contains no URLs/emails/phones of its own, and an all-zero
+    redaction row would not exercise the regex semantics the oracle
+    cross-checks (Java regex vs RE2 on the same patterns)."""
+    from pyspark.sql import functions as F
+
+    did = F.col("doc_id").cast("string")
+    enriched = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.concat(
+            F.col("text"), F.lit(" contact user"), did,
+            F.lit("@example.com via https://site.example/d/"), did,
+            F.lit(" or call +1 555 000 "), F.lpad(did, 4, "0"),
+        ).alias("text"),
+    )
+    return redact(enriched)
+
+
+def _q_repetition(spark, sf_dir):
+    """Gopher-style repetition filters over documents ENRICHED with a
+    deterministic second line (the synthetic corpus is single-line, so
+    the bare table would never exercise the duplicate-LINE fraction):
+    every 3rd doc's extra line repeats the first; the rest get a
+    distinct prefix line."""
+    from pyspark.sql import functions as F
+
+    d = _docs(spark, sf_dir)
+    enriched = d.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.col("text"), F.lit("\n"), F.col("text")),
+        ).otherwise(
+            F.concat(F.col("text"), F.lit("\n"), F.substring("text", 1, 29))
+        ).alias("text"),
+    )
+    return repetition_stats(enriched)
+
+
+def _q_bloom_decontaminate(spark, sf_dir):
+    """Bloom-filter decontamination (operators/sketch.py round 5) with
+    the SAME 5% eval split as _q_decontaminate — but the benchmark is
+    ingested as TWO shard filters folded with bloom_merge, so this one
+    driver row certifies build + exact-merge + probe together: a
+    non-exact fold would flip probe bits and hash-mismatch the oracle
+    (which builds one filter over the whole benchmark)."""
+    from pyspark.sql import functions as F
+
+    from rdf_n3_spark.operators.sketch import (
+        bloom_decontaminate,
+        bloom_gram_filter,
+        bloom_merge,
+    )
+
+    d = _docs(spark, sf_dir)
+    corpus = d.filter(F.col("doc_id") % 20 != 7)
+    filt = bloom_merge(
+        bloom_gram_filter(d.filter(F.col("doc_id") % 40 == 7)),
+        bloom_gram_filter(d.filter(F.col("doc_id") % 40 == 27)),
+    )
+    return bloom_decontaminate(corpus, benchmark_filter=filt)
+
+
+def _q_decontaminate(spark, sf_dir):
+    """Benchmark decontamination with a deterministic 5% eval split
+    (doc_id % 20 == 7 plays the benchmark suite; the rest is the
+    corpus). n=4 word-grams measured ~8% contamination at sf0.01 —
+    non-trivial, non-saturated."""
+    from pyspark.sql import functions as F
+
+    d = _docs(spark, sf_dir)
+    bench = d.filter(F.col("doc_id") % 20 == 7)
+    corpus = d.filter(F.col("doc_id") % 20 != 7)
+    return decontaminate(corpus, bench, n=4)
+
+
+def _q_curate(spark, sf_dir):
+    """End-to-end curation decision over the FULL documents table
+    (benchmark members stay in the corpus and come out trivially
+    contaminated — eval docs must not be trained on)."""
+    from pyspark.sql import functions as F
+
+    d = _docs(spark, sf_dir)
+    bench = d.filter(F.col("doc_id") % 20 == 7)
+    return curate_corpus(d, bench, n=4, quality_min=0.9, top_bigram_max=0.08)
+
+
+def _q_pack(spark, sf_dir):
+    """Greedy context-window packing (capacity 256, 8 shards) — the
+    sharded applyInPandas scan; oracle is the equivalent per-shard
+    recursive CTE."""
+    return pack_sequences(_docs(spark, sf_dir), capacity=256, n_shards=8)
 
 
 _T = transcripts_duckdb_cte()
@@ -195,7 +385,24 @@ comp AS (SELECT n AS node, min(m) AS comp FROM reach GROUP BY n)
 )
 
 
-# ---- DuckDB fragments for the dedup / ANN operators -------------------
+# ---- DuckDB fragments for the training-data operators ----------------
+
+_TOKSTATS = """
+WITH stats AS (
+  SELECT doc_id,
+         CAST(len(toks) AS BIGINT) AS n_tokens,
+         CAST(len(regexp_extract_all(text,
+           '''re|''ve|''ll|''[sdmt]| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]+|[ \\t\\n\\x0B\\f\\r]+'
+         )) AS BIGINT) AS n_bpe_tokens,
+         CAST(length(text) AS BIGINT) AS n_chars,
+         CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT)
+           / len(toks) AS avg_token_len,
+         CAST(len(list_filter(toks, x -> x IN
+           ('the','a','of','to','and','in','is','on','for','with'))) AS BIGINT)
+           / len(toks) AS stopword_ratio
+  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS toks FROM documents)
+)
+"""
 
 # word-3-gram minhash-LSH over documents (mirror of dedup.minhash_neardup_pairs)
 _DOC_SHINGLES = """
@@ -690,6 +897,14 @@ def _q_builtin_string(spark, sf_dir):
     return sol.select("doc_id", "cat", "w1", "src2", "fmt", "typed", "tagged")
 
 
+def _q_split_leakage(spark, sf_dir):
+    """Train/eval leakage audit: verified near-dup pairs straddling
+    the deterministic corpus_split boundary."""
+    from rdf_n3_spark.operators.curation import split_leakage
+
+    return split_leakage(_docs(spark, sf_dir))
+
+
 def _q_contrastive(spark, sf_dir):
     """Contrastive training-pair mining: verified near-dups as
     positives, band-colliding sub-threshold pairs as hard negatives,
@@ -709,6 +924,30 @@ def _q_contrastive_incremental(spark, sf_dir):
     return contrastive_pairs_incremental(
         docs.where(F.col("doc_id") % 10 == 7),
         docs.where(F.col("doc_id") % 10 != 7))
+
+
+def _q_kmv_merged(spark, sf_dir):
+    """Two half-corpus sketches (doc_id parity split) merged then
+    finished — exercises the persist/merge/estimate split; result must
+    equal sketching the whole corpus (the oracle runs the direct
+    whole-corpus query), proving mergeability end-to-end."""
+    from rdf_n3_spark.operators.sketch import (
+        kmv_estimate,
+        kmv_merge,
+        kmv_sketch,
+    )
+
+    docs = _docs(spark, sf_dir)
+
+    def toks(df):
+        return df.select(
+            "source", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+
+    a = kmv_sketch(toks(docs.where(F.col("doc_id") % 2 == 0)),
+                   "source", F.col("tok"))
+    b = kmv_sketch(toks(docs.where(F.col("doc_id") % 2 == 1)),
+                   "source", F.col("tok"))
+    return kmv_estimate(kmv_merge(a, b, "source"), "source")
 
 
 def _kb(spark, sf_dir):
@@ -771,6 +1010,28 @@ def _q_embedding_incremental(spark, sf_dir):
         embs.where(F.col("vec_id") % 10 == 7),
         embs.where(F.col("vec_id") % 10 != 7),
         threshold=0.35,
+    )
+
+
+def _q_cms_merged(spark, sf_dir):
+    """Two half-corpus count-min sketches (doc_id parity split) merged
+    then probed — the fold is an exact counter sum, so the oracle IS
+    the direct whole-corpus query: a hash-mismatch here would mean the
+    daily→monthly rollup property is broken."""
+    from rdf_n3_spark.operators.sketch import cms_lookup, cms_merge, cms_sketch
+
+    docs = _docs(spark, sf_dir)
+
+    def toks(df):
+        return df.select(
+            F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+
+    a = cms_sketch(toks(docs.where(F.col("doc_id") % 2 == 0)), F.col("tok"))
+    b = cms_sketch(toks(docs.where(F.col("doc_id") % 2 == 1)), F.col("tok"))
+    probes = toks(docs.where(F.col("doc_id") < 3))
+    return (
+        cms_lookup(cms_merge(a, b), probes, F.col("tok"))
+        .withColumnRenamed("v", "tok")
     )
 
 
@@ -994,15 +1255,19 @@ def _q_graph_conclusions(spark, sf_dir):
 
 # The driver's correctness harness checks the FIRST 50 entries of
 # queries() in dict order.  Rotation history: round 3 appended new
-# operators at the tail, round 4 pinned the window to the
-# never-certified block, and round 5 led the window with round 4's
-# overflow plus every round-5 operator, so after CORRECTNESS_r05 every
-# query had a green correctness row in some round's artifact.  Later
-# prunings removed the event-analytics, multimodal, graph-analytics,
-# temporal-KB and text/sketch/sampling/curation families (64 queries
-# remain); each pruning freed window slots for the re-cert slate, which
-# now fills 42 of the 50 rows.
-# tests/test_entry_parity.py::test_driver_window_covers_uncertified
+# operators at the tail (leaving 41 rows driver-unverified), round 4
+# pinned the window to the never-certified block (all 41 went green in
+# CORRECTNESS_r04) but its own 6 newest overflowed.  ROUND 5 completes
+# the rotation: those formerly-overflow queries (cms_freq,
+# relation_triples, kb_void, source_weights, paragraph_neardup) lead
+# the window together with every new round-5 operator, so after
+# CORRECTNESS_r05 every query (144 incl. that round's additions) has a
+# driver-green row in some round's artifact.  The event-analytics and
+# multimodal families were pruned afterwards (127 queries), then the
+# graph-analytics and temporal-KB families (114 queries), then the
+# conversation-curation operators, entity_enrich and kb_signatures
+# (104 queries remain); each pruning frees window slots for the
+# re-cert slate, which now fills 31 of the 50 rows.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
 # pins the invariant.  Rotation contract for FUTURE rounds: genuinely
 # new queries enter at the head of _ROUND_NEW; _RECERTIFY is the
 # priority-ordered re-certification slate (reference §2 surface first,
@@ -1010,13 +1275,19 @@ def _q_graph_conclusions(spark, sf_dir):
 # truncated from the tail so the window stays exactly 50.
 _ROUND_NEW = [
     # round-5 additions enter here, newest first
+    "mention_contexts", "corpus_datasheet",
     "conv_dedup",
     "contrastive_incremental", "contrastive_pairs",
+    "split_leakage",
+    "search_rrf", "search_bm25",
     "label_consistency",
-    "n3_write_nquads", "ann_ivf_multitable",
+    "token_budget_sample",
+    "n3_write_nquads", "token_heavy_hitters",
+    "bloom_decontaminate", "ann_ivf_multitable",
     # the round-4 queries that overflowed CORRECTNESS_r04's window
     # (pytest-oracle green since r4; driver-certified in round 5)
-    "relation_triples", "kb_void",
+    "cms_freq", "relation_triples", "kb_void", "source_weights",
+    "paragraph_neardup",
 ]
 
 #: re-certification slate, priority order (sentinel trio first —
@@ -1033,7 +1304,7 @@ _RECERTIFY = [
     # north-rule pipeline representatives
     "mention_extract", "triple_emit", "entity_agg", "graph_nodes",
     "graph_edges", "entity_agg_salted", "entity_surfaces_salted",
-    "triples_canonical", "kb_diff", "kb_char_sets",
+    "triples_canonical", "kb_diff",
     # heaviest beyond-reference machinery
     "lsh_candidate_pairs", "entity_link_scores", "entity_link_best",
     "dedup_exact", "dedup_minhash", "dedup_jaccard", "dedup_clusters",
@@ -1054,6 +1325,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "transcripts_build": _q_transcripts,
+        "mention_contexts": lambda s, d: mention_contexts(
+            transcripts(s, d)),
+        "corpus_datasheet": lambda s, d: corpus_datasheet(_docs(s, d)),
         "conv_dedup": lambda s, d: conv_dedup(transcripts(s, d)),
         "mention_extract": _q_mentions,
         "triple_emit": _q_mention_triples,
@@ -1102,14 +1376,70 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_multiprobe": lambda s, d: ivf_topk(_embs(s, d), hamming=1),
         "ann_ivf_multitable": lambda s, d: ivf_topk_tables(_embs(s, d)),
         "embed_project": lambda s, d: project_embeddings(_embs(s, d)),
+        "text_stats": lambda s, d: token_stats(_docs(s, d)),
+        "text_quality": lambda s, d: quality_score(_docs(s, d)),
+        "lang_id": lambda s, d: lang_id(_docs(s, d)),
+        "doc_fingerprint": lambda s, d: fingerprint(_docs(s, d)),
+        "text_redact": _q_redact,
+        "text_repetition": _q_repetition,
+        "decontaminate": _q_decontaminate,
+        "pack_sequences": _q_pack,
+        "curate_corpus": _q_curate,
+        "corpus_split": lambda s, d: corpus_split(_docs(s, d)),
+        "doc_chunks": lambda s, d: chunk_documents(_docs(s, d)),
+        "chunk_dedup": lambda s, d: chunk_dedup(_docs(s, d)),
+        "keyword_topk": lambda s, d: keyword_topk(_docs(s, d)),
+        "search_topk": _q_search,
+        "search_bm25": _q_search_bm25,
+        "search_rrf": _q_search_rrf,
+        "kmv_distinct": lambda s, d: kmv_distinct_tokens(_docs(s, d)),
+        "kmv_merged": _q_kmv_merged,
+        "bloom_decontaminate": _q_bloom_decontaminate,
+        # exact corpus-global top tokens via the MG candidate prune —
+        # the oracle computes the full-vocabulary groupBy top-k, so a
+        # candidate-set miss (guarantee violation) would hash-mismatch
+        "token_heavy_hitters": lambda s, d: token_heavy_hitters(_docs(s, d)),
         "n3_write_nquads": _q_nquads,
+        "cms_freq": lambda s, d: cms_token_freq(_docs(s, d)),
+        "cms_merged": _q_cms_merged,
         "embedding_incremental": _q_embedding_incremental,
         "relation_candidates": _q_relations,
         "relation_triples": _q_relation_triples,
         "kb_char_sets": _q_kb_char_sets,
         "kb_void": _q_kb_void,
         "kb_star_card": _q_kb_star_card,
+        "corpus_sample": lambda s, d: corpus_sample(_docs(s, d), pct=10),
+        "stratified_sample": lambda s, d: stratified_sample(
+            _docs(s, d), {"en": 5, "zh": 60}, default_pct=20),
+        "shuffle_shards": lambda s, d: shuffle_shards(_docs(s, d), n_shards=8),
+        "source_mix": lambda s, d: source_mix(_docs(s, d)),
+        "source_weights": lambda s, d: source_weights(_docs(s, d)),
+        # α=0.5 weights actuated: histogram-threshold token-budget
+        # selection (no per-source corpus sort)
+        "token_budget_sample": lambda s, d: token_budget_sample(
+            _docs(s, d), 20000, buckets=256),
+        "split_leakage": _q_split_leakage,
         "contrastive_pairs": _q_contrastive,
+        "lm_score": lambda s, d: lm_score(_docs(s, d)),
+        "hash_embed": lambda s, d: hash_embed(_docs(s, d)),
+        # min_stop=1: the synthetic vocabulary carries ~1 Gopher stop
+        # word per doc, so the paper's floor of 2 would zero the row
+        "gopher_quality": lambda s, d: gopher_quality(_docs(s, d), min_stop=1),
+        # the raw synthetic corpus is newline-free and all-unique, so
+        # the gate input is a deterministic self-union: docs < 50
+        # duplicated at offset ids — both verdict branches exercised
+        "paragraph_neardup": lambda s, d: paragraph_neardup(_docs(s, d)),
+        "paragraph_dedup": lambda s, d: paragraph_dedup(
+            _docs(s, d).select("doc_id", "text").unionByName(
+                _docs(s, d).where(F.col("doc_id") < 50).select(
+                    (F.col("doc_id") + 10000).alias("doc_id"), "text"))),
+        "boilerplate_ngrams": lambda s, d: boilerplate_ngrams(
+            _docs(s, d), n=3, min_docs=5),
+        "boilerplate_share": lambda s, d: boilerplate_share(
+            _docs(s, d), n=3, min_docs=5),
+        "substring_spans": lambda s, d: dup_spans(_docs(s, d), k=8),
+        "substring_dedup": lambda s, d: substring_dup_stats(
+            _docs(s, d), k=8, max_dup_pct=50),
         "dedup_source_matrix": lambda s, d: source_dup_matrix(_docs(s, d)),
         "dedup_incremental": lambda s, d: incremental_neardup(
             _docs(s, d).where(F.col("doc_id") % 10 == 7),
@@ -1125,6 +1455,73 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _embs(s, d), per_cluster=60),
     }
 
+
+# content-defined chunking (curation.chunk_documents) as a reusable
+# fragment: cut-flag per token position + prefix-sum chunk ids
+_CHUNKS_SQL = """
+            WITH toks AS (
+              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+            ), pos AS (
+              SELECT doc_id, i, t[i] AS tok,
+                     CASE WHEN i >= 3 AND i < len(t)
+                          AND ('0x' || substr(md5(array_to_string(t[i-2:i], ' ')), 1, 8))::BIGINT
+                              % 16 = 0
+                     THEN 1 ELSE 0 END AS cut
+              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i)
+            ), chunks AS (
+            SELECT doc_id,
+                   CAST(chunk_idx AS INT) AS chunk_idx,
+                   string_agg(tok, ' ' ORDER BY i) AS chunk,
+                   CAST(count(*) AS BIGINT) AS n_tokens
+            FROM (SELECT doc_id, i, tok,
+                         coalesce(sum(cut) OVER (PARTITION BY doc_id ORDER BY i
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                                  0) AS chunk_idx
+                  FROM pos)
+            GROUP BY doc_id, chunk_idx
+            )
+"""
+
+
+# mirrors operators.sketch: bottom-k md5 per source, estimate = ONE
+# double division of exactly-representable ints ((k-1)·2^60 / kth) —
+# IEEE-identical across engines; shared by kmv_distinct AND kmv_merged
+# (merging two half-corpus sketches equals sketching the whole corpus)
+# mirrors operators.sketch count-min: row-d cell of tok =
+# md5("d:tok") nibbles 1-15 as bigint mod 8192; estimate = min over
+# the 4 rows — integer-exact in both engines; shared by cms_freq AND
+# cms_merged (an elementwise-sum merge of two half-corpus sketches
+# answers probes identically to the whole-corpus sketch)
+_CMS_SQL = """
+    WITH ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
+    toks AS (
+      SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
+    ),
+    cells AS (
+      SELECT d,
+             CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || tok), 1, 15)
+                  AS BIGINT) % 8192 AS col,
+             count(*) AS cnt
+      FROM toks CROSS JOIN ds
+      GROUP BY 1, 2
+    ),
+    probes AS (
+      SELECT DISTINCT tok FROM (
+        SELECT unnest(string_split(lower(text), ' ')) AS tok
+        FROM documents WHERE doc_id < 3
+      )
+    ),
+    pcells AS (
+      SELECT p.tok, ds.d,
+             CAST('0x' || substr(md5(CAST(ds.d AS VARCHAR) || ':' || p.tok), 1, 15)
+                  AS BIGINT) % 8192 AS col
+      FROM probes p CROSS JOIN ds
+    )
+    SELECT pc.tok AS tok,
+           CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est_count
+    FROM pcells pc LEFT JOIN cells c USING (d, col)
+    GROUP BY pc.tok
+"""
 
 # shared mention-pair / middle-span CTE chain for the relation
 # oracles (the max_gap literal — gap 3 -> b.pos - a.pos <= 4 —
@@ -1150,6 +1547,125 @@ _REL_LAB = f"""
         ON p.conv_id = t.conv_id AND p.turn_idx = t.turn_idx
     )
 """
+
+_SEARCH_TOPK_SQL = """
+            WITH toks AS (
+              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+              FROM documents
+            ),
+            tf AS (SELECT doc_id, token, count(*) AS tf
+                   FROM toks GROUP BY doc_id, token),
+            df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+            n AS (SELECT count(*) AS n_docs FROM documents),
+            idf AS (SELECT token, (n_docs * 1000) // df AS idf_int
+                    FROM df, n),
+            q AS (
+              SELECT doc_id AS query_id,
+                     array_to_string(
+                       list_slice(string_split(lower(text), ' '), 1, 3),
+                       ' ') AS qtext
+              FROM documents WHERE doc_id < 20
+            ),
+            qtok AS (
+              SELECT DISTINCT query_id,
+                     unnest(string_split(lower(qtext), ' ')) AS token
+              FROM q
+            ),
+            scored AS (
+              SELECT query_id, tf.doc_id,
+                     CAST(sum(tf.tf * idf.idf_int) AS BIGINT) AS score
+              FROM qtok JOIN tf USING (token) JOIN idf USING (token)
+              GROUP BY query_id, tf.doc_id
+            ),
+            r AS (
+              SELECT query_id,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY score DESC, doc_id ASC) AS rank,
+                     doc_id, score
+              FROM scored
+            )
+            SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
+            FROM r WHERE rank <= 10
+"""
+
+_SEARCH_BM25_SQL = """
+            WITH toks AS (
+              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+              FROM documents
+            ),
+            tf AS (SELECT doc_id, token, count(*) AS tf
+                   FROM toks GROUP BY doc_id, token),
+            dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
+            df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+            n AS (SELECT count(*) AS n_docs FROM documents),
+            a AS (SELECT ((SELECT sum(dl) FROM dl) * 1000) // n_docs
+                    AS avgdl_milli
+                  FROM n),
+            idf AS (SELECT token, (n_docs * 1000) // df AS idf_int
+                    FROM df, n),
+            q AS (
+              SELECT doc_id AS query_id,
+                     array_to_string(
+                       list_slice(string_split(lower(text), ' '), 1, 3),
+                       ' ') AS qtext
+              FROM documents WHERE doc_id < 20
+            ),
+            qtok AS (
+              SELECT DISTINCT query_id,
+                     unnest(string_split(lower(qtext), ' ')) AS token
+              FROM q
+            ),
+            scored AS (
+              SELECT query_id, tf.doc_id,
+                     CAST(sum(idf.idf_int * (
+                       (tf.tf * 2200 * 1000000) //
+                       (tf.tf * 1000000 +
+                        (1200 * (250000 +
+                          (750 * ((dl.dl * 1000000000) // a.avgdl_milli))
+                          // 1000)) // 1000)
+                     )) AS BIGINT) AS score
+              FROM qtok JOIN tf USING (token) JOIN idf USING (token)
+                   JOIN dl ON tf.doc_id = dl.doc_id, a
+              GROUP BY query_id, tf.doc_id
+            ),
+            r AS (
+              SELECT query_id,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY score DESC, doc_id ASC) AS rank,
+                     doc_id, score
+              FROM scored
+            )
+            SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
+            FROM r WHERE rank <= 10
+"""
+
+
+_KMV_SQL = """
+    WITH toks AS (
+      SELECT source, unnest(string_split(lower(text), ' ')) AS tok
+      FROM documents
+    ),
+    h AS (SELECT DISTINCT source, md5(tok) AS h FROM toks),
+    r AS (
+      SELECT source, h,
+             row_number() OVER (PARTITION BY source ORDER BY h) AS rk
+      FROM h
+    ),
+    tk AS (
+      SELECT source, count(*) AS n_seen, max(h) AS max_h
+      FROM r WHERE rk <= 64 GROUP BY source
+    )
+    SELECT source, n_seen,
+           CASE WHEN n_seen >= 64 THEN max_h END AS kth_hash,
+           CASE WHEN n_seen < 64 THEN CAST(n_seen AS BIGINT)
+                ELSE CAST(floor(
+                  63.0 * 1152921504606846976.0
+                  / CAST('0x' || substr(max_h, 1, 15) AS BIGINT)
+                ) AS BIGINT)
+           END AS est_distinct
+    FROM tk
+"""
+
 
 def oracle_sql() -> dict[str, str]:
     d = {
@@ -1182,6 +1698,46 @@ def oracle_sql() -> dict[str, str]:
         "mention_extract": f"""
             {_MENTIONS}
             SELECT conv_id, turn_idx, pos, surface, norm FROM mentions
+        """,
+        # mirrors mentions.mention_contexts: the zipped unnest keeps
+        # the token list in-row, contexts are 1-based list slices
+        # ([pos+1-w .. pos] and [pos+2 .. pos+1+w], w=3) so no join
+        # back to the turn text
+        "mention_contexts": f"""
+            WITH {_T},
+            toks AS (
+              SELECT conv_id, turn_idx,
+                     string_split(text, ' ') AS tk,
+                     unnest(generate_series(1,
+                         len(string_split(text, ' ')))) - 1 AS pos,
+                     unnest(string_split(text, ' ')) AS surface
+              FROM transcripts
+            )
+            SELECT conv_id, turn_idx, CAST(pos AS INT) AS pos, surface,
+                   lower(surface) AS norm,
+                   array_to_string(
+                     tk[greatest(pos + 1 - 3, 1) : pos], ' ')
+                     AS left_ctx,
+                   array_to_string(tk[pos + 2 : pos + 4], ' ')
+                     AS right_ctx
+            FROM toks
+            WHERE regexp_matches(surface, '^(?i)(part|supp)_[a-z0-9]+$')
+        """,
+        # mirrors curation.corpus_datasheet: one (source, lang)
+        # aggregate, all exact integers, dup rate via distinct md5
+        "corpus_datasheet": """
+            SELECT source, lang,
+                   CAST(count(*) AS BIGINT) AS n_docs,
+                   CAST(count(DISTINCT md5(text)) AS BIGINT)
+                     AS n_unique_texts,
+                   CAST(sum(CASE WHEN length(text) < 200
+                            THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
+                   CAST(sum(length(text)) AS BIGINT) AS total_chars,
+                   CAST(sum(len(string_split(lower(text), ' ')))
+                        AS BIGINT) AS total_tokens,
+                   CAST(max(length(text)) AS BIGINT) AS max_chars
+            FROM documents
+            GROUP BY source, lang
         """,
         "triple_emit": f"""
             {_MENTIONS},
@@ -1813,6 +2369,35 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
         # component min via recursive reachability (sym edges), then
         # every document labeled; Spark runs distributed min-label CC
         # over the identical edges, so the fixpoints agree exactly.
+        # mirrors curation.paragraph_neardup: the dedup_clusters CC
+        # oracle run over posexploded paragraphs under the packed
+        # pid = doc_id·2^20 + para_idx, decoded back at the end
+        "paragraph_neardup": f"""
+            WITH RECURSIVE paras AS (
+              SELECT doc_id * 1048576 + pos AS doc_id, para AS text
+              FROM (
+                SELECT doc_id,
+                       unnest(generate_series(1, len(string_split(text, chr(10))))) - 1 AS pos,
+                       unnest(string_split(text, chr(10))) AS para
+                FROM documents
+              )
+              WHERE len(trim(para)) > 0 AND pos < 1048576
+            ),
+            {_DOC_SHINGLES.replace("WITH ", "", 1).replace("FROM documents)", "FROM paras)")},
+            sym AS (SELECT a, b FROM ver
+                    UNION ALL SELECT b AS a, a AS b FROM ver),
+            reach(node, lbl) AS (
+              SELECT doc_id, doc_id FROM paras
+              UNION
+              SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node
+            )
+            SELECT node // 1048576 AS doc_id,
+                   CAST(node % 1048576 AS INT) AS para_idx,
+                   min(lbl) // 1048576 AS survivor_doc,
+                   CAST(min(lbl) % 1048576 AS INT) AS survivor_para,
+                   CAST(min(lbl) <> node AS INT) AS is_dup
+            FROM reach GROUP BY node
+        """,
         "dedup_clusters": f"""
             {_DOC_SHINGLES.replace("WITH ", "WITH RECURSIVE ", 1)},
             sym AS (SELECT a, b FROM ver
@@ -2024,6 +2609,291 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             )
             SELECT q, CAST(rank AS INT) AS rank, vec_id, cos FROM ranked WHERE rank <= 10
         """,
+        "text_stats": f"""
+            {_TOKSTATS}
+            SELECT doc_id, n_tokens, n_bpe_tokens, n_chars,
+                   avg_token_len, stopword_ratio FROM stats
+        """,
+        "text_quality": f"""
+            {_TOKSTATS}
+            SELECT doc_id,
+                   (CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN 1.0 ELSE 0.3 END) * 0.4
+                 + (CASE WHEN stopword_ratio BETWEEN 0.02 AND 0.5 THEN 1.0 ELSE 0.5 END) * 0.3
+                 + (CASE WHEN avg_token_len BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.5 END) * 0.3
+                 AS quality
+            FROM stats
+        """,
+        "lang_id": f"""
+            {_TOKSTATS}
+            SELECT doc_id,
+                   CASE WHEN stopword_ratio > 0.05 THEN 'en' ELSE 'unk' END AS lang_guess
+            FROM stats
+        """,
+        # mirrors functions.text.lm_score: corpus bigram LM, mean
+        # ln(c(bigram)/c(prefix)) per doc, 6-decimal round
+        "lm_score": """
+            WITH toks AS (
+              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+            ), big AS (
+              SELECT doc_id, t[i] AS w1, t[i] || ' ' || t[i + 1] AS bg
+              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
+              WHERE len(t) >= 2
+            ),
+            bgc AS (SELECT bg, count(*) AS c_bg FROM big GROUP BY bg),
+            w1c AS (SELECT w1, count(*) AS c_w1 FROM big GROUP BY w1),
+            tot AS (SELECT count(*) AS n_total FROM big),
+            sc AS (
+              SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+                     round(avg(ln(CAST(c_bg AS DOUBLE) / c_w1)), 6) AS avg_logprob,
+                     round(avg(ln(CAST(c_bg AS DOUBLE) / n_total)), 6) AS avg_logfreq
+              FROM big JOIN bgc USING (bg) JOIN w1c USING (w1) CROSS JOIN tot
+              GROUP BY doc_id
+            )
+            SELECT d.doc_id,
+                   CAST(coalesce(sc.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+                   sc.avg_logprob, sc.avg_logfreq
+            FROM documents d LEFT JOIN sc USING (doc_id)
+        """,
+        # mirrors functions.text.redact: identical patterns (Java ∩ RE2
+        # subset), identical URL → EMAIL → PHONE stage order, each count
+        # taken on the PRIOR stage's output
+        "text_redact": r"""
+            WITH enr AS (
+              SELECT doc_id,
+                     text || ' contact user' || CAST(doc_id AS VARCHAR)
+                          || '@example.com via https://site.example/d/'
+                          || CAST(doc_id AS VARCHAR)
+                          || ' or call +1 555 000 '
+                          || lpad(CAST(doc_id AS VARCHAR), 4, '0') AS t0
+              FROM documents
+            ),
+            s1 AS (
+              SELECT doc_id,
+                     regexp_replace(t0, 'https?://\S+', '<URL>', 'g') AS t1,
+                     len(regexp_extract_all(t0, 'https?://\S+')) AS n_urls
+              FROM enr
+            ),
+            s2 AS (
+              SELECT doc_id, n_urls,
+                     regexp_replace(t1, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t2,
+                     len(regexp_extract_all(t1, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails
+              FROM s1
+            )
+            SELECT doc_id,
+                   regexp_replace(t2, '\+?\d[\d -]{6,}\d', '<PHONE>', 'g') AS redacted,
+                   n_urls, n_emails,
+                   len(regexp_extract_all(t2, '\+?\d[\d -]{6,}\d')) AS n_phones
+            FROM s2
+        """,
+        # mirrors functions.text.repetition_stats over the same
+        # deterministically-enriched two-line corpus as _q_repetition
+        "text_repetition": r"""
+            WITH enr AS (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 3 = 0 THEN text || chr(10) || text
+                          ELSE text || chr(10) || substr(text, 1, 29) END AS t
+              FROM documents
+            ),
+            bound AS (
+              SELECT doc_id,
+                     string_split(t, chr(10)) AS lines,
+                     regexp_split_to_array(lower(t), '[ \n]+') AS toks
+              FROM enr
+            ),
+            per_doc AS (
+              SELECT doc_id,
+                     (len(lines) - len(list_distinct(lines))) / len(lines) AS dup_line_frac,
+                     (len(toks) - len(list_distinct(toks))) / len(toks) AS dup_word_frac,
+                     toks
+              FROM bound
+            ),
+            bg AS (
+              SELECT doc_id,
+                     unnest(list_transform(
+                       generate_series(1, greatest(len(toks) - 1, 1)),
+                       i -> array_to_string(list_slice(toks, i, i + 1), ' ')
+                     )) AS bg
+              FROM per_doc
+            ),
+            bgc AS (SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY doc_id, bg),
+            bgs AS (
+              SELECT doc_id,
+                     (sum(c) - count(*)) / sum(c) AS dup_bigram_frac,
+                     max(c) / sum(c) AS top_bigram_frac
+              FROM bgc GROUP BY doc_id
+            )
+            SELECT p.doc_id, dup_line_frac, dup_word_frac,
+                   dup_bigram_frac, top_bigram_frac
+            FROM per_doc p JOIN bgs USING (doc_id)
+        """,
+        # mirrors curation.decontaminate with the 5% eval split of
+        # _q_decontaminate (n=4 word-grams, left join → 0-hit rows kept)
+        "decontaminate": """
+            WITH grams AS (
+              SELECT doc_id,
+                     unnest(list_distinct(list_transform(
+                       generate_series(1, greatest(len(string_split(lower(text), ' ')) - 3, 1)),
+                       i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 3), ' ')
+                     ))) AS g
+              FROM documents
+            ),
+            bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 7),
+            hits AS (
+              SELECT doc_id, count(*) AS c
+              FROM grams JOIN bench USING (g)
+              WHERE doc_id % 20 <> 7
+              GROUP BY doc_id
+            )
+            SELECT d.doc_id,
+                   CAST(coalesce(c, 0) AS BIGINT) AS n_hits,
+                   coalesce(c, 0) > 0 AS contaminated
+            FROM documents d LEFT JOIN hits USING (doc_id)
+            WHERE d.doc_id % 20 <> 7
+        """,
+        # mirrors sketch.bloom_decontaminate (n=4, m=8192, k=3; 63-bit
+        # words): ONE filter over the whole benchmark — the Spark side
+        # folds two shard filters, and the exact bit_or merge makes the
+        # tables identical, so this row certifies build+merge+probe
+        "bloom_decontaminate": """
+            WITH grams AS (
+              SELECT DISTINCT doc_id, g FROM (
+                SELECT doc_id,
+                       unnest(list_transform(
+                         generate_series(1, greatest(len(string_split(lower(text), ' ')) - 3, 1)),
+                         i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 3), ' ')
+                       )) AS g
+                FROM documents)
+            ),
+            bpos AS (
+              SELECT (('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || g), 1, 15))::BIGINT % 8192) AS pos
+              FROM (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 7),
+                   (SELECT unnest([0, 1, 2]) AS i)
+            ),
+            filt AS (
+              SELECT pos // 63 AS word,
+                     bit_or(1::BIGINT << CAST(pos % 63 AS INT)) AS bits
+              FROM bpos GROUP BY 1
+            ),
+            cg AS (SELECT doc_id, g FROM grams WHERE doc_id % 20 <> 7),
+            ppos AS (
+              SELECT g, (('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || g), 1, 15))::BIGINT % 8192) AS pos
+              FROM (SELECT DISTINCT g FROM cg), (SELECT unnest([0, 1, 2]) AS i)
+            ),
+            need AS (
+              SELECT g, pos // 63 AS word,
+                     bit_or(1::BIGINT << CAST(pos % 63 AS INT)) AS need
+              FROM ppos GROUP BY 1, 2
+            ),
+            hitw AS (
+              SELECT g, CASE WHEN (coalesce(bits, 0) & need) = need
+                             THEN 1 ELSE 0 END AS h
+              FROM need LEFT JOIN filt USING (word)
+            ),
+            verd AS (SELECT g, min(h) AS mp FROM hitw GROUP BY g)
+            SELECT c.doc_id, CAST(sum(mp) AS BIGINT) AS n_hits,
+                   sum(mp) > 0 AS contaminated
+            FROM cg c JOIN verd USING (g) GROUP BY c.doc_id
+        """,
+        # mirrors sketch.token_heavy_hitters (k=20): the oracle does
+        # the full-vocabulary exact top-k — the Spark side's MG
+        # candidate prune must be result-invisible to hash-match
+        "token_heavy_hitters": """
+            WITH toks AS (
+              SELECT unnest(string_split(lower(text), ' ')) AS v
+              FROM documents
+            ),
+            cnt AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY v)
+            SELECT v, n,
+                   CAST(row_number() OVER (ORDER BY n DESC, v) AS INT) AS rank
+            FROM cnt QUALIFY rank <= 20
+        """,
+        # mirrors curation.paragraph_dedup over the same self-union
+        # (docs < 50 duplicated at +10000 ids): corpus-first occurrence
+        # of each paragraph hash survives, every other copy is_dup=1
+        "paragraph_dedup": """
+            WITH corpus AS (
+              SELECT doc_id, text FROM documents
+              UNION ALL
+              SELECT doc_id + 10000 AS doc_id, text FROM documents
+              WHERE doc_id < 50
+            ), paras AS (
+              SELECT doc_id, CAST(i - 1 AS INT) AS para_idx, md5(p[i]) AS h
+              FROM (SELECT doc_id, string_split(text, chr(10)) AS p FROM corpus),
+                   LATERAL (SELECT unnest(generate_series(1, len(p))) AS i)
+              WHERE len(trim(p[i])) > 0
+            ), firsts AS (
+              SELECT h, n, doc_id AS fdoc, para_idx AS fidx FROM (
+                SELECT h, doc_id, para_idx,
+                       count(*) OVER (PARTITION BY h) AS n,
+                       row_number() OVER (PARTITION BY h
+                                          ORDER BY doc_id, para_idx) AS rn
+                FROM paras) WHERE rn = 1
+            )
+            SELECT p.doc_id, p.para_idx,
+                   CAST(CASE WHEN f.n > 1
+                              AND NOT (p.doc_id = f.fdoc
+                                       AND p.para_idx = f.fidx)
+                        THEN 1 ELSE 0 END AS INT) AS is_dup
+            FROM paras p JOIN firsts f USING (h)
+        """,
+        # mirrors functions.text.gopher_quality (Rae et al. 2021 §A1.1
+        # rules; replace-length trick for # / ... counts)
+        "gopher_quality": """
+            WITH base AS (
+              SELECT doc_id, text,
+                     string_split(lower(text), ' ') AS t,
+                     string_split(text, chr(10)) AS lines
+              FROM documents
+            ), sig AS (
+              SELECT doc_id,
+                     CAST(len(t) AS BIGINT) AS n_words,
+                     CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)
+                       / len(t) AS mean_word_len,
+                     CAST(len(list_filter(t, x -> regexp_matches(x, '[a-z]')))
+                          AS DOUBLE) / len(t) AS frac_alpha_words,
+                     (len(text) - len(replace(text, '#', ''))
+                      + (len(text) - len(replace(text, '...', ''))) / 3.0)
+                       / len(t) AS symbol_ratio,
+                     CAST(len(list_filter(lines,
+                          l -> left(l, 1) = '-' OR left(l, 1) = '*'))
+                          AS DOUBLE) / len(lines) AS bullet_frac,
+                     CAST(len(list_filter(lines, l -> right(l, 3) = '...'))
+                          AS DOUBLE) / len(lines) AS ellipsis_frac,
+                     CAST(len(list_filter(
+                          ['the','be','to','of','and','that','have','with'],
+                          w -> list_contains(t, w))) AS BIGINT) AS n_stop_present
+              FROM base
+            )
+            SELECT *,
+                   CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+                              AND mean_word_len BETWEEN 3 AND 10
+                              AND frac_alpha_words >= 0.8
+                              AND symbol_ratio <= 0.1
+                              AND bullet_frac <= 0.9
+                              AND ellipsis_frac <= 0.3
+                              AND n_stop_present >= 1
+                        THEN 1 ELSE 0 END AS INT) AS keep
+            FROM sig
+        """,
+        # mirrors functions.text.hash_embed (dims=64, ±1 sign hash,
+        # zero-sum dims dropped)
+        "hash_embed": """
+            WITH tok AS (
+              SELECT doc_id,
+                     md5('hembed-v1|' || unnest(string_split(lower(text), ' '))) AS h
+              FROM documents
+            ), keyed AS (
+              SELECT doc_id,
+                     ('0x' || substr(h, 1, 8))::BIGINT % 64 AS dim,
+                     CASE WHEN substr(h, 9, 1) IN
+                          ('8','9','a','b','c','d','e','f')
+                     THEN 1 ELSE -1 END AS v
+              FROM tok
+            )
+            SELECT doc_id, CAST(dim AS BIGINT) AS dim,
+                   CAST(sum(v) AS BIGINT) AS value
+            FROM keyed GROUP BY doc_id, dim HAVING sum(v) <> 0
+        """,
         # mirrors dedup.contrastive_pairs: the same banded candidate
         # set, labeled by exact integer-arithmetic Jaccard bands
         # (100·|∩| vs pct·|∪| — no float comparison anywhere)
@@ -2046,6 +2916,466 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             SELECT a AS doc_a, b AS doc_b,
                    CAST((100 * inter) // uni AS BIGINT) AS j_pct, label
             FROM lab WHERE label IS NOT NULL
+        """,
+        # mirrors curation.split_leakage: the dedup_minhash verified
+        # pair set joined to the corpus_split assignment, cross-split
+        # pairs only
+        "split_leakage": f"""
+            {_DOC_SHINGLES},
+            spl AS (
+              SELECT doc_id,
+                     CASE WHEN b < 90 THEN 'train'
+                          WHEN b < 95 THEN 'val'
+                          ELSE 'test' END AS split
+              FROM (SELECT doc_id,
+                           ('0x' || substr(md5('split-v1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                             % 100 AS b
+                    FROM documents))
+            SELECT v.a AS doc_a, sa.split AS split_a,
+                   v.b AS doc_b, sb.split AS split_b
+            FROM ver v
+            JOIN spl sa ON sa.doc_id = v.a
+            JOIN spl sb ON sb.doc_id = v.b
+            WHERE sa.split <> sb.split
+        """,
+        # mirrors curation.boilerplate_ngrams (n=3 word-grams, DF >= 5):
+        # per-doc DISTINCT shingles, so count(*) IS document frequency
+        "boilerplate_ngrams": """
+            WITH grams AS (
+              SELECT doc_id,
+                     unnest(list_distinct(list_transform(
+                       generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 1)),
+                       i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')
+                     ))) AS gram
+              FROM documents
+            )
+            SELECT gram, CAST(count(*) AS BIGINT) AS doc_freq,
+                   min(doc_id) AS first_doc
+            FROM grams GROUP BY gram HAVING count(*) >= 5
+        """,
+        # mirrors curation.boilerplate_share (same mined set, left join
+        # back onto every document's distinct grams)
+        "boilerplate_share": """
+            WITH grams AS (
+              SELECT doc_id,
+                     unnest(list_distinct(list_transform(
+                       generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 1)),
+                       i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')
+                     ))) AS gram
+              FROM documents
+            ),
+            boiler AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 5)
+            SELECT g.doc_id,
+                   CAST(count(*) AS BIGINT) AS n_grams,
+                   CAST(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
+                   round(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS boiler_share
+            FROM grams g LEFT JOIN boiler b USING (gram)
+            GROUP BY g.doc_id
+        """,
+        # mirrors substrings.dup_spans (k=8 token windows): duplicated
+        # k-grams → per-doc gaps-and-islands interval merge
+        "substring_spans": """
+            WITH toks AS (
+              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+            ), g AS (
+              SELECT doc_id, i AS pos,
+                     md5(array_to_string(list_slice(t, i, i + 7), ' ')) AS gram_hash
+              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i)
+              WHERE len(t) >= 8
+            ), dup AS (
+              SELECT gram_hash FROM g GROUP BY 1 HAVING count(*) > 1
+            ), hits AS (
+              SELECT g.doc_id, g.pos AS s, g.pos + 7 AS e
+              FROM g JOIN dup USING (gram_hash)
+            ), isl AS (
+              SELECT doc_id, s, e,
+                     CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
+                          THEN 1 ELSE 0 END AS ni
+              FROM hits
+              WINDOW w AS (PARTITION BY doc_id ORDER BY s
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+            ), isl2 AS (
+              SELECT doc_id, s, e,
+                     sum(ni) OVER (PARTITION BY doc_id ORDER BY s
+                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS island
+              FROM isl
+            )
+            SELECT doc_id,
+                   CAST(min(s) AS BIGINT) AS span_start,
+                   CAST(max(e) AS BIGINT) AS span_end,
+                   CAST(max(e) - min(s) + 1 AS BIGINT) AS span_len
+            FROM isl2 GROUP BY doc_id, island
+        """,
+        # mirrors substrings.substring_dup_stats (k=8, max_dup_pct=50):
+        # span coverage per doc, integer keep test
+        "substring_dedup": """
+            WITH toks AS (
+              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+            ), g AS (
+              SELECT doc_id, i AS pos,
+                     md5(array_to_string(list_slice(t, i, i + 7), ' ')) AS gram_hash
+              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i)
+              WHERE len(t) >= 8
+            ), dup AS (
+              SELECT gram_hash FROM g GROUP BY 1 HAVING count(*) > 1
+            ), hits AS (
+              SELECT g.doc_id, g.pos AS s, g.pos + 7 AS e
+              FROM g JOIN dup USING (gram_hash)
+            ), isl AS (
+              SELECT doc_id, s, e,
+                     CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
+                          THEN 1 ELSE 0 END AS ni
+              FROM hits
+              WINDOW w AS (PARTITION BY doc_id ORDER BY s
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+            ), isl2 AS (
+              SELECT doc_id, s, e,
+                     sum(ni) OVER (PARTITION BY doc_id ORDER BY s
+                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS island
+              FROM isl
+            ), spans AS (
+              SELECT doc_id, max(e) - min(s) + 1 AS span_len
+              FROM isl2 GROUP BY doc_id, island
+            ), per_doc AS (
+              SELECT doc_id, sum(span_len) AS dup_tokens FROM spans GROUP BY doc_id
+            )
+            SELECT d.doc_id,
+                   CAST(len(string_split(lower(d.text), ' ')) AS BIGINT) AS total_tokens,
+                   CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
+                   CAST(CASE WHEN coalesce(p.dup_tokens, 0) * 100
+                                  <= 50 * len(string_split(lower(d.text), ' '))
+                        THEN 1 ELSE 0 END AS INT) AS keep
+            FROM documents d LEFT JOIN per_doc p USING (doc_id)
+        """,
+        # mirrors curation.pack_sequences (capacity 256, 8 shards):
+        # the greedy per-shard scan as a recursive CTE over rn
+        "pack_sequences": """
+            WITH RECURSIVE counted AS (
+              SELECT doc_id,
+                     CAST(doc_id % 8 AS BIGINT) AS shard,
+                     CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+                     row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
+              FROM documents
+            ),
+            packed AS (
+              SELECT shard, rn, doc_id, n_tokens,
+                     CAST(0 AS BIGINT) AS bin_idx, CAST(0 AS BIGINT) AS bin_offset
+              FROM counted WHERE rn = 1
+              UNION ALL
+              SELECT c.shard, c.rn, c.doc_id, c.n_tokens,
+                     CASE WHEN p.bin_offset + p.n_tokens > 0
+                               AND p.bin_offset + p.n_tokens + c.n_tokens > 256
+                          THEN p.bin_idx + 1 ELSE p.bin_idx END,
+                     CASE WHEN p.bin_offset + p.n_tokens > 0
+                               AND p.bin_offset + p.n_tokens + c.n_tokens > 256
+                          THEN CAST(0 AS BIGINT) ELSE p.bin_offset + p.n_tokens END
+              FROM counted c JOIN packed p ON c.shard = p.shard AND c.rn = p.rn + 1
+            )
+            SELECT doc_id, shard, bin_idx, bin_offset, n_tokens FROM packed
+        """,
+        # mirrors curation.curate_corpus: the five signal fragments are
+        # the same SQL the individual oracle rows use (near-dup = the
+        # dedup_clusters recursive CC over the shared _DOC_SHINGLES
+        # pair set), combined into one keep/drop decision
+        "curate_corpus": f"""
+            {_DOC_SHINGLES.replace("WITH ", "WITH RECURSIVE ", 1)},
+            sym AS (SELECT a, b FROM ver
+                    UNION ALL SELECT b AS a, a AS b FROM ver),
+            reach(node, lbl) AS (
+              SELECT doc_id, doc_id FROM documents
+              UNION
+              SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node
+            ),
+            clus AS (
+              SELECT node AS doc_id, min(lbl) <> node AS is_near_dup
+              FROM reach GROUP BY node
+            ),
+            exd AS (
+              SELECT doc_id,
+                     doc_id <> min(doc_id) OVER (PARTITION BY md5(text))
+                       AS is_exact_dup
+              FROM documents
+            ),
+            grams AS (
+              SELECT doc_id,
+                     unnest(list_distinct(list_transform(
+                       generate_series(1, greatest(len(string_split(lower(text), ' ')) - 3, 1)),
+                       i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 3), ' ')
+                     ))) AS g
+              FROM documents
+            ),
+            bgrams AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 7),
+            hits AS (
+              SELECT doc_id, count(*) AS c
+              FROM grams JOIN bgrams USING (g) GROUP BY doc_id
+            ),
+            stats AS (
+              SELECT doc_id,
+                     CAST(len(toks) AS BIGINT) AS n_tokens,
+                     CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT)
+                       / len(toks) AS avg_token_len,
+                     CAST(len(list_filter(toks, x -> x IN
+                       ('the','a','of','to','and','in','is','on','for','with'))) AS BIGINT)
+                       / len(toks) AS stopword_ratio
+              FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
+            ),
+            qual AS (
+              SELECT doc_id,
+                     ((CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN 1.0 ELSE 0.3 END) * 0.4
+                    + (CASE WHEN stopword_ratio BETWEEN 0.02 AND 0.5 THEN 1.0 ELSE 0.5 END) * 0.3
+                    + (CASE WHEN avg_token_len BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.5 END) * 0.3)
+                       < 0.9 AS low_quality
+              FROM stats
+            ),
+            bgx AS (
+              SELECT doc_id,
+                     unnest(list_transform(
+                       generate_series(1, greatest(len(toks) - 1, 1)),
+                       i -> array_to_string(list_slice(toks, i, i + 1), ' ')
+                     )) AS bg
+              FROM (SELECT doc_id,
+                           regexp_split_to_array(lower(text), '[ \n]+') AS toks
+                    FROM documents)
+            ),
+            bgc AS (SELECT doc_id, bg, count(*) AS c FROM bgx GROUP BY doc_id, bg),
+            rep AS (
+              SELECT doc_id,
+                     (max(c) / sum(c)) > 0.08 AND sum(c) > count(*) AS repetitive
+              FROM bgc GROUP BY doc_id
+            )
+            SELECT d.doc_id, exd.is_exact_dup, clus.is_near_dup,
+                   coalesce(hits.c, 0) > 0 AS contaminated,
+                   qual.low_quality, rep.repetitive,
+                   NOT (exd.is_exact_dup OR clus.is_near_dup
+                        OR coalesce(hits.c, 0) > 0
+                        OR qual.low_quality OR rep.repetitive) AS keep
+            FROM documents d
+            JOIN exd USING (doc_id)
+            JOIN clus USING (doc_id)
+            LEFT JOIN hits USING (doc_id)
+            JOIN qual USING (doc_id)
+            JOIN rep USING (doc_id)
+        """,
+        # mirrors curation.corpus_split (seeded md5 bucket mod 100)
+        "corpus_split": """
+            SELECT doc_id,
+                   CASE WHEN b < 90 THEN 'train'
+                        WHEN b < 95 THEN 'val'
+                        ELSE 'test' END AS split
+            FROM (SELECT doc_id,
+                         ('0x' || substr(md5('split-v1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                           % 100 AS b
+                  FROM documents)
+        """,
+        # mirrors curation.chunk_documents (window=3, divisor=16):
+        # content-defined chunk boundaries from the md5 rolling hash of
+        # the trailing 3-token window, replayed via a prefix-sum of cut
+        # flags over the unnested token stream
+        "doc_chunks": f"""
+            {_CHUNKS_SQL}
+            SELECT doc_id, chunk_idx, chunk, n_tokens FROM chunks
+        """,
+        # mirrors curation.chunk_dedup: exact dedup over the same
+        # content-defined chunks (substring-dedup stand-in)
+        "chunk_dedup": f"""
+            {_CHUNKS_SQL}
+            SELECT md5(chunk) AS chunk_hash,
+                   CAST(count(*) AS BIGINT) AS n_copies,
+                   CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+                   min(doc_id) AS survivor
+            FROM chunks GROUP BY md5(chunk)
+        """,
+        # mirrors sampling.corpus_sample (pct=10): seeded md5-bucket
+        # Bernoulli membership, monotone in pct
+        "corpus_sample": """
+            SELECT doc_id, source, lang FROM documents
+            WHERE ('0x' || substr(md5('sample-v1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                  % 100 < 10
+        """,
+        # mirrors sampling.stratified_sample ({en:5, zh:60}, default 20):
+        # per-stratum quota via the stratum-salted hash + literal CASE
+        "stratified_sample": """
+            SELECT doc_id, lang AS stratum FROM documents
+            WHERE ('0x' || substr(md5('strat-v1|' || lang || '/' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                  % 100 < (CASE WHEN lang = 'en' THEN 5
+                                WHEN lang = 'zh' THEN 60 ELSE 20 END)
+        """,
+        # mirrors sampling.shuffle_shards (8 shards): shard = hash mod 8,
+        # pos = dense rank inside the shard ordered by (md5 hex, doc_id)
+        "shuffle_shards": """
+            SELECT doc_id,
+                   ('0x' || substr(md5('shuffle-v1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                     % 8 AS shard,
+                   CAST(row_number() OVER (
+                          PARTITION BY ('0x' || substr(md5('shuffle-v1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8
+                          ORDER BY md5('shuffle-v1|' || CAST(doc_id AS VARCHAR)), doc_id)
+                        - 1 AS BIGINT) AS pos
+            FROM documents
+        """,
+        # mirrors sampling.source_mix: integer aggregates + exact
+        # floor-division ppm shares over the tiny (source, lang) rollup
+        "source_mix": """
+            WITH agg AS (
+              SELECT source, lang, count(*) AS n_docs,
+                     CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS n_tokens,
+                     CAST(sum(len(text)) AS BIGINT) AS n_chars
+              FROM documents GROUP BY source, lang
+            )
+            SELECT source, lang, n_docs, n_tokens, n_chars,
+                   CAST((n_docs * 1000000) // sum(n_docs) OVER () AS BIGINT) AS doc_share_ppm,
+                   CAST((n_tokens * 1000000) // sum(n_tokens) OVER () AS BIGINT) AS token_share_ppm
+            FROM agg
+        """,
+        # mirrors sampling.source_weights: per-source sqrt quantized to
+        # bigint BEFORE normalization (sqrt is the one correctly-rounded
+        # IEEE power), integer ppm division — bit-portable end to end
+        "source_weights": """
+            WITH c AS (
+              SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+              FROM documents GROUP BY source
+            ),
+            q AS (
+              SELECT source, n_docs,
+                     CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS sq
+              FROM c
+            )
+            SELECT source, n_docs,
+                   CAST((n_docs * 1000000) // sum(n_docs) OVER () AS BIGINT) AS share_ppm,
+                   CAST((sq * 1000000) // sum(sq) OVER () AS BIGINT) AS weight_ppm
+            FROM q
+        """,
+        # mirrors sampling.token_budget_sample (budget 20000, 256
+        # buckets, default α=0.5 weights): per-source target tokens =
+        # budget·weight_ppm÷10⁶, seeded-hash bucket histogram, minimal
+        # threshold bucket whose cumulative tokens reach the target
+        "token_budget_sample": """
+            WITH docs AS (
+              SELECT doc_id, source,
+                     CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+                     ('0x' || substr(md5('budget-v1|' || source || '/' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                       % 256 AS b
+              FROM documents
+            ),
+            c AS (
+              SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+              FROM documents GROUP BY source
+            ),
+            q AS (
+              SELECT source,
+                     CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT) AS sq
+              FROM c
+            ),
+            tgt AS (
+              SELECT source,
+                     CAST((20000 * CAST((sq * 1000000) // sum(sq) OVER () AS BIGINT))
+                          // 1000000 AS BIGINT) AS target
+              FROM q
+            ),
+            hist AS (
+              SELECT source, b, sum(n_tokens) AS btok
+              FROM docs GROUP BY source, b
+            ),
+            cum AS (
+              SELECT source, b,
+                     sum(btok) OVER (PARTITION BY source ORDER BY b
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+              FROM hist
+            ),
+            thr AS (
+              SELECT cum.source, tgt.target,
+                     min(CASE WHEN cum.cum >= tgt.target THEN cum.b END) AS t
+              FROM cum JOIN tgt USING (source)
+              GROUP BY cum.source, tgt.target
+            )
+            SELECT d.doc_id, d.source, d.n_tokens,
+                   CAST(CASE WHEN t.target <= 0 THEN 0
+                             WHEN t.t IS NULL THEN 1
+                             WHEN d.b <= t.t THEN 1 ELSE 0 END AS INT) AS keep
+            FROM docs d JOIN thr t USING (source)
+        """,
+        # mirrors functions.text.keyword_topk (integer tf-idf ordering)
+        "keyword_topk": """
+            WITH toks AS (
+              SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+              FROM documents
+            ),
+            tf AS (SELECT doc_id, token, count(*) AS tf
+                   FROM toks GROUP BY doc_id, token),
+            df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+            r AS (
+              SELECT tf.doc_id, tf.token, tf.tf, df.df,
+                     row_number() OVER (PARTITION BY tf.doc_id
+                       ORDER BY tf.tf DESC, df.df ASC, tf.token ASC) AS rank
+              FROM tf JOIN df USING (token)
+            )
+            SELECT doc_id, token, tf, df, CAST(rank AS INT) AS rank
+            FROM r WHERE rank <= 5
+        """,
+        # mirrors functions.text.search_topk: integer-exact tf-idf
+        # (bigint floor division, both operands positive so DuckDB //
+        # and Spark DIV agree), query set derived from the corpus
+        "search_topk": _SEARCH_TOPK_SQL,
+        # mirrors functions.text.search_bm25: fixed-point BM25
+        # (k1 = 1.2, b = 0.75 as milli-ints, every // positive-operand
+        # floor division so Spark DIV and DuckDB // agree bit-for-bit)
+        "search_bm25": _SEARCH_BM25_SQL,
+        # mirrors functions.text.search_rrf over the two lexical
+        # rankings: integer micro-unit 1/(60+rank) fusion of the same
+        # two oracle subqueries the individual rows certify
+        "search_rrf": f"""
+            WITH a AS (SELECT * FROM ({_SEARCH_TOPK_SQL}) t1),
+            b AS (SELECT * FROM ({_SEARCH_BM25_SQL}) t2),
+            u AS (
+              SELECT query_id, doc_id, rank FROM a
+              UNION ALL SELECT query_id, doc_id, rank FROM b
+            ),
+            f AS (
+              SELECT query_id, doc_id,
+                     CAST(sum(1000000 // (60 + rank)) AS BIGINT) AS score
+              FROM u GROUP BY query_id, doc_id
+            ),
+            r AS (
+              SELECT query_id,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY score DESC, doc_id ASC) AS rank,
+                     doc_id, score
+              FROM f
+            )
+            SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
+            FROM r WHERE rank <= 10
+        """,
+        # mirrors operators.sketch.kmv_distinct_tokens: bottom-k md5,
+        # estimate = ONE double division of exactly-representable ints
+        # (63·2^60 and kth_int < 2^60) — IEEE-identical across engines
+        "kmv_distinct": _KMV_SQL,
+        # the MERGED two-half sketch must estimate identically to the
+        # whole-corpus sketch (bottom-k(bottom-kA ∪ bottom-kB) =
+        # bottom-k(A ∪ B)) — the oracle IS the direct whole-corpus
+        # query, so a green row proves the merge property end-to-end
+        "kmv_merged": _KMV_SQL,
+        # mirrors operators.sketch.cms_token_freq: depth×width counter
+        # table from md5("d:tok") cells, probe = min over depth rows —
+        # all bigint-exact, so the row hashes match bit-for-bit
+        "cms_freq": _CMS_SQL,
+        # the MERGED two-half sketch is an elementwise counter sum, so
+        # it must answer probes identically to the whole-corpus sketch
+        # — the oracle IS the direct whole-corpus query
+        "cms_merged": _CMS_SQL,
+        "doc_fingerprint": """
+            WITH sh AS (
+              SELECT doc_id,
+                     regexp_replace(lower(text), ' +', ' ', 'g') AS norm,
+                     list_distinct(list_transform(
+                       generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 1)),
+                       i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')
+                     )) AS shingles
+              FROM documents
+            )
+            SELECT doc_id, md5(norm) AS exact_fp,
+                   list_min(list_transform(shingles, x -> md5(x))) AS shingle_fp
+            FROM sh
         """,
         "n3_parse_udf": """
             WITH base AS (

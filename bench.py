@@ -134,13 +134,21 @@ def main() -> None:
     mult = int(os.environ.get("SPARK_GRAFT_MULT", "10"))
     stat = os.environ.get("BENCH_STAT", "median")
 
+    from rdf_n3_spark.functions.text import keyword_topk, search_bm25
     from rdf_n3_spark.operators.canon import canonical_map
     from rdf_n3_spark.operators.conversations import conv_dedup
+    from rdf_n3_spark.operators.curation import split_leakage
     from rdf_n3_spark.operators.dedup import minhash_neardup_pairs
     from rdf_n3_spark.operators.kb_stats import characteristic_sets
     from rdf_n3_spark.operators.mentions import extract_mentions
     from rdf_n3_spark.operators.relations import relation_candidates
     from rdf_n3_spark.operators.similarity import ivf_topk, ivf_topk_tables
+    from rdf_n3_spark.operators.sketch import (
+        bloom_decontaminate,
+        kmv_distinct_tokens,
+        token_heavy_hitters,
+    )
+    from rdf_n3_spark.operators.substrings import dup_spans
     from rdf_n3_spark.operators.triples import entity_triples, mention_triples
     from rdf_n3_spark.sources.n3_sink import serialize_nquads
     from rdf_n3_spark.sources.n3_source import parse_documents
@@ -166,10 +174,16 @@ def main() -> None:
             )
         )
         parsed = parse_documents(docs).where(F.col("ok"))
-        # dedup / ANN operators over the sf documents/embeddings tables
+        # training-data operators over the sf documents/embeddings tables
         # (size-independent of MULT; evidence rows, not the headline)
         docs_tbl = spark.read.parquet(f"{sf_dir}/documents.parquet")
         embs_tbl = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        # BM25 retrieval over the same corpus-derived query set as the
+        # driver row
+        bm25_q = docs_tbl.where(F.col("doc_id") < 20).select(
+            F.col("doc_id").alias("query_id"),
+            F.concat_ws(
+                " ", F.slice(F.split(F.lower("text"), " "), 1, 3)).alias("qtext"))
 
         # the headline, one representative per operator family (so its
         # regressions are bench-visible round-over-round), and the
@@ -186,9 +200,20 @@ def main() -> None:
             "entity_canon": sink(canonical_map(extract_mentions(transcripts_df))),
             "dedup_minhash": sink(minhash_neardup_pairs(docs_tbl)),
             "ann_ivf_multiprobe": sink(ivf_topk(embs_tbl, hamming=1).drop("cos")),
+            "substring_spans": sink(dup_spans(docs_tbl, k=8)),
+            "keyword_topk": sink(keyword_topk(docs_tbl)),
             "relation_candidates": sink(relation_candidates(transcripts_df)),
             "kb_char_sets": sink(characteristic_sets(kb)),
+            "kmv_distinct": sink(kmv_distinct_tokens(docs_tbl)),
             "ann_ivf_multitable": sink(ivf_topk_tables(embs_tbl).drop("cos")),
+            "bloom_decontaminate": sink(bloom_decontaminate(
+                docs_tbl.where(F.col("doc_id") % 20 != 7),
+                docs_tbl.where(F.col("doc_id") % 20 == 7))),
+            "token_heavy_hitters": sink(token_heavy_hitters(docs_tbl)),
+            "search_bm25": sink(search_bm25(docs_tbl, bm25_q)),
+            # the minhash pair set + narrow split map — its delta vs the
+            # dedup_minhash row IS the audit's marginal cost
+            "split_leakage": sink(split_leakage(docs_tbl)),
             # the conversation-grain exact dedup (collect_list fold +
             # conv-grain window) over the REPLICATED corpus
             "conv_dedup": sink(conv_dedup(transcripts_df)),

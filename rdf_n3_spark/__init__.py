@@ -7,7 +7,8 @@ re-expressed Spark-first:
 - ``sources``    — transcript/document readers and the deterministic
                    synthetic transcripts derivation (input_hint shape).
 - ``functions``  — pure-Python N3 parser/writer, builtin vocabulary
-                   (math/string/time/list/log) as Column transforms.
+                   (math/string/time/list/log) as Column transforms,
+                   text-analysis functions.
 - ``operators``  — mention detection, triple emission/skolemization,
                    entity canonicalization (MinHash-LSH + connected
                    components), dedup, similarity search.

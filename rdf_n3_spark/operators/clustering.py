@@ -30,7 +30,7 @@ Scale shapes:
 Fixed-iteration determinism (iters=2 by default) is a feature, not a
 shortcut: convergence-looped k-means is partition-order sensitive on
 ties, which breaks replayability/auditability — the property every
-operator in this repo guarantees.
+operator in this repo guarantees (see operators/sampling.py).
 """
 
 from __future__ import annotations
@@ -176,8 +176,9 @@ def cluster_sample(embeddings: DataFrame, per_cluster: int = 100,
     """(vec_id, cluster) — at most ``per_cluster`` vectors per k-means
     cluster, chosen by seeded-hash rank (deterministic on any
     partitioning; changing ``per_cluster`` grows each cluster's sample
-    monotonically).  Small clusters survive in full instead of being
-    washed out by a global rate."""
+    monotonically).  The diversity-preserving counterpart of
+    sampling.corpus_sample: small clusters survive in full instead of
+    being washed out by a global rate."""
     assign = embed_kmeans(embeddings, k, iters, dims)
     w = Window.partitionBy("cluster").orderBy(
         F.md5(F.concat(F.lit(seed + "|"), F.col("vec_id").cast("string"))),

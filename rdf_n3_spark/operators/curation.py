@@ -286,7 +286,7 @@ def split_expr(doc_id_col, train_pct: int = 90, val_pct: int = 5,
                seed: str = "split-v1"):
     """The :func:`corpus_split` assignment as a bare Column expression:
     split membership is a PURE FUNCTION of the document id, so any
-    consumer (the streaming leakage audit, a join-side probe) can
+    consumer (a join-side probe, a per-batch audit) can
     evaluate it in place — no split table to maintain, distribute, or
     keep consistent."""
     bucket = F.pmod(

@@ -55,3 +55,44 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
         "surface",
         F.lower(F.col("surface")).alias("norm"),
     )
+
+
+def mention_contexts(transcripts: DataFrame, window: int = 3) -> DataFrame:
+    """(conv_id, turn_idx, pos, surface, norm, left_ctx, right_ctx) —
+    mention detection WITH its ±``window``-token context: the feature
+    extractor for entity-linker training (the linker scores a mention
+    against candidates by its surrounding words; contrastive mining
+    labels the pairs, this operator supplies the text evidence).
+    ``left_ctx``/``right_ctx`` are the space-joined tokens strictly
+    before/after the mention, truncated at turn boundaries.
+
+    Scale shape: same zero-shuffle pure-map stage as extract_mentions
+    (tokenize + posexplode + prefix-guarded regex, all whole-stage
+    codegen); the token array rides the explode so the context slices
+    are in-row `slice` + `array_join` — no self-join back to the turn
+    text, which at 10^12 turns would be a second data-sized exchange
+    for information the row already has."""
+    toks = transcripts.select(
+        "conv_id",
+        "turn_idx",
+        F.split(F.col("text"), " ").alias("__toks"),
+    ).select(
+        "conv_id", "turn_idx", "__toks",
+        F.posexplode("__toks").alias("pos", "surface"),
+    )
+    prefilter = F.lower(F.substring("surface", 1, 5)).isin("part_", "supp_")
+    m = toks.filter(prefilter & F.col("surface").rlike(MENTION_RE))
+    # 1-based slice arithmetic: the mention sits at pos+1; left covers
+    # [pos+1-window .. pos] clamped to 1, right covers [pos+2 ..
+    # pos+1+window] (slice truncates past the end)
+    lstart = F.greatest(F.col("pos") + 1 - window, F.lit(1))
+    return m.select(
+        "conv_id", "turn_idx", "pos", "surface",
+        F.lower(F.col("surface")).alias("norm"),
+        F.array_join(
+            F.slice("__toks", lstart, F.col("pos") + 1 - lstart), " ")
+        .alias("left_ctx"),
+        F.array_join(
+            F.slice("__toks", F.col("pos") + 2, F.lit(window)), " ")
+        .alias("right_ctx"),
+    )

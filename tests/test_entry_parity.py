@@ -49,7 +49,10 @@ def test_driver_window_covers_uncertified():
     names = list(QUERIES)
     assert len(names) == len(set(names))
     window = set(names[:50])
-    overflow_r4 = {"relation_triples", "kb_void"}
+    overflow_r4 = {
+        "cms_freq", "relation_triples", "kb_void", "source_weights",
+        "paragraph_neardup",
+    }
     assert overflow_r4 <= set(entry_mod._ROUND_NEW)
     # every round's new queries enter the window head (rotation contract)
     assert set(entry_mod._ROUND_NEW) <= window
@@ -90,13 +93,18 @@ CROSS_SF = [
     "dedup_embedding", "ann_topk_partial",
     # round-3 queries whose dedicated test files don't already pin
     # sf0.001 parity themselves
-    "dedup_incremental",
+    "gopher_quality", "paragraph_dedup", "hash_embed",
+    "lm_score", "dedup_incremental",
     # round-4 queries (each was verified at both SFs when added; this
     # pins the SF-independence going forward)
+    "kmv_merged", "cms_freq", "cms_merged",
     "embedding_incremental", "kb_char_sets", "kb_void", "kb_star_card",
-    "relation_candidates", "relation_triples",
+    "paragraph_neardup", "source_weights", "relation_candidates",
+    "relation_triples",
     # round-5 queries
-    "ann_ivf_multitable", "n3_write_nquads", "label_consistency",
+    "ann_ivf_multitable", "bloom_decontaminate", "token_heavy_hitters",
+    "n3_write_nquads", "token_budget_sample",
+    "label_consistency", "search_bm25", "search_rrf",
 ]
 
 

@@ -7,6 +7,8 @@ surfacing as a 100 TB slowdown.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from rdf_n3_spark.operators.dedup import embedding_neardup_pairs
 from rdf_n3_spark.operators.mentions import extract_mentions
 from rdf_n3_spark.operators.similarity import ivf_topk
@@ -73,6 +75,36 @@ def test_ann_topk_partial_prunes_before_window(spark):
     assert plan.index("Window") < plan.index("MapInPandas")  # window consumes the prune
 
 
+def test_fingerprint_tokenizes_once_per_row(spark):
+    """ADVICE r2: fingerprint() binds tokens with a chained select and
+    no explicit barrier — safe ONLY because the bound array is
+    referenced twice (size + slice), which stops CollapseProject from
+    inlining the split() into the shingle lambda (single-use
+    projections DO get inlined into HOF lambdas and re-evaluate per
+    element — see dedup.doc_shingles). Pin the shape: the lambda must
+    slice the bound attribute, never a split() call, and split() must
+    appear exactly once (in the child projection)."""
+    from rdf_n3_spark.functions.text import fingerprint
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plan = fingerprint(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert "slice(split" not in plan  # per-shingle re-tokenization
+    assert plan.count("split(") == 1
+    assert "slice(__toks" in plan  # lambda slices the BOUND array
+
+
+def test_curate_corpus_has_no_cross_join(spark):
+    """The composite curation decision stays equi-join only: no
+    cartesian/nested-loop nodes anywhere in the 5-signal combine."""
+    from rdf_n3_spark.operators.curation import curate_corpus
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    bench = docs.where(F.col("doc_id") % 20 == 7)
+    plan = _plan(curate_corpus(docs, bench))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_embed_projection_is_pure_map(spark):
     """project_embeddings is a single map stage: no shuffle, no join,
     no Python eval — it must ride the source partitioning untouched."""
@@ -82,6 +114,26 @@ def test_embed_projection_is_pure_map(spark):
     plan = _plan(project_embeddings(emb))
     assert "Exchange" not in plan
     assert "Join" not in plan
+    for node in PY_EVAL_NODES:
+        assert node not in plan, node
+
+
+def test_dup_spans_duplicate_test_is_partial_agg_join(spark):
+    """substrings.dup_spans must test gram duplication with a map-side
+    combinable groupBy + equi-join, NEVER a count() window partitioned
+    by gram_hash (a window cannot partial-aggregate, so a mega-hot
+    boilerplate gram would ship every occurrence to one reducer)."""
+    from rdf_n3_spark.operators.substrings import dup_spans
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plan = _plan(dup_spans(docs))
+    assert "windowspecdefinition(gram_hash" not in plan.lower()
+    assert "partial" in plan  # the duplicate-count agg combines map-side
+    assert "CartesianProduct" not in plan
+    # the k-gram lambda slices the BOUND token array (double reference
+    # blocks CollapseProject) — no per-window re-tokenization, and no
+    # repartition barrier needed to prevent it
+    assert "slice(split" not in plan
     for node in PY_EVAL_NODES:
         assert node not in plan, node
 
@@ -99,5 +151,118 @@ def test_kmeans_assignment_broadcasts_centroids(spark):
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 3  # iters+1 assigns
+    for node in PY_EVAL_NODES:
+        assert node not in plan, node
+
+
+def test_gopher_quality_is_pure_map(spark):
+    """gopher_quality is a zero-shuffle narrow map: no Exchange, no
+    join, no Python eval — it rides the scan partitioning."""
+    from rdf_n3_spark.functions.text import gopher_quality
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plan = _plan(gopher_quality(docs))
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    for node in PY_EVAL_NODES:
+        assert node not in plan, node
+
+
+def test_lm_score_joins_aggregated_counts_only(spark):
+    """lm_score's only nested-loop join is the broadcast 1-row total;
+    the bigram/prefix joins are equi-joins against aggregated (1 row
+    per key) tables, and both count aggs combine map-side."""
+    from rdf_n3_spark.functions.text import lm_score
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plan = _plan(lm_score(docs))
+    assert plan.count("BroadcastNestedLoopJoin") == 1  # the 1-row total
+    assert "CartesianProduct" not in plan
+    assert "partial" in plan
+    for node in PY_EVAL_NODES:
+        assert node not in plan, node
+
+
+def test_paragraph_and_hash_embed_duplicate_tests_combine_mapside(spark):
+    """paragraph_dedup and hash_embed keep the dup-test/sum shape of
+    dup_spans: groupBy (map-side combinable) — never a count() window
+    partitioned by the hash key."""
+    from rdf_n3_spark.functions.text import hash_embed
+    from rdf_n3_spark.operators.curation import paragraph_dedup
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    for df in (paragraph_dedup(docs), hash_embed(docs)):
+        plan = _plan(df)
+        assert "windowspecdefinition" not in plan.lower()
+        assert "partial" in plan
+        assert "CartesianProduct" not in plan
+        for node in PY_EVAL_NODES:
+            assert node not in plan, node
+
+
+def test_mention_contexts_window_edges(spark):
+    """mention_contexts: contexts truncate at turn boundaries, never
+    cross turns, and the mention token itself is in neither side."""
+    import datetime
+
+    from rdf_n3_spark.operators.mentions import mention_contexts
+
+    t = spark.createDataFrame(
+        [("c", 0, "user", "part_a starts here and supp_b sits mid",
+          "", datetime.datetime(2026, 1, 1)),
+         ("c", 1, "user", "tail token part_c", "",
+          datetime.datetime(2026, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    got = {r["surface"]: r.asDict()
+           for r in mention_contexts(t, window=3).collect()}
+    assert set(got) == {"part_a", "supp_b", "part_c"}
+    # turn start: empty left, 3-token right
+    assert got["part_a"]["left_ctx"] == ""
+    assert got["part_a"]["right_ctx"] == "starts here and"
+    # mid-turn: both sides, clamped to 3 tokens
+    assert got["supp_b"]["left_ctx"] == "starts here and"
+    assert got["supp_b"]["right_ctx"] == "sits mid"
+    # turn end: truncated right, left stays inside the turn
+    assert got["part_c"]["left_ctx"] == "tail token"
+    assert got["part_c"]["right_ctx"] == ""
+    assert got["part_c"]["pos"] == 2
+
+
+def test_mention_contexts_agrees_with_extract_mentions(spark):
+    """The context variant must detect exactly the same mentions
+    (same keys, surfaces, norms) as the plain extractor."""
+    from rdf_n3_spark.operators.mentions import (
+        extract_mentions,
+        mention_contexts,
+    )
+    from rdf_n3_spark.sources.transcripts import transcripts
+
+    t = transcripts(spark, "/root/testdata/sf0.001")
+    base = sorted(map(tuple, extract_mentions(t).collect()))
+    ctx = sorted(map(tuple, mention_contexts(t).select(
+        "conv_id", "turn_idx", "pos", "surface", "norm").collect()))
+    assert base == ctx and len(base) > 0
+
+
+def test_mention_contexts_is_pure_map(spark):
+    """mention_contexts is a zero-shuffle narrow map like
+    extract_mentions: no Exchange, no join back to the turn text, no
+    Python eval — contexts are in-row slices of the exploded array.
+    Audited on a transcripts-SHAPED frame (the sandbox lineitem→
+    transcripts derivation repartitions by order key, which would
+    charge the scaffolding's exchange to the operator)."""
+    import datetime
+
+    from rdf_n3_spark.operators.mentions import mention_contexts
+
+    t = spark.createDataFrame(
+        [("c", 0, "user", "part_1 here", "",
+          datetime.datetime(2026, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    plan = _plan(mention_contexts(t))
+    assert "Exchange" not in plan
+    assert "Join" not in plan
     for node in PY_EVAL_NODES:
         assert node not in plan, node

@@ -6,6 +6,8 @@ try_to_timestamp/finite-guard) asserted in test_layer_agreement.py.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from rdf_n3_spark.operators.dedup import embedding_neardup_pairs
 from rdf_n3_spark.operators.mentions import extract_mentions
 from rdf_n3_spark.operators.similarity import ann_topk, ivf_topk
@@ -57,3 +59,30 @@ def test_pipeline_survives_empty_and_odd_text(spark):
     m = extract_mentions(t)
     out = mention_triples(m).unionByName(entity_triples(m)).collect()
     assert len(out) > 0
+
+
+def test_round3_text_ops_survive_null_and_empty_text(spark):
+    """Null/empty/whitespace text degrades to empty or null-score rows
+    in every round-3 text operator — never an error that kills the
+    job, and every doc still appears where the contract says 'all
+    docs'."""
+    from rdf_n3_spark.functions.text import hash_embed, lm_score
+    from rdf_n3_spark.operators.substrings import (
+        dup_spans,
+        substring_dup_stats,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "a b c d e f g h a b c d e f g h")],
+        "doc_id long, text string",
+    )
+    assert dup_spans(docs).count() >= 0          # no crash on null text
+    stats = {r["doc_id"]: r for r in substring_dup_stats(docs).collect()}
+    assert set(stats) == {1, 2, 3, 4}            # every doc emitted
+    assert stats[2]["dup_tokens"] == 0 and stats[2]["keep"] == 1
+    lm = {r["doc_id"]: r for r in lm_score(docs).collect()}
+    assert set(lm) == {1, 2, 3, 4}
+    assert lm[1]["n_bigrams"] == 0 and lm[1]["avg_logprob"] is None
+    he = hash_embed(docs)
+    assert he.where(he.doc_id == 1).count() == 0  # null text → no rows
+    assert he.where(he.doc_id == 4).count() > 0
