@@ -191,6 +191,8 @@ def main(argv=None) -> int:
         from rdf_n3_spark.operators.relations import relation_triples
 
         triples = triples.unionByName(relation_triples(t))
+    # the commit: the three store tables are written and hashed at once,
+    # one driver thread each, then the lineage append publishes the batch
     metrics = materialize_graph(spark, triples, args.graph_root, args.batch_id)
 
     # Stage 3 (optional): the statistics a production store maintains

@@ -156,7 +156,7 @@ def write_profile(spark, triples: DataFrame, root: str, batch_id: str,
     paid once via persist."""
     import os
 
-    import pandas as pd
+    from rdf_n3_spark.operators.materialize import rows_frame
 
     prof = os.path.join(root, "profile", f"batch={batch_id}")
     triples.persist()
@@ -169,10 +169,8 @@ def write_profile(spark, triples: DataFrame, root: str, batch_id: str,
         triples.unpersist()
     n_preds = spark.read.schema(VOID_SCHEMA).parquet(os.path.join(prof, "void")).count()
     cover = sorted(covers) if covers is not None else [batch_id]
-    # a pandas frame reaches the JVM as Arrow, with no Python worker
-    meta = pd.DataFrame([(batch_id, "|".join(_esc_py(b) for b in cover), int(n_preds))],
-                        columns=["batch_id", "covers", "n_predicates"])
-    spark.createDataFrame(meta, META_SCHEMA).coalesce(1).write.mode(
+    meta = [(batch_id, "|".join(_esc_py(b) for b in cover), n_preds)]
+    rows_frame(spark, meta, META_SCHEMA).coalesce(1).write.mode(
         "overwrite").parquet(os.path.join(prof, "meta"))
     return prof
 

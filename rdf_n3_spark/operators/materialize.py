@@ -28,6 +28,15 @@ the LAST write, a crash mid-batch leaves no lineage row and the retry
 rewrites the batch's files (overwrite-by-batch-partition), never
 double-counting.
 
+The three tables commit concurrently: each runs write-then-stats in its
+own driver thread, so their small Spark jobs overlap instead of queueing
+(on small batches fixed per-job costs, not data volume, dominate).  The
+stats hash the batch's partition as read back from the written files,
+so the lineage attests to the files themselves, and the node table's
+degree join runs once.  Each write sets dynamic partition overwrite as
+its own option; the session conf is never touched, since a conf flip
+would race between threads.
+
 Readers see committed batches only.  Each reader call collects the
 committed batch ids from lineage once, on the driver, and scans the
 tables with fixed schemas under a ``batch IN (...)`` partition filter,
@@ -44,10 +53,14 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-import pandas as pd
+import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 N_BUCKETS = 16
 
@@ -145,6 +158,17 @@ def _content_hash(df: DataFrame):
     )
 
 
+def rows_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A frame of a few driver-side rows, sent to the JVM as a pyarrow
+    Table.  That path reads no Arrow setting and starts no Python
+    worker; a pandas frame or a list of tuples takes the row path, with
+    a worker, whenever ``spark.sql.execution.arrow.pyspark.enabled`` is
+    false (Spark's default, and what a spark-submit job gets)."""
+    arrow = to_arrow_schema(DataType.fromDDL(schema))
+    return spark.createDataFrame(
+        pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow))
+
+
 def hadoop_exists(spark: SparkSession, path: str) -> bool:
     """Existence through the Hadoop FS API, so the answer is right on
     object stores too (``os.path.exists`` is always False there)."""
@@ -184,9 +208,16 @@ def materialize_graph(
     Resume contract: if ``batch_id`` already has lineage rows the call
     is a no-op returning ``{"skipped": True}`` — re-running a partially
     failed job re-does only uncommitted batches. Data files are laid
-    out ``<table>/batch=<id>/bucket=<b>/`` and written with dynamic
-    partition overwrite, so a retry of an uncommitted batch replaces
-    its own files and nothing else (idempotent).
+    out ``<table>/batch=<id>/bucket=<b>/``, and each write sets dynamic
+    partition overwrite as its own option, so a retry of an uncommitted
+    batch replaces its own files and nothing else (idempotent).
+
+    The three tables commit at once, one driver thread each: the thread
+    writes its table, then reads the batch's partition back and hashes
+    it into per-bucket lineage rows.  The threads inherit the caller's
+    job group and tags.  Only when all three succeed is the lineage
+    appended, on the calling thread; if any table fails, the call
+    raises and commits nothing.
 
     Set semantics (reference repository.rb:297-307: duplicate insert is
     a no-op) are applied per batch via dropDuplicates before the write.
@@ -200,42 +231,51 @@ def materialize_graph(
         "edges": graph_edges(t),
         "node_props": graph_node_props(t),
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    lineage_rows = []
-    metrics: dict = {"batch_id": batch_id, "skipped": False, "tables": {}}
-    try:
-        for name, df in tables.items():
-            df = df.withColumn("batch", F.lit(batch_id))
-            (
-                df.repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("batch", "bucket")
-                .parquet(os.path.join(root, name))
-            )
-            stats = _content_hash(df.drop("batch")).collect()
-            for r in stats:
-                lineage_rows.append(
-                    (batch_id, name, r["bucket"], r["n_rows"], r["content_hash"], time.time())
-                )
-            metrics["tables"][name] = {
-                "n_rows": int(sum(r["n_rows"] for r in stats)),
-                "n_buckets": len(stats),
-            }
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    # lineage append LAST = the commit point.  A pandas frame goes to
-    # the JVM as Arrow batches; a list of tuples would be unpickled by a
-    # Python worker.
-    lineage = pd.DataFrame(lineage_rows, columns=[
-        "batch_id", "table", "bucket", "n_rows", "content_hash", "committed_at"])
-    spark.createDataFrame(lineage, LINEAGE_SCHEMA).coalesce(1).write.mode(
+    def commit_table(name: str, df: DataFrame) -> list:
+        (
+            df.withColumn("batch", F.lit(batch_id))
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch", "bucket")
+            .parquet(os.path.join(root, name))
+        )
+        return _content_hash(_scan(spark, root, name, {batch_id}).drop("batch")).collect()
+
+    def inheriting(f):
+        # wrapped anew per submit, so every thread gets its own copy of the
+        # caller's local properties (the job group among them).  With
+        # pinned-thread mode off (PYSPARK_PIN_THREAD=false) the session form
+        # returns the session itself: threads then inherit nothing
+        wrap = inheritable_thread_target(spark)
+        return wrap(f) if callable(wrap) else f
+
+    with ThreadPoolExecutor(len(tables)) as pool:
+        futures = {name: pool.submit(inheriting(commit_table), name, df)
+                   for name, df in tables.items()}
+        stats = {name: f.result() for name, f in futures.items()}
+
+    now = time.time()
+    _commit_lineage(spark, root, [
+        (batch_id, name, r["bucket"], r["n_rows"], r["content_hash"], now)
+        for name, rows in stats.items() for r in rows])
+    return {"batch_id": batch_id, "skipped": False, "tables": {
+        name: {"n_rows": int(sum(r["n_rows"] for r in rows)), "n_buckets": len(rows)}
+        for name, rows in stats.items()}}
+
+
+def _commit_lineage(spark: SparkSession, root: str, rows: list) -> None:
+    """Append a batch's lineage rows: the last write, and the commit
+    point."""
+    rows_frame(spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
         "append").parquet(os.path.join(root, "lineage"))
-    return metrics
 
 
 def _scan(spark: SparkSession, root: str, table: str, committed: set) -> DataFrame:
+    if not committed:
+        # the table's directory need not exist: its first write may have failed
+        return rows_frame(spark, [], TABLE_SCHEMAS[table])
     return (spark.read.schema(TABLE_SCHEMAS[table]).parquet(os.path.join(root, table))
             .where(F.col("batch").isin(sorted(committed))))
 

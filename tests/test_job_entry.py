@@ -1,24 +1,57 @@
-"""The spark-submit job entrypoint: runs, materializes, resumes."""
+"""The spark-submit job entrypoint: runs, materializes, resumes.
+
+The two resume tests run the job as ``python jobs/kg_construct.py``
+subprocesses: that is the spark-submit path, with Spark's default conf
+(Arrow off).  The stage tests call the job's ``main(argv)`` on the test
+session, which saves a JVM start per job."""
 
 from __future__ import annotations
 
+import contextlib
+import importlib.util
+import io
 import json
 import os
 import subprocess
 import sys
 
+import pytest
 
-def run_job(graph_root, batch, sf_dir="/root/testdata/sf0.001"):
+from tests.conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def run_job(graph_root, batch, sf_dir=SF_SMOKE):
     out = subprocess.run(
         [sys.executable, "jobs/kg_construct.py",
          "--sf-dir", sf_dir,
          "--graph-root", str(graph_root),
          "--batch-id", batch,
          "--repartition", "8"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
+        capture_output=True, text=True, timeout=420, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def job():
+    """``jobs/kg_construct.py`` loaded as a module."""
+    spec = importlib.util.spec_from_file_location(
+        "kg_construct", os.path.join(REPO, "jobs", "kg_construct.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def run_main(job, *argv):
+    """The job's ``main(argv)`` on the current session; returns the
+    metrics line it prints."""
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        assert job.main([str(a) for a in argv]) == 0
+    return json.loads(out.getvalue().strip().splitlines()[-1])
 
 
 def test_job_runs_and_resumes(tmp_path):
@@ -44,28 +77,19 @@ def test_job_restages_mentions_for_different_input(tmp_path):
     root = tmp_path / "graph"
     run_job(root, "b0")
     alt = tmp_path / "sfalt"
-    os.symlink("/root/testdata/sf0.001", alt)
+    os.symlink(SF_SMOKE, alt)
     run_job(root, "b0", sf_dir=str(alt))
     staged = sorted(os.listdir(root / "mentions" / "batch=b0"))
     assert len(staged) == 2 and all(s.startswith("input=") for s in staged)
 
 
-def test_job_profile_stage(tmp_path):
+def test_job_profile_stage(tmp_path, spark, job):
     """--profile writes the KB statistics beside the graph: VoID
     per-predicate counts (the bgp order_patterns input) and the
     characteristic-set profile."""
     root = tmp_path / "graph"
-    out = subprocess.run(
-        [sys.executable, "jobs/kg_construct.py",
-         "--sf-dir", "/root/testdata/sf0.001",
-         "--graph-root", str(root),
-         "--batch-id", "b0",
-         "--repartition", "8",
-         "--profile"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    m = json.loads(out.stdout.strip().splitlines()[-1])
+    m = run_main(job, "--sf-dir", SF_SMOKE, "--graph-root", root, "--batch-id", "b0",
+                 "--repartition", "8", "--profile")
     assert m["profile"].endswith("profile/batch=b0")
     import duckdb
     void = duckdb.sql(
@@ -77,30 +101,20 @@ def test_job_profile_stage(tmp_path):
     assert cs[0] >= 2  # at least the mention shape and the entity shape
 
 
-def test_job_relations_and_bgp_feedback(tmp_path, spark):
+def test_job_relations_and_bgp_feedback(tmp_path, spark, job):
     """VERDICT r4 item 2, end to end: --relations unions mined
     relation triples into the materialized graph (lineage-gated like
     every other row), and run_bgp feeds the --profile output back into
     the planner — accepting it while the fingerprint matches the store
     and silently dropping it after a later batch commits."""
     root = tmp_path / "graph"
-    out = subprocess.run(
-        [sys.executable, "jobs/kg_construct.py",
-         "--sf-dir", "/root/testdata/sf0.001",
-         "--graph-root", str(root),
-         "--batch-id", "b0",
-         "--repartition", "8",
-         "--relations", "--profile"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    m = json.loads(out.stdout.strip().splitlines()[-1])
+    m = run_main(job, "--sf-dir", SF_SMOKE, "--graph-root", root, "--batch-id", "b0",
+                 "--repartition", "8", "--relations", "--profile")
     assert not m["skipped"] and m["profile"].endswith("profile/batch=b0")
 
     # mined relations landed in the EDGE table (ent:→ent: refs) with
     # the same batch lineage as the asserted triples
-    sys.path.insert(0, "/root/repo")
-    from jobs.kg_construct import run_bgp
+    run_bgp = job.run_bgp
     from rdf_n3_spark.operators.kb_stats import load_profile
     from rdf_n3_spark.operators.materialize import read_graph
 
@@ -131,32 +145,23 @@ def test_job_relations_and_bgp_feedback(tmp_path, spark):
 
     # a second batch commits WITHOUT refreshing the profile → the
     # guard rejects the stale statistics, run_bgp still answers
-    run_job(root, "b1")
+    run_main(job, "--sf-dir", SF_SMOKE, "--graph-root", root, "--batch-id", "b1",
+             "--repartition", "8")
     assert load_profile(spark, str(root)) == (None, None)
     got2 = {tuple(sorted(r.asDict().items()))
             for r in run_bgp(spark, str(root), pats).collect()}
     assert got2 >= want
 
 
-def test_job_export_nquads(tmp_path, spark):
+def test_job_export_nquads(tmp_path, spark, job):
     """--export-nquads writes the committed store as strict
     line-per-statement N-Triples text that the engine's own parser
     round-trips (term-exact after the urn:x-kg compact expansion)."""
     root = tmp_path / "graph"
-    out = subprocess.run(
-        [sys.executable, "jobs/kg_construct.py",
-         "--sf-dir", "/root/testdata/sf0.001",
-         "--graph-root", str(root),
-         "--batch-id", "b0",
-         "--repartition", "8",
-         "--export-nquads"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    m = json.loads(out.stdout.strip().splitlines()[-1])
+    m = run_main(job, "--sf-dir", SF_SMOKE, "--graph-root", root, "--batch-id", "b0",
+                 "--repartition", "8", "--export-nquads")
     assert m["export_nquads"].endswith("export/batch=b0")
 
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import functions as F
 
     from rdf_n3_spark.functions.n3_parser import parse_n3
@@ -186,19 +191,18 @@ def test_job_export_nquads(tmp_path, spark):
     assert got == want
 
 
-def test_job_diff_against_stage(tmp_path, spark):
+def test_job_diff_against_stage(tmp_path, spark, job):
     """--diff-against publishes the cross-build delta: build root A
     from a truncated transcript slice and root B from the full table,
     then B --diff-against A must ship '+' rows (B's new statements,
     incl. changed :mentionCount values) and '-' rows (A's superseded
     counts), each verifiable against the two committed stores."""
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import functions as F
 
     from rdf_n3_spark.operators.materialize import read_store
     from rdf_n3_spark.sources.transcripts import transcripts
 
-    t = transcripts(spark, "/root/testdata/sf0.001")
+    t = transcripts(spark, SF_SMOKE)
     full_tbl = tmp_path / "t_full"
     part_tbl = tmp_path / "t_part"
     t.write.parquet(str(full_tbl))
@@ -207,18 +211,10 @@ def test_job_diff_against_stage(tmp_path, spark):
     root_a, root_b = tmp_path / "gA", tmp_path / "gB"
     for root, tbl, extra in [
         (root_a, part_tbl, []),
-        (root_b, full_tbl, ["--diff-against", str(root_a)]),
+        (root_b, full_tbl, ["--diff-against", root_a]),
     ]:
-        out = subprocess.run(
-            [sys.executable, "jobs/kg_construct.py",
-             "--transcripts", str(tbl),
-             "--graph-root", str(root),
-             "--batch-id", "b0",
-             "--repartition", "8", *extra],
-            capture_output=True, text=True, timeout=420, cwd="/root/repo",
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-    m = json.loads(out.stdout.strip().splitlines()[-1])
+        m = run_main(job, "--transcripts", tbl, "--graph-root", root, "--batch-id", "b0",
+                     "--repartition", "8", *extra)
     assert m["delta"]["added"] > 0     # triples only the full build has
     assert m["delta"]["removed"] > 0   # stale :mentionCount literals
     delta = spark.read.parquet(m["delta"]["path"])
@@ -236,17 +232,15 @@ def test_job_diff_against_stage(tmp_path, spark):
                            a.distinct().subtract(b.distinct()).collect()}
 
 
-def test_job_dedup_input_stage(tmp_path, spark):
+def test_job_dedup_input_stage(tmp_path, spark, job):
     """--dedup-input: a transcripts table with byte-identical
     conversations materializes the SAME graph as the pre-deduped
     input, publishes the conv-grain keep-map for audit, and stages
     mentions under a fingerprint distinct from a raw run."""
-    import subprocess
-
     from rdf_n3_spark.sources.transcripts import transcripts
 
     # input = sf0.001 transcripts ∪ an exact copy under new conv_ids
-    t = transcripts(spark, "/root/testdata/sf0.001")
+    t = transcripts(spark, SF_SMOKE)
     from pyspark.sql import functions as F
 
     dup = t.select(
@@ -258,14 +252,8 @@ def test_job_dedup_input_stage(tmp_path, spark):
     t.write.parquet(str(clean))
 
     def run(src, root, batch, *flags):
-        out = subprocess.run(
-            [sys.executable, "jobs/kg_construct.py",
-             "--transcripts", str(src),
-             "--graph-root", str(root),
-             "--batch-id", batch, "--repartition", "8", *flags],
-            capture_output=True, text=True, timeout=420, cwd="/root/repo")
-        assert out.returncode == 0, out.stderr[-2000:]
-        return json.loads(out.stdout.strip().splitlines()[-1])
+        return run_main(job, "--transcripts", src, "--graph-root", root,
+                        "--batch-id", batch, "--repartition", "8", *flags)
 
     root_d = tmp_path / "graph_dedup"
     m = run(both, root_d, "b0", "--dedup-input")
@@ -301,19 +289,14 @@ def test_job_dedup_input_stage(tmp_path, spark):
     assert len(fps) == 2
 
 
-def test_dedup_fingerprint_tracks_conversations_source(monkeypatch):
+def test_dedup_fingerprint_tracks_conversations_source(monkeypatch, job):
     """Under --dedup-input the staged mentions depend on conv_dedup's
     choice of surviving turns, so a change to the conversations module
     must move them to a new staging dir; a raw run does not use it."""
-    import importlib.util
     import inspect
 
     import rdf_n3_spark.operators.conversations as conversations_mod
 
-    spec = importlib.util.spec_from_file_location(
-        "kg_construct", os.path.join(os.path.dirname(__file__), "..", "jobs", "kg_construct.py"))
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
     fp = job.input_fingerprint
     dedup, raw = fp("in", True, "struct<conv_id:string>"), fp("in", False, "struct<conv_id:string>")
     assert dedup != raw

@@ -11,11 +11,13 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+import rdf_n3_spark.operators.materialize as mat
 from rdf_n3_spark.operators.materialize import (
     N_BUCKETS,
     bucket_expr,
     committed_batches,
     graph_edges,
+    graph_node_props,
     graph_nodes,
     materialize_graph,
     read_graph,
@@ -30,6 +32,12 @@ TRIPLES = [
     ("sk:m2", ":surface", "Alpha"),
     ("ent:alpha", ":mentionCount", "2"),
 ]
+
+
+def lineage(spark, root):
+    """The committed lineage rows, less the commit time."""
+    return sorted(map(tuple, mat.read_lineage(spark, root).select(
+        "table", "bucket", "n_rows", "content_hash").collect()))
 
 
 @pytest.fixture
@@ -158,15 +166,11 @@ def test_crash_before_lineage_commit_resumes_cleanly(spark, triples, tmp_path,
     append commits nothing; re-running the same batch id rewrites its
     files and commits exactly what a clean run into a fresh root
     commits, with no duplicate rows."""
-    import types
-
-    import rdf_n3_spark.operators.materialize as mat
-
     def crash(*a, **k):
         raise RuntimeError("injected crash before the lineage append")
 
     root = str(tmp_path / "graph")
-    monkeypatch.setattr(mat, "pd", types.SimpleNamespace(DataFrame=crash))
+    monkeypatch.setattr(mat, "_commit_lineage", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         materialize_graph(spark, triples, root, batch_id="b001")
     monkeypatch.undo()
@@ -175,14 +179,10 @@ def test_crash_before_lineage_commit_resumes_cleanly(spark, triples, tmp_path,
     assert committed_batches(spark, root) == set()
     assert read_store(spark, root).count() == 0
 
-    def lineage(r):
-        return sorted(map(tuple, mat.read_lineage(spark, r).select(
-            "table", "bucket", "n_rows", "content_hash").collect()))
-
     materialize_graph(spark, triples, root, batch_id="b001")
     clean = str(tmp_path / "clean")
     materialize_graph(spark, triples, clean, batch_id="b001")
-    assert lineage(root) == lineage(clean)
+    assert lineage(spark, root) == lineage(spark, clean)
     for table in ("nodes", "edges", "node_props"):
         df = read_graph(spark, root, table)
         assert df.count() == df.distinct().count() > 0, table
@@ -194,3 +194,128 @@ def test_materialize_set_semantics(spark, tmp_path):
     root = str(tmp_path / "graph")
     m = materialize_graph(spark, dup, root, batch_id="b001")
     assert m["tables"]["edges"]["n_rows"] == 3
+
+
+# a batch that fills several buckets of every table
+WIDE = TRIPLES + [
+    t for i in range(60) for t in (
+        (f"sk:w{i}", ":refersTo", f"ent:e{i % 7}"),
+        (f"sk:w{i}", ":inConv", f"conv:c{i % 5}"),
+        (f"sk:w{i}", ":surface", f"E{i % 7}"),
+    )
+]
+
+
+def test_lineage_equals_hash_of_the_planned_tables(spark, tmp_path):
+    """The committed lineage rows are the per-bucket count and
+    order-insensitive hash of each table as planned from the
+    deduplicated triples, whatever way the commit computes them."""
+    triples = spark.createDataFrame(WIDE + WIDE[:20], "s string, p string, o string")
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+
+    t = triples.dropDuplicates(["s", "p", "o"])
+    p = F.lit(1_000_000_007)
+    want = []
+    for name, df in (("nodes", graph_nodes(t)), ("edges", graph_edges(t)),
+                     ("node_props", graph_node_props(t))):
+        cols = [c for c in df.columns if c != "bucket"]
+        want += [(name, r["bucket"], r["n"], r["h"]) for r in df.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.pmod(F.sum(F.pmod(F.xxhash64(*cols), p)), p).alias("h")).collect()]
+    assert len({b for name, b, _, _ in want if name == "edges"}) > 1
+    assert lineage(spark, root) == sorted(want)
+
+
+def test_failed_table_write_commits_nothing(spark, triples, tmp_path, monkeypatch):
+    """One table's thread raising fails the whole call before the
+    lineage append: nothing is committed, readers see an empty store,
+    and a re-run commits what a clean run commits."""
+    real = mat.graph_edges
+    monkeypatch.setattr(mat, "graph_edges", lambda t: real(t).where(
+        F.raise_error(F.lit("injected edges failure")).isNull()))
+    root = str(tmp_path / "graph")
+    with pytest.raises(Exception, match="injected edges failure"):
+        materialize_graph(spark, triples, root, batch_id="b001")
+    monkeypatch.undo()
+    assert committed_batches(spark, root) == set()
+    assert read_store(spark, root).count() == 0
+
+    materialize_graph(spark, triples, root, batch_id="b001")
+    clean = str(tmp_path / "clean")
+    materialize_graph(spark, triples, clean, batch_id="b001")
+    assert lineage(spark, root) == lineage(spark, clean)
+    assert read_store(spark, root).count() == len(TRIPLES)
+
+
+def test_table_jobs_run_in_the_callers_job_group(spark, triples, tmp_path):
+    """Every job of the commit, the table writes on the pool threads
+    included, runs under the caller's job group, so a caller that tags
+    its stages finds the whole commit under its own group."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc._jsc.clearJobGroup()
+        deadline = time.monotonic() + 30  # job events reach the tracker asynchronously
+        while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        return set(tracker.getJobIdsForGroup(group))
+
+    first = in_group("mat-test-first", lambda: spark.range(1).collect())
+    in_group("mat-test", lambda: materialize_graph(
+        spark, triples, str(tmp_path / "graph"), batch_id="b001"))
+    last = in_group("mat-test-last", lambda: spark.range(1).collect())
+    # job ids are handed out in submission order, and the tracker has
+    # seen every job before the last marker: the ids between the two
+    # markers are exactly the commit's jobs
+    ids = set(tracker.getJobIdsForGroup("mat-test"))
+    assert len(ids) >= 3
+    assert ids == set(range(max(first) + 1, min(last)))
+
+
+def test_commit_without_pinned_threads(spark, triples, tmp_path, monkeypatch):
+    """With pinned-thread mode off, ``inheritable_thread_target(spark)``
+    returns the session, not a decorator; the commit still runs."""
+    monkeypatch.setattr(mat, "inheritable_thread_target", lambda session: session)
+    m = materialize_graph(spark, triples, str(tmp_path / "graph"), batch_id="b001")
+    assert m["tables"]["edges"]["n_rows"] == 3
+
+
+def test_commit_does_not_depend_on_the_arrow_setting(spark, triples, tmp_path):
+    """With ``spark.sql.execution.arrow.pyspark.enabled`` false (Spark's
+    default, what a spark-submit job gets) the lineage and the profile
+    meta are written with the same rows and schema as with it true."""
+    from rdf_n3_spark.operators.kb_stats import write_profile
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+
+    def commit(root):
+        root = str(tmp_path / root)
+        materialize_graph(spark, triples, root, batch_id="b001")
+        prof = write_profile(spark, read_store(spark, root), root, "b001", covers={"b001"})
+        meta = spark.read.parquet(f"{prof}/meta")
+        written = spark.read.parquet(f"{root}/lineage")
+        return (lineage(spark, root), written.schema.simpleString(),
+                [tuple(r) for r in meta.collect()], meta.schema.simpleString())
+
+    prev = spark.conf.get(key)
+    got = {}
+    for value in ("false", "true"):
+        spark.conf.set(key, value)
+        try:
+            got[value] = commit(value)
+        finally:
+            spark.conf.set(key, prev)
+    off = got["false"]
+    assert off == got["true"]
+    assert off[1] == ("struct<batch_id:string,table:string,bucket:int,n_rows:bigint,"
+                      "content_hash:bigint,committed_at:double>")
+    assert off[2:] == ([("b001", "b001", 5)],
+                       "struct<batch_id:string,covers:string,n_predicates:bigint>")
