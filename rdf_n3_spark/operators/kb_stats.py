@@ -152,22 +152,31 @@ def write_profile(spark, triples: DataFrame, root: str, batch_id: str,
     stale/partial profile can never reach ``order_patterns`` (where
     absent-from-profile = zero-cardinality = "most selective" would
     misorder).  Profile tables are tiny (rows ∝ schema shapes), so
-    ``coalesce(1)`` writes are driver-cheap and the triples scan is
-    paid once via persist."""
+    ``coalesce(1)`` writes are driver-cheap.  The two aggregates are
+    independent: each is written (the void table also counted back) in
+    its own driver thread that inherits the caller's job group, over
+    one persisted scan of the triples, which is unpersisted before the
+    call returns (``read_store`` hands the same frame to every reader
+    of a snapshot)."""
     import os
 
-    from rdf_n3_spark.operators.materialize import rows_frame
+    from rdf_n3_spark.operators.materialize import concurrently, rows_frame
 
     prof = os.path.join(root, "profile", f"batch={batch_id}")
+    void, char_sets = os.path.join(prof, "void"), os.path.join(prof, "char_sets")
+
+    def write_void() -> int:
+        void_stats(triples).coalesce(1).write.mode("overwrite").parquet(void)
+        return spark.read.schema(VOID_SCHEMA).parquet(void).count()
+
+    def write_char_sets() -> None:
+        characteristic_sets(triples).coalesce(1).write.mode("overwrite").parquet(char_sets)
+
     triples.persist()
     try:
-        void_stats(triples).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(prof, "void"))
-        characteristic_sets(triples).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(prof, "char_sets"))
+        n_preds, _ = concurrently(spark, write_void, write_char_sets)
     finally:
         triples.unpersist()
-    n_preds = spark.read.schema(VOID_SCHEMA).parquet(os.path.join(prof, "void")).count()
     cover = sorted(covers) if covers is not None else [batch_id]
     meta = [(batch_id, "|".join(_esc_py(b) for b in cover), n_preds)]
     rows_frame(spark, meta, META_SCHEMA).coalesce(1).write.mode(
@@ -189,21 +198,20 @@ def load_profile(spark, root: str) -> tuple:
     :func:`rdf_n3_spark.plans.bgp.bgp`."""
     import os
 
-    from rdf_n3_spark.operators.materialize import hadoop_exists, read_lineage
+    from rdf_n3_spark.operators.materialize import commit_times, hadoop_exists
 
-    lin = read_lineage(spark, root)
-    if lin is None:
+    # committed set + commit time of each batch, from the store snapshot:
+    # no Spark job while the lineage is unchanged
+    times = commit_times(spark, root)
+    if not times:
         return None, None
-    # one collect: committed set + commit time of each batch
-    batches = lin.groupBy("batch_id").agg(F.max("committed_at").alias("t")).collect()
-    committed = {r["batch_id"] for r in batches}
-    latest = max(batches, key=lambda r: r["t"])["batch_id"]
+    latest = max(times, key=times.get)
     prof = os.path.join(root, "profile", f"batch={latest}")
     if not hadoop_exists(spark, os.path.join(prof, "meta", "_SUCCESS")):
         return None, None  # no (complete) profile for the latest snapshot
     meta = spark.read.schema(META_SCHEMA).parquet(os.path.join(prof, "meta")).first()
     covers = {_unesc_py(b) for b in meta["covers"].split("|") if b}
-    if covers != committed:
+    if covers != set(times):
         return None, None  # profile predates (or post-dates) the store
     counts = load_predicate_counts(
         spark.read.schema(VOID_SCHEMA).parquet(os.path.join(prof, "void")))

@@ -37,12 +37,22 @@ degree join runs once.  Each write sets dynamic partition overwrite as
 its own option; the session conf is never touched, since a conf flip
 would race between threads.
 
-Readers see committed batches only.  Each reader call collects the
-committed batch ids from lineage once, on the driver, and scans the
-tables with fixed schemas under a ``batch IN (...)`` partition filter,
-so planning prunes uncommitted ``batch=`` directories and no join
-runs.  A missing lineage table means nothing committed; one that
-exists but cannot be read raises.
+Readers see committed batches only, through one store SNAPSHOT per
+(session, root): the committed batch ids with their commit times, and
+the scan frames built over them.  A scan reads the tables with fixed
+schemas under a ``batch IN (...)`` partition filter, so planning prunes
+uncommitted ``batch=`` directories and no join runs.  A committed batch
+never changes (the writer skips a committed batch id, and the lineage
+is append-only), so a snapshot stays valid for as long as the lineage
+does.  It is keyed by the lineage directory's listing: each file's
+name, length and modification time, read on the driver with the Hadoop
+FS API in a fixed number of calls and no Spark job.  While the listing
+is unchanged a reader reuses the snapshot, frames included, and runs no
+lineage job and no relisting of the tables; any commit, from this
+process or another, and any lineage file rewritten in place changes
+the listing, and the next reader resolves the snapshot anew.  A missing
+lineage table means nothing committed; one that exists but cannot be
+read raises.
 
 The bucket function is engine-portable (md5-prefix mod N, mirrored in
 the DuckDB oracle) rather than Spark's xxhash64, so correctness checks
@@ -52,8 +62,12 @@ and external readers agree on placement.
 from __future__ import annotations
 
 import os
+import re
+import threading
 import time
+from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyarrow as pa
 from pyspark import inheritable_thread_target
@@ -169,31 +183,129 @@ def rows_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow))
 
 
+def _hadoop_path(spark: SparkSession, path: str) -> tuple:
+    """(file system, Hadoop ``Path``) of ``path``."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
 def hadoop_exists(spark: SparkSession, path: str) -> bool:
     """Existence through the Hadoop FS API, so the answer is right on
     object stores too (``os.path.exists`` is always False there)."""
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+    fs, p = _hadoop_path(spark, path)
+    return fs.exists(p)
 
 
-def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    """The lineage table, or None when no batch ever committed.  A
-    lineage table that exists but cannot be read raises: reading it as
-    "nothing committed" would empty every reader and re-write
-    committed batches."""
-    path = os.path.join(root, "lineage")
-    if not hadoop_exists(spark, path):
+def concurrently(spark: SparkSession, *calls) -> list:
+    """Run each no-argument callable in its own driver thread and return
+    their results in order; if any raises, the first failure raises once
+    all have finished.  Every thread inherits the caller's local
+    properties, the job group and tags among them, so the jobs it
+    starts are the caller's.  Small Spark jobs submitted from several
+    threads overlap instead of queueing."""
+    def inheriting(f):
+        # wrapped anew per call, so every thread gets its own copy of the
+        # caller's local properties.  With pinned-thread mode off
+        # (PYSPARK_PIN_THREAD=false) the session form returns the session
+        # itself: threads then inherit nothing
+        wrap = inheritable_thread_target(spark)
+        return wrap(f) if callable(wrap) else f
+
+    with ThreadPoolExecutor(len(calls)) as pool:
+        futures = [pool.submit(inheriting(f)) for f in calls]
+        return [f.result() for f in futures]
+
+
+# a FileStatus's text carries path, length and modification time, and
+# also the access time, which a read of the file may move
+_ACCESS_TIME = re.compile(r"access_time=\d+")
+
+
+def _lineage_listing(spark: SparkSession, root: str) -> str | None:
+    """The lineage directory's listing as one string, or None when no
+    batch ever committed.  The whole listing crosses Py4J as one
+    string, so the cost does not grow with the number of files."""
+    fs, path = _hadoop_path(spark, os.path.join(root, "lineage"))
+    if not fs.exists(path):
         return None
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+    # ArrayUtils.toString takes an Object; Py4J matches no Object[]
+    # parameter (java.util.Arrays.toString) to a FileStatus[]
+    listing = spark.sparkContext._jvm.org.apache.commons.lang3.ArrayUtils.toString(
+        fs.listStatus(path))
+    return _ACCESS_TIME.sub("", listing)
+
+
+class _Snapshot:
+    """The committed state of one store root as one session saw it:
+    ``times`` maps each committed batch id to its commit time, and
+    ``frames`` holds the scan frames built over those batches.  A
+    lineage table that exists but cannot be read raises: reading it as
+    "nothing committed" would empty every reader and re-write committed
+    batches."""
+
+    def __init__(self, spark: SparkSession, root: str, listing: str | None):
+        self.listing = listing
+        self.times: dict = {}
+        if listing is not None:
+            # built on the driver: a groupBy would cost a shuffle stage for
+            # a table of a few rows per batch
+            lin = spark.read.schema(LINEAGE_SCHEMA).parquet(os.path.join(root, "lineage"))
+            for batch_id, t in lin.select("batch_id", "committed_at").collect():
+                self.times[batch_id] = max(t, self.times.get(batch_id, t))
+        self.frames: dict = {}
+
+
+# (session, root) -> _Snapshot, least recently used first.  The key holds
+# the session itself, so a snapshot is never served to another session,
+# not even one that later gets the same id(); the bound matters because
+# every build job writes a fresh root
+_SNAPSHOTS: OrderedDict = OrderedDict()
+_SNAPSHOTS_MAX = 16
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _snapshot(spark: SparkSession, root: str) -> _Snapshot:
+    # the listing is read BEFORE the lineage: a commit landing in between
+    # is then stored under the older listing, and the next call resolves
+    # again, where the other order would keep serving the older state
+    listing = _lineage_listing(spark, root)
+    key = (spark, root)
+    with _SNAPSHOTS_LOCK:
+        snap = _SNAPSHOTS.get(key)
+        if snap is not None and snap.listing == listing:
+            _SNAPSHOTS.move_to_end(key)
+            return snap
+    snap = _Snapshot(spark, root, listing)
+    with _SNAPSHOTS_LOCK:
+        _SNAPSHOTS[key] = snap
+        _SNAPSHOTS.move_to_end(key)
+        while len(_SNAPSHOTS) > _SNAPSHOTS_MAX:
+            _SNAPSHOTS.popitem(last=False)
+    return snap
+
+
+def _snapshot_frame(spark: SparkSession, root: str, name: str, build) -> DataFrame:
+    """The snapshot's frame ``name``, built by ``build(committed)`` on
+    first use; later readers get the same frame, so its file index is
+    listed once."""
+    snap = _snapshot(spark, root)
+    df = snap.frames.get(name)
+    if df is None:
+        # two threads may both build; setdefault keeps the first frame
+        df = snap.frames.setdefault(name, build(set(snap.times)))
+    return df
+
+
+def commit_times(spark: SparkSession, root: str) -> dict:
+    """{batch id: commit time} of the committed batches, from the store
+    snapshot (see the module docstring)."""
+    return dict(_snapshot(spark, root).times)
 
 
 def committed_batches(spark: SparkSession, root: str) -> set:
-    lin = read_lineage(spark, root)
-    if lin is None:
-        return set()
-    # the set is built on the driver: a distinct() would cost a shuffle
-    # stage for a table of a few rows per batch
-    return {r["batch_id"] for r in lin.select("batch_id").collect()}
+    """The committed batch ids, from the store snapshot: a repeat call
+    on an unchanged lineage runs no Spark job."""
+    return set(_snapshot(spark, root).times)
 
 
 def materialize_graph(
@@ -243,18 +355,8 @@ def materialize_graph(
         )
         return _content_hash(_scan(spark, root, name, {batch_id}).drop("batch")).collect()
 
-    def inheriting(f):
-        # wrapped anew per submit, so every thread gets its own copy of the
-        # caller's local properties (the job group among them).  With
-        # pinned-thread mode off (PYSPARK_PIN_THREAD=false) the session form
-        # returns the session itself: threads then inherit nothing
-        wrap = inheritable_thread_target(spark)
-        return wrap(f) if callable(wrap) else f
-
-    with ThreadPoolExecutor(len(tables)) as pool:
-        futures = {name: pool.submit(inheriting(commit_table), name, df)
-                   for name, df in tables.items()}
-        stats = {name: f.result() for name, f in futures.items()}
+    stats = dict(zip(tables, concurrently(
+        spark, *[partial(commit_table, name, df) for name, df in tables.items()])))
 
     now = time.time()
     _commit_lineage(spark, root, [
@@ -282,11 +384,14 @@ def _scan(spark: SparkSession, root: str, table: str, committed: set) -> DataFra
 
 def read_graph(spark: SparkSession, root: str, table: str) -> DataFrame:
     """Read back only COMMITTED batches — the reader-side half of the
-    resume contract.  The committed set is resolved once, on the
-    driver, and becomes a ``batch IN (...)`` partition filter: planning
-    prunes uncommitted ``batch=`` directories from the scan, and no join
-    runs."""
-    return _scan(spark, root, table, committed_batches(spark, root))
+    resume contract.  The committed set comes from the store snapshot
+    and becomes a ``batch IN (...)`` partition filter: planning prunes
+    uncommitted ``batch=`` directories from the scan, and no join runs.
+    While the lineage listing is unchanged, every call returns the same
+    frame (committed batches never change), so the table is listed once
+    per snapshot."""
+    return _snapshot_frame(spark, root, table,
+                           lambda committed: _scan(spark, root, table, committed))
 
 
 def read_store(spark: SparkSession, root: str) -> DataFrame:
@@ -294,11 +399,15 @@ def read_store(spark: SparkSession, root: str) -> DataFrame:
     properties, both scanned under the same committed-batch set, so the
     two tables form one consistent snapshot.  The shape every
     store-wide consumer takes — the --profile statistics, the N-Quads
-    export, BGP answering, and cross-build diffing (triples.kb_diff)."""
-    committed = committed_batches(spark, root)
-    return (
-        _scan(spark, root, "edges", committed).select("s", "p", "o")
-        .unionByName(
-            _scan(spark, root, "node_props", committed)
-            .select("s", "p", F.col("val").alias("o")))
-    )
+    export, BGP answering, and cross-build diffing (triples.kb_diff).
+    Like :func:`read_graph`, a repeat call on an unchanged lineage
+    listing returns the same frame and runs no Spark job."""
+    def build(committed):
+        return (
+            _scan(spark, root, "edges", committed).select("s", "p", "o")
+            .unionByName(
+                _scan(spark, root, "node_props", committed)
+                .select("s", "p", F.col("val").alias("o")))
+        )
+
+    return _snapshot_frame(spark, root, "store", build)

@@ -191,3 +191,36 @@ def test_load_profile_raises_on_unreadable_meta(spark, tmp_path):
     part.write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
         load_profile(spark, str(root))
+
+
+def test_write_profile_tables_equal_the_direct_aggregates(spark, tmp_path):
+    """The tables ``write_profile`` writes are exactly ``void_stats`` and
+    ``characteristic_sets`` of its input, and the meta row records the
+    coverage and the predicate count."""
+    from rdf_n3_spark.operators.kb_stats import write_profile
+
+    kb = _kb(spark)
+    prof = write_profile(spark, kb, str(tmp_path / "graph"), "b1", covers={"b1", "b0"})
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(spark.read.parquet(f"{prof}/void")) == rows(void_stats(kb))
+    assert rows(spark.read.parquet(f"{prof}/char_sets")) == rows(characteristic_sets(kb))
+    assert rows(spark.read.parquet(f"{prof}/meta")) == [("b1", "b0|b1", 3)]
+
+
+def test_write_profile_leaves_its_input_unpersisted(spark, tmp_path):
+    """``read_store`` hands one frame to every reader of a snapshot, so a
+    persist left behind would pin the store for all of them."""
+    from pyspark import StorageLevel
+
+    from rdf_n3_spark.operators.kb_stats import write_profile
+    from rdf_n3_spark.operators.materialize import materialize_graph, read_store
+
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, _kb(spark), root, "b0")
+    store = read_store(spark, root)
+    write_profile(spark, store, root, "b0", covers={"b0"})
+    assert read_store(spark, root) is store
+    assert store.storageLevel == StorageLevel.NONE

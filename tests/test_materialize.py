@@ -36,8 +36,40 @@ TRIPLES = [
 
 def lineage(spark, root):
     """The committed lineage rows, less the commit time."""
-    return sorted(map(tuple, mat.read_lineage(spark, root).select(
+    return sorted(map(tuple, spark.read.parquet(f"{root}/lineage").select(
         "table", "bucket", "n_rows", "content_hash").collect()))
+
+
+def jobs_of(spark, group, action):
+    """Run ``action`` under job group ``group`` between two marker jobs;
+    return (the ids of every job it started, the ids of its jobs that
+    the status tracker files under ``group``)."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(g, f):
+        sc.setJobGroup(g, g)
+        try:
+            f()
+        finally:
+            sc._jsc.clearJobGroup()
+
+    def marker(g):
+        run(g, lambda: spark.range(1).collect())
+        deadline = time.monotonic() + 30  # job events reach the tracker asynchronously
+        while not tracker.getJobIdsForGroup(g) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        return set(tracker.getJobIdsForGroup(g))
+
+    first = marker(f"{group}-first")
+    run(group, action)
+    last = marker(f"{group}-last")
+    # job ids are handed out in submission order, and the tracker has
+    # seen every job before the last marker: the ids between the two
+    # markers are exactly the action's jobs
+    return set(range(max(first) + 1, min(last))), set(tracker.getJobIdsForGroup(group))
 
 
 @pytest.fixture
@@ -280,6 +312,19 @@ def test_table_jobs_run_in_the_callers_job_group(spark, triples, tmp_path):
     assert ids == set(range(max(first) + 1, min(last)))
 
 
+def test_profile_jobs_run_in_the_callers_job_group(spark, triples, tmp_path):
+    """``write_profile``'s concurrent aggregates, like the table commit,
+    run every job under the caller's job group."""
+    from rdf_n3_spark.operators.kb_stats import write_profile
+
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+    started, grouped = jobs_of(spark, "prof-test", lambda: write_profile(
+        spark, read_store(spark, root), root, "b001", covers={"b001"}))
+    assert len(grouped) >= 3
+    assert grouped == started
+
+
 def test_commit_without_pinned_threads(spark, triples, tmp_path, monkeypatch):
     """With pinned-thread mode off, ``inheritable_thread_target(spark)``
     returns the session, not a decorator; the commit still runs."""
@@ -319,3 +364,112 @@ def test_commit_does_not_depend_on_the_arrow_setting(spark, triples, tmp_path):
                       "content_hash:bigint,committed_at:double>")
     assert off[2:] == ([("b001", "b001", 5)],
                        "struct<batch_id:string,covers:string,n_predicates:bigint>")
+
+
+def test_repeat_read_of_an_unchanged_root_runs_no_job(spark, triples, tmp_path):
+    """Once a root's snapshot is resolved, reading it again while its
+    lineage is unchanged starts no Spark job: no lineage collect, and
+    the scan frames are reused rather than rebuilt."""
+    from rdf_n3_spark.operators.kb_stats import load_profile
+
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+    store = read_store(spark, root)
+    edges = read_graph(spark, root, "edges")
+
+    got = {}
+
+    def reread():
+        got.update(store=read_store(spark, root), edges=read_graph(spark, root, "edges"),
+                   committed=committed_batches(spark, root),
+                   profile=load_profile(spark, root))
+
+    started, _ = jobs_of(spark, "snapshot-hit", reread)
+    assert started == set()
+    assert got["store"] is store and got["edges"] is edges
+    assert got["committed"] == {"b001"}
+    assert got["profile"] == (None, None)  # no profile written yet
+    assert store.count() == len(TRIPLES)
+
+
+def test_a_commit_is_seen_by_the_next_read(spark, triples, tmp_path):
+    """A second commit in the same session changes the lineage listing,
+    so every reader resolves the store again; the profile written for
+    the first batch no longer covers the store until it is rewritten."""
+    from rdf_n3_spark.operators.kb_stats import load_profile, write_profile
+
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+    write_profile(spark, read_store(spark, root), root, "b001", covers={"b001"})
+    before = read_store(spark, root)
+    assert before.count() == len(TRIPLES)
+    assert read_graph(spark, root, "edges").count() == 3
+    assert load_profile(spark, root)[0] is not None
+
+    more = spark.createDataFrame([("sk:m3", ":refersTo", "ent:beta"),
+                                  ("sk:m3", ":atTurn", "4")], "s string, p string, o string")
+    materialize_graph(spark, more, root, batch_id="b002")
+    store = read_store(spark, root)
+    assert store is not before
+    assert store.count() == len(TRIPLES) + 2
+    assert read_graph(spark, root, "edges").count() == 4
+    assert {r["batch"] for r in read_graph(spark, root, "node_props").collect()} == {
+        "b001", "b002"}
+    assert committed_batches(spark, root) == {"b001", "b002"}
+    assert mat.commit_times(spark, root).keys() == {"b001", "b002"}
+    assert load_profile(spark, root) == (None, None)
+
+    write_profile(spark, store, root, "b002", covers=committed_batches(spark, root))
+    counts, _ = load_profile(spark, root)
+    assert counts[":atTurn"] == 1 and counts[":refersTo"] == 3
+
+
+def test_snapshot_is_per_session_and_bounded(spark, triples, tmp_path):
+    """Another session gets its own snapshot and frames, a commit made
+    through it is seen by this session's next read, and the cache keeps
+    at most a fixed number of roots."""
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+    mine = read_store(spark, root)
+    other = spark.newSession()
+    theirs = read_store(other, root)
+    assert theirs is not mine and theirs.sparkSession is other
+    more = other.createDataFrame([("sk:m3", ":refersTo", "ent:beta")],
+                                 "s string, p string, o string")
+    materialize_graph(other, more, root, batch_id="b002")
+    assert committed_batches(spark, root) == {"b001", "b002"}
+    assert read_store(spark, root).count() == len(TRIPLES) + 1
+
+    roots = [str(tmp_path / f"empty{i}") for i in range(mat._SNAPSHOTS_MAX + 4)]
+    for r in roots:
+        assert committed_batches(spark, r) == set()
+    assert len(mat._SNAPSHOTS) == mat._SNAPSHOTS_MAX
+    assert (spark, roots[-1]) in mat._SNAPSHOTS and (spark, root) not in mat._SNAPSHOTS
+    assert read_store(spark, root).count() == len(TRIPLES) + 1
+
+
+def test_snapshot_cache_under_concurrent_readers(spark, triples, tmp_path):
+    """Driver threads reading more roots than the cache holds, with
+    frequent thread switches, all get the right committed sets, and the
+    cache stays within its bound."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    root = str(tmp_path / "graph")
+    materialize_graph(spark, triples, root, batch_id="b001")
+    roots = [root] + [str(tmp_path / f"empty{i}") for i in range(mat._SNAPSHOTS_MAX)]
+
+    def reader(i):
+        return [(r, committed_batches(spark, r)) for r in roots[i % 3::3]]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            results = [f.result(timeout=120) for f in [pool.submit(reader, i) for i in range(48)]]
+    finally:
+        sys.setswitchinterval(interval)
+    for got in results:
+        for r, committed in got:
+            assert committed == ({"b001"} if r == root else set()), r
+    assert len(mat._SNAPSHOTS) <= mat._SNAPSHOTS_MAX
