@@ -51,10 +51,6 @@ from rdf_n3_spark.operators.curation import (
     paragraph_dedup,
     paragraph_neardup,
 )
-from rdf_n3_spark.operators.substrings import (
-    dup_spans,
-    substring_dup_stats,
-)
 from rdf_n3_spark.operators.clustering import (
     cluster_sample,
     embed_kmeans,
@@ -77,16 +73,8 @@ from rdf_n3_spark.operators.dedup import (
     source_dup_matrix,
 )
 from rdf_n3_spark.operators.materialize import graph_edges, graph_nodes
-from rdf_n3_spark.operators.sketch import (
-    cms_token_freq,
-    kmv_distinct_tokens,
-    token_heavy_hitters,
-)
 from rdf_n3_spark.operators.conversations import conv_dedup
-from rdf_n3_spark.operators.mentions import (
-    extract_mentions,
-    mention_contexts,
-)
+from rdf_n3_spark.operators.mentions import extract_mentions
 from rdf_n3_spark.operators.similarity import (
     ann_topk,
     ann_topk_exact_oracle,
@@ -203,30 +191,6 @@ def _q_repetition(spark, sf_dir):
         ).alias("text"),
     )
     return repetition_stats(enriched)
-
-
-def _q_bloom_decontaminate(spark, sf_dir):
-    """Bloom-filter decontamination (operators/sketch.py round 5) with
-    the SAME 5% eval split as _q_decontaminate — but the benchmark is
-    ingested as TWO shard filters folded with bloom_merge, so this one
-    driver row certifies build + exact-merge + probe together: a
-    non-exact fold would flip probe bits and hash-mismatch the oracle
-    (which builds one filter over the whole benchmark)."""
-    from pyspark.sql import functions as F
-
-    from rdf_n3_spark.operators.sketch import (
-        bloom_decontaminate,
-        bloom_gram_filter,
-        bloom_merge,
-    )
-
-    d = _docs(spark, sf_dir)
-    corpus = d.filter(F.col("doc_id") % 20 != 7)
-    filt = bloom_merge(
-        bloom_gram_filter(d.filter(F.col("doc_id") % 40 == 7)),
-        bloom_gram_filter(d.filter(F.col("doc_id") % 40 == 27)),
-    )
-    return bloom_decontaminate(corpus, benchmark_filter=filt)
 
 
 def _q_decontaminate(spark, sf_dir):
@@ -926,30 +890,6 @@ def _q_contrastive_incremental(spark, sf_dir):
         docs.where(F.col("doc_id") % 10 != 7))
 
 
-def _q_kmv_merged(spark, sf_dir):
-    """Two half-corpus sketches (doc_id parity split) merged then
-    finished — exercises the persist/merge/estimate split; result must
-    equal sketching the whole corpus (the oracle runs the direct
-    whole-corpus query), proving mergeability end-to-end."""
-    from rdf_n3_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-
-    docs = _docs(spark, sf_dir)
-
-    def toks(df):
-        return df.select(
-            "source", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-
-    a = kmv_sketch(toks(docs.where(F.col("doc_id") % 2 == 0)),
-                   "source", F.col("tok"))
-    b = kmv_sketch(toks(docs.where(F.col("doc_id") % 2 == 1)),
-                   "source", F.col("tok"))
-    return kmv_estimate(kmv_merge(a, b, "source"), "source")
-
-
 def _kb(spark, sf_dir):
     """The mention KB (skolemized mention triples ∪ entity aggregates)
     — the table the profile statistics describe."""
@@ -1010,28 +950,6 @@ def _q_embedding_incremental(spark, sf_dir):
         embs.where(F.col("vec_id") % 10 == 7),
         embs.where(F.col("vec_id") % 10 != 7),
         threshold=0.35,
-    )
-
-
-def _q_cms_merged(spark, sf_dir):
-    """Two half-corpus count-min sketches (doc_id parity split) merged
-    then probed — the fold is an exact counter sum, so the oracle IS
-    the direct whole-corpus query: a hash-mismatch here would mean the
-    daily→monthly rollup property is broken."""
-    from rdf_n3_spark.operators.sketch import cms_lookup, cms_merge, cms_sketch
-
-    docs = _docs(spark, sf_dir)
-
-    def toks(df):
-        return df.select(
-            F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-
-    a = cms_sketch(toks(docs.where(F.col("doc_id") % 2 == 0)), F.col("tok"))
-    b = cms_sketch(toks(docs.where(F.col("doc_id") % 2 == 1)), F.col("tok"))
-    probes = toks(docs.where(F.col("doc_id") < 3))
-    return (
-        cms_lookup(cms_merge(a, b), probes, F.col("tok"))
-        .withColumnRenamed("v", "tok")
     )
 
 
@@ -1190,7 +1108,8 @@ def _q_link_best(spark, sf_dir):
 
 def _q_n3_string(spark, sf_dir):
     """log:n3String: round-trip each conversation's parsed snippet back
-    through the distributed N3 writer sink (applyInPandas per graph)."""
+    through the distributed N3 writer sink (one mapInPandas pass over
+    the JVM-grouped graphs)."""
     t = transcripts(spark, sf_dir).where(F.col("turn_idx") == 0)
     docs = t.select(
         F.col("conv_id").alias("doc_id"),
@@ -1258,16 +1177,18 @@ def _q_graph_conclusions(spark, sf_dir):
 # operators at the tail (leaving 41 rows driver-unverified), round 4
 # pinned the window to the never-certified block (all 41 went green in
 # CORRECTNESS_r04) but its own 6 newest overflowed.  ROUND 5 completes
-# the rotation: those formerly-overflow queries (cms_freq,
-# relation_triples, kb_void, source_weights, paragraph_neardup) lead
-# the window together with every new round-5 operator, so after
+# the rotation: the five formerly-overflow queries led the window
+# together with every new round-5 operator, so after
 # CORRECTNESS_r05 every query (144 incl. that round's additions) has a
 # driver-green row in some round's artifact.  The event-analytics and
 # multimodal families were pruned afterwards (127 queries), then the
 # graph-analytics and temporal-KB families (114 queries), then the
 # conversation-curation operators, entity_enrich and kb_signatures
-# (104 queries remain); each pruning frees window slots for the
-# re-cert slate, which now fills 31 of the 50 rows.  tests/test_entry_parity.py::test_driver_window_covers_uncertified
+# (104 queries), then the sketch, substring-span and mention-context
+# operators (95 queries remain).  Each pruning frees window slots:
+# _ROUND_NEW now holds 15 names and the re-cert slate fills the other
+# 35 of the 50 rows.
+# tests/test_entry_parity.py::test_driver_window_covers_uncertified
 # pins the invariant.  Rotation contract for FUTURE rounds: genuinely
 # new queries enter at the head of _ROUND_NEW; _RECERTIFY is the
 # priority-ordered re-certification slate (reference §2 surface first,
@@ -1275,18 +1196,17 @@ def _q_graph_conclusions(spark, sf_dir):
 # truncated from the tail so the window stays exactly 50.
 _ROUND_NEW = [
     # round-5 additions enter here, newest first
-    "mention_contexts", "corpus_datasheet",
+    "corpus_datasheet",
     "conv_dedup",
     "contrastive_incremental", "contrastive_pairs",
     "split_leakage",
     "search_rrf", "search_bm25",
     "label_consistency",
     "token_budget_sample",
-    "n3_write_nquads", "token_heavy_hitters",
-    "bloom_decontaminate", "ann_ivf_multitable",
+    "n3_write_nquads", "ann_ivf_multitable",
     # the round-4 queries that overflowed CORRECTNESS_r04's window
     # (pytest-oracle green since r4; driver-certified in round 5)
-    "cms_freq", "relation_triples", "kb_void", "source_weights",
+    "relation_triples", "kb_void", "source_weights",
     "paragraph_neardup",
 ]
 
@@ -1325,8 +1245,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "transcripts_build": _q_transcripts,
-        "mention_contexts": lambda s, d: mention_contexts(
-            transcripts(s, d)),
         "corpus_datasheet": lambda s, d: corpus_datasheet(_docs(s, d)),
         "conv_dedup": lambda s, d: conv_dedup(transcripts(s, d)),
         "mention_extract": _q_mentions,
@@ -1392,16 +1310,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "search_topk": _q_search,
         "search_bm25": _q_search_bm25,
         "search_rrf": _q_search_rrf,
-        "kmv_distinct": lambda s, d: kmv_distinct_tokens(_docs(s, d)),
-        "kmv_merged": _q_kmv_merged,
-        "bloom_decontaminate": _q_bloom_decontaminate,
-        # exact corpus-global top tokens via the MG candidate prune —
-        # the oracle computes the full-vocabulary groupBy top-k, so a
-        # candidate-set miss (guarantee violation) would hash-mismatch
-        "token_heavy_hitters": lambda s, d: token_heavy_hitters(_docs(s, d)),
         "n3_write_nquads": _q_nquads,
-        "cms_freq": lambda s, d: cms_token_freq(_docs(s, d)),
-        "cms_merged": _q_cms_merged,
         "embedding_incremental": _q_embedding_incremental,
         "relation_candidates": _q_relations,
         "relation_triples": _q_relation_triples,
@@ -1437,9 +1346,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d), n=3, min_docs=5),
         "boilerplate_share": lambda s, d: boilerplate_share(
             _docs(s, d), n=3, min_docs=5),
-        "substring_spans": lambda s, d: dup_spans(_docs(s, d), k=8),
-        "substring_dedup": lambda s, d: substring_dup_stats(
-            _docs(s, d), k=8, max_dup_pct=50),
         "dedup_source_matrix": lambda s, d: source_dup_matrix(_docs(s, d)),
         "dedup_incremental": lambda s, d: incremental_neardup(
             _docs(s, d).where(F.col("doc_id") % 10 == 7),
@@ -1482,46 +1388,6 @@ _CHUNKS_SQL = """
             )
 """
 
-
-# mirrors operators.sketch: bottom-k md5 per source, estimate = ONE
-# double division of exactly-representable ints ((k-1)·2^60 / kth) —
-# IEEE-identical across engines; shared by kmv_distinct AND kmv_merged
-# (merging two half-corpus sketches equals sketching the whole corpus)
-# mirrors operators.sketch count-min: row-d cell of tok =
-# md5("d:tok") nibbles 1-15 as bigint mod 8192; estimate = min over
-# the 4 rows — integer-exact in both engines; shared by cms_freq AND
-# cms_merged (an elementwise-sum merge of two half-corpus sketches
-# answers probes identically to the whole-corpus sketch)
-_CMS_SQL = """
-    WITH ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-    toks AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-    ),
-    cells AS (
-      SELECT d,
-             CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || tok), 1, 15)
-                  AS BIGINT) % 8192 AS col,
-             count(*) AS cnt
-      FROM toks CROSS JOIN ds
-      GROUP BY 1, 2
-    ),
-    probes AS (
-      SELECT DISTINCT tok FROM (
-        SELECT unnest(string_split(lower(text), ' ')) AS tok
-        FROM documents WHERE doc_id < 3
-      )
-    ),
-    pcells AS (
-      SELECT p.tok, ds.d,
-             CAST('0x' || substr(md5(CAST(ds.d AS VARCHAR) || ':' || p.tok), 1, 15)
-                  AS BIGINT) % 8192 AS col
-      FROM probes p CROSS JOIN ds
-    )
-    SELECT pc.tok AS tok,
-           CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est_count
-    FROM pcells pc LEFT JOIN cells c USING (d, col)
-    GROUP BY pc.tok
-"""
 
 # shared mention-pair / middle-span CTE chain for the relation
 # oracles (the max_gap literal — gap 3 -> b.pos - a.pos <= 4 —
@@ -1640,33 +1506,6 @@ _SEARCH_BM25_SQL = """
 """
 
 
-_KMV_SQL = """
-    WITH toks AS (
-      SELECT source, unnest(string_split(lower(text), ' ')) AS tok
-      FROM documents
-    ),
-    h AS (SELECT DISTINCT source, md5(tok) AS h FROM toks),
-    r AS (
-      SELECT source, h,
-             row_number() OVER (PARTITION BY source ORDER BY h) AS rk
-      FROM h
-    ),
-    tk AS (
-      SELECT source, count(*) AS n_seen, max(h) AS max_h
-      FROM r WHERE rk <= 64 GROUP BY source
-    )
-    SELECT source, n_seen,
-           CASE WHEN n_seen >= 64 THEN max_h END AS kth_hash,
-           CASE WHEN n_seen < 64 THEN CAST(n_seen AS BIGINT)
-                ELSE CAST(floor(
-                  63.0 * 1152921504606846976.0
-                  / CAST('0x' || substr(max_h, 1, 15) AS BIGINT)
-                ) AS BIGINT)
-           END AS est_distinct
-    FROM tk
-"""
-
-
 def oracle_sql() -> dict[str, str]:
     d = {
         "transcripts_build": f"""
@@ -1698,30 +1537,6 @@ def oracle_sql() -> dict[str, str]:
         "mention_extract": f"""
             {_MENTIONS}
             SELECT conv_id, turn_idx, pos, surface, norm FROM mentions
-        """,
-        # mirrors mentions.mention_contexts: the zipped unnest keeps
-        # the token list in-row, contexts are 1-based list slices
-        # ([pos+1-w .. pos] and [pos+2 .. pos+1+w], w=3) so no join
-        # back to the turn text
-        "mention_contexts": f"""
-            WITH {_T},
-            toks AS (
-              SELECT conv_id, turn_idx,
-                     string_split(text, ' ') AS tk,
-                     unnest(generate_series(1,
-                         len(string_split(text, ' ')))) - 1 AS pos,
-                     unnest(string_split(text, ' ')) AS surface
-              FROM transcripts
-            )
-            SELECT conv_id, turn_idx, CAST(pos AS INT) AS pos, surface,
-                   lower(surface) AS norm,
-                   array_to_string(
-                     tk[greatest(pos + 1 - 3, 1) : pos], ' ')
-                     AS left_ctx,
-                   array_to_string(tk[pos + 2 : pos + 4], ' ')
-                     AS right_ctx
-            FROM toks
-            WHERE regexp_matches(surface, '^(?i)(part|supp)_[a-z0-9]+$')
         """,
         # mirrors curation.corpus_datasheet: one (source, lang)
         # aggregate, all exact integers, dup rate via distinct md5
@@ -2750,63 +2565,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             FROM documents d LEFT JOIN hits USING (doc_id)
             WHERE d.doc_id % 20 <> 7
         """,
-        # mirrors sketch.bloom_decontaminate (n=4, m=8192, k=3; 63-bit
-        # words): ONE filter over the whole benchmark — the Spark side
-        # folds two shard filters, and the exact bit_or merge makes the
-        # tables identical, so this row certifies build+merge+probe
-        "bloom_decontaminate": """
-            WITH grams AS (
-              SELECT DISTINCT doc_id, g FROM (
-                SELECT doc_id,
-                       unnest(list_transform(
-                         generate_series(1, greatest(len(string_split(lower(text), ' ')) - 3, 1)),
-                         i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 3), ' ')
-                       )) AS g
-                FROM documents)
-            ),
-            bpos AS (
-              SELECT (('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || g), 1, 15))::BIGINT % 8192) AS pos
-              FROM (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 7),
-                   (SELECT unnest([0, 1, 2]) AS i)
-            ),
-            filt AS (
-              SELECT pos // 63 AS word,
-                     bit_or(1::BIGINT << CAST(pos % 63 AS INT)) AS bits
-              FROM bpos GROUP BY 1
-            ),
-            cg AS (SELECT doc_id, g FROM grams WHERE doc_id % 20 <> 7),
-            ppos AS (
-              SELECT g, (('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || g), 1, 15))::BIGINT % 8192) AS pos
-              FROM (SELECT DISTINCT g FROM cg), (SELECT unnest([0, 1, 2]) AS i)
-            ),
-            need AS (
-              SELECT g, pos // 63 AS word,
-                     bit_or(1::BIGINT << CAST(pos % 63 AS INT)) AS need
-              FROM ppos GROUP BY 1, 2
-            ),
-            hitw AS (
-              SELECT g, CASE WHEN (coalesce(bits, 0) & need) = need
-                             THEN 1 ELSE 0 END AS h
-              FROM need LEFT JOIN filt USING (word)
-            ),
-            verd AS (SELECT g, min(h) AS mp FROM hitw GROUP BY g)
-            SELECT c.doc_id, CAST(sum(mp) AS BIGINT) AS n_hits,
-                   sum(mp) > 0 AS contaminated
-            FROM cg c JOIN verd USING (g) GROUP BY c.doc_id
-        """,
-        # mirrors sketch.token_heavy_hitters (k=20): the oracle does
-        # the full-vocabulary exact top-k — the Spark side's MG
-        # candidate prune must be result-invisible to hash-match
-        "token_heavy_hitters": """
-            WITH toks AS (
-              SELECT unnest(string_split(lower(text), ' ')) AS v
-              FROM documents
-            ),
-            cnt AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY v)
-            SELECT v, n,
-                   CAST(row_number() OVER (ORDER BY n DESC, v) AS INT) AS rank
-            FROM cnt QUALIFY rank <= 20
-        """,
         # mirrors curation.paragraph_dedup over the same self-union
         # (docs < 50 duplicated at +10000 ids): corpus-first occurrence
         # of each paragraph hash survives, every other copy is_dup=1
@@ -2971,83 +2729,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
                    round(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS boiler_share
             FROM grams g LEFT JOIN boiler b USING (gram)
             GROUP BY g.doc_id
-        """,
-        # mirrors substrings.dup_spans (k=8 token windows): duplicated
-        # k-grams → per-doc gaps-and-islands interval merge
-        "substring_spans": """
-            WITH toks AS (
-              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-            ), g AS (
-              SELECT doc_id, i AS pos,
-                     md5(array_to_string(list_slice(t, i, i + 7), ' ')) AS gram_hash
-              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i)
-              WHERE len(t) >= 8
-            ), dup AS (
-              SELECT gram_hash FROM g GROUP BY 1 HAVING count(*) > 1
-            ), hits AS (
-              SELECT g.doc_id, g.pos AS s, g.pos + 7 AS e
-              FROM g JOIN dup USING (gram_hash)
-            ), isl AS (
-              SELECT doc_id, s, e,
-                     CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-                          THEN 1 ELSE 0 END AS ni
-              FROM hits
-              WINDOW w AS (PARTITION BY doc_id ORDER BY s
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            ), isl2 AS (
-              SELECT doc_id, s, e,
-                     sum(ni) OVER (PARTITION BY doc_id ORDER BY s
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS island
-              FROM isl
-            )
-            SELECT doc_id,
-                   CAST(min(s) AS BIGINT) AS span_start,
-                   CAST(max(e) AS BIGINT) AS span_end,
-                   CAST(max(e) - min(s) + 1 AS BIGINT) AS span_len
-            FROM isl2 GROUP BY doc_id, island
-        """,
-        # mirrors substrings.substring_dup_stats (k=8, max_dup_pct=50):
-        # span coverage per doc, integer keep test
-        "substring_dedup": """
-            WITH toks AS (
-              SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-            ), g AS (
-              SELECT doc_id, i AS pos,
-                     md5(array_to_string(list_slice(t, i, i + 7), ' ')) AS gram_hash
-              FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i)
-              WHERE len(t) >= 8
-            ), dup AS (
-              SELECT gram_hash FROM g GROUP BY 1 HAVING count(*) > 1
-            ), hits AS (
-              SELECT g.doc_id, g.pos AS s, g.pos + 7 AS e
-              FROM g JOIN dup USING (gram_hash)
-            ), isl AS (
-              SELECT doc_id, s, e,
-                     CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-                          THEN 1 ELSE 0 END AS ni
-              FROM hits
-              WINDOW w AS (PARTITION BY doc_id ORDER BY s
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            ), isl2 AS (
-              SELECT doc_id, s, e,
-                     sum(ni) OVER (PARTITION BY doc_id ORDER BY s
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS island
-              FROM isl
-            ), spans AS (
-              SELECT doc_id, max(e) - min(s) + 1 AS span_len
-              FROM isl2 GROUP BY doc_id, island
-            ), per_doc AS (
-              SELECT doc_id, sum(span_len) AS dup_tokens FROM spans GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(len(string_split(lower(d.text), ' ')) AS BIGINT) AS total_tokens,
-                   CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-                   CAST(CASE WHEN coalesce(p.dup_tokens, 0) * 100
-                                  <= 50 * len(string_split(lower(d.text), ' '))
-                        THEN 1 ELSE 0 END AS INT) AS keep
-            FROM documents d LEFT JOIN per_doc p USING (doc_id)
         """,
         # mirrors curation.pack_sequences (capacity 256, 8 shards):
         # the greedy per-shard scan as a recursive CTE over rn
@@ -3346,23 +3027,6 @@ keep AS (SELECT a, b, score FROM scored WHERE score >= 0.5)
             SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
             FROM r WHERE rank <= 10
         """,
-        # mirrors operators.sketch.kmv_distinct_tokens: bottom-k md5,
-        # estimate = ONE double division of exactly-representable ints
-        # (63·2^60 and kth_int < 2^60) — IEEE-identical across engines
-        "kmv_distinct": _KMV_SQL,
-        # the MERGED two-half sketch must estimate identically to the
-        # whole-corpus sketch (bottom-k(bottom-kA ∪ bottom-kB) =
-        # bottom-k(A ∪ B)) — the oracle IS the direct whole-corpus
-        # query, so a green row proves the merge property end-to-end
-        "kmv_merged": _KMV_SQL,
-        # mirrors operators.sketch.cms_token_freq: depth×width counter
-        # table from md5("d:tok") cells, probe = min over depth rows —
-        # all bigint-exact, so the row hashes match bit-for-bit
-        "cms_freq": _CMS_SQL,
-        # the MERGED two-half sketch is an elementwise counter sum, so
-        # it must answer probes identically to the whole-corpus sketch
-        # — the oracle IS the direct whole-corpus query
-        "cms_merged": _CMS_SQL,
         "doc_fingerprint": """
             WITH sh AS (
               SELECT doc_id,

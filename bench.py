@@ -143,12 +143,6 @@ def main() -> None:
     from rdf_n3_spark.operators.mentions import extract_mentions
     from rdf_n3_spark.operators.relations import relation_candidates
     from rdf_n3_spark.operators.similarity import ivf_topk, ivf_topk_tables
-    from rdf_n3_spark.operators.sketch import (
-        bloom_decontaminate,
-        kmv_distinct_tokens,
-        token_heavy_hitters,
-    )
-    from rdf_n3_spark.operators.substrings import dup_spans
     from rdf_n3_spark.operators.triples import entity_triples, mention_triples
     from rdf_n3_spark.sources.n3_sink import serialize_nquads
     from rdf_n3_spark.sources.n3_source import parse_documents
@@ -200,16 +194,10 @@ def main() -> None:
             "entity_canon": sink(canonical_map(extract_mentions(transcripts_df))),
             "dedup_minhash": sink(minhash_neardup_pairs(docs_tbl)),
             "ann_ivf_multiprobe": sink(ivf_topk(embs_tbl, hamming=1).drop("cos")),
-            "substring_spans": sink(dup_spans(docs_tbl, k=8)),
             "keyword_topk": sink(keyword_topk(docs_tbl)),
             "relation_candidates": sink(relation_candidates(transcripts_df)),
             "kb_char_sets": sink(characteristic_sets(kb)),
-            "kmv_distinct": sink(kmv_distinct_tokens(docs_tbl)),
             "ann_ivf_multitable": sink(ivf_topk_tables(embs_tbl).drop("cos")),
-            "bloom_decontaminate": sink(bloom_decontaminate(
-                docs_tbl.where(F.col("doc_id") % 20 != 7),
-                docs_tbl.where(F.col("doc_id") % 20 == 7))),
-            "token_heavy_hitters": sink(token_heavy_hitters(docs_tbl)),
             "search_bm25": sink(search_bm25(docs_tbl, bm25_q)),
             # the minhash pair set + narrow split map — its delta vs the
             # dedup_minhash row IS the audit's marginal cost

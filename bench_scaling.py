@@ -51,7 +51,7 @@ def run_level(cpus: int) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=SF_DIR,
                BENCH_RUNS="2", SPARK_GRAFT_MULT=MULT, BENCH_STAT="min",
                BENCH_QUERIES="kg_pipeline,n3_parse_udf,entity_canon,"
-                             "kmv_distinct")
+                             "kb_char_sets")
     out = subprocess.run(
         [sys.executable, os.path.join(os.path.dirname(__file__), "bench.py")],
         env=env, capture_output=True, text=True, timeout=3600,
@@ -148,15 +148,16 @@ recompute, no shuffle reuse).
 
 ## Results
 
-| parallelism | turns/sec | kg_pipeline sec (min) | all rounds | n3_parse_udf sec | entity_canon sec | kmv_distinct sec |
+| parallelism | turns/sec | kg_pipeline sec (min) | all rounds | n3_parse_udf sec | entity_canon sec | kb_char_sets sec |
 |---|---|---|---|---|---|---|
-| local[{n}] | {tn} | {results[n]["queries"]["kg_pipeline"]} | {results[n]["all_kg_walls"]} | {results[n]["queries"]["n3_parse_udf"]} | {results[n]["queries"]["entity_canon"]} | {results[n]["queries"]["kmv_distinct"]} |
-| local[{four_n}] | {t4n} | {results[four_n]["queries"]["kg_pipeline"]} | {results[four_n]["all_kg_walls"]} | {results[four_n]["queries"]["n3_parse_udf"]} | {results[four_n]["queries"]["entity_canon"]} | {results[four_n]["queries"]["kmv_distinct"]} |
+| local[{n}] | {tn} | {results[n]["queries"]["kg_pipeline"]} | {results[n]["all_kg_walls"]} | {results[n]["queries"]["n3_parse_udf"]} | {results[n]["queries"]["entity_canon"]} | {results[n]["queries"]["kb_char_sets"]} |
+| local[{four_n}] | {t4n} | {results[four_n]["queries"]["kg_pipeline"]} | {results[four_n]["all_kg_walls"]} | {results[four_n]["queries"]["n3_parse_udf"]} | {results[four_n]["queries"]["entity_canon"]} | {results[four_n]["queries"]["kb_char_sets"]} |
 
-(kmv_distinct — the round-4 mergeable-sketch family's scaling
-evidence row — runs over the UNREPLICATED documents table, so its
-absolute wall is small; the per-level walls above show the sketch's
-two-stage bottom-k spreading across cores with no per-key window.)
+(kb_char_sets — the characteristic-set profile that the job's profile
+stage writes and the BGP planner reads — runs over the same replicated
+KB as the headline; the per-level walls above show its two hash
+aggregations (per subject, then per predicate set) spreading across
+cores.)
 
 **Scaling efficiency = ({t4n} / {tn}) / {four_n // n} = {eff:.3f}**
 (target ≥ 0.8 → {"PASS" if eff >= 0.8 else "MISS"}; a value marginally

@@ -428,14 +428,13 @@ def paragraph_dedup(documents: DataFrame) -> DataFrame:
     of the same document) and this occurrence is not the corpus-first
     (min (doc_id, para_idx)) one — so exactly one copy of each
     repeated paragraph survives, the removal rule a curation pass
-    applies in place.  The third dedup granularity next to token-span
-    (`substrings`) and content-defined-chunk (`chunk_dedup`) passes.
+    applies in place.  The paragraph-grain twin of the
+    content-defined-chunk (`chunk_dedup`) pass.
 
     Scale shape: posexplode paragraphs (linear) → ONE map-side-
     combinable groupBy per hash computing (count, min position) →
     equi-join back (1 build row per hash, AQE-splittable on hot
-    boilerplate paragraphs).  Same duplicate-test shape as
-    `substrings.dup_spans` — never a per-hash window."""
+    boilerplate paragraphs) — never a per-hash window."""
     paras = (
         documents.select(
             "doc_id",

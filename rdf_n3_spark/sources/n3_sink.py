@@ -3,18 +3,18 @@
 The distributed form of the reference's writer surface
 (``log:n3String``, lib/rdf/n3/algebra/log/n3_string.rb:13-22, and the
 Writer epilogue, writer.rb:157-198): graphs are independent documents,
-so serialization is a grouped Arrow-batched stage — one Python worker
-serializes a whole batch of graphs; output inherits the group
-partitioning. The actual text rules (prefix compaction, predicate
-sugar, collections, bnode property lists) live in
-functions/n3_writer.N3Writer, shared verbatim between this distributed
-sink and driver-side debugging.
+so serialization is a grouped stage — the JVM gathers and orders each
+graph's statements, then one Arrow-batched Python pass serializes a
+whole batch of graphs; output inherits the group partitioning. The
+actual text rules (prefix compaction, predicate sugar, collections,
+bnode property lists) live in functions/n3_writer.N3Writer, shared
+verbatim between this distributed sink and driver-side debugging.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 OUT_SCHEMA = "doc_id string, n3 string"
 
@@ -22,25 +22,25 @@ OUT_SCHEMA = "doc_id string, n3 string"
 def serialize_graphs(quads: DataFrame, group_col: str = "doc_id") -> DataFrame:
     """(doc_id, s, p, o[, g]) rows → (doc_id, n3) documents.
 
-    ``applyInPandas`` over the group key: the shuffle brings each
-    document's statements to one worker (documents are small; the
-    corpus is many documents — the classic "lots of small groups"
-    shape that groupBy handles without skew).
-    """
-    has_g = "g" in quads.columns
+    One shuffle gathers each document's statements in the JVM as an
+    ``array_sort``-ed list of (s, p, o, g) structs (many small
+    documents: the shape groupBy handles without skew); one
+    ``mapInPandas`` pass then serializes every document of an Arrow
+    batch, so Python pays per batch, not per document."""
+    g = F.col("g") if "g" in quads.columns else F.lit("")
+    docs = quads.groupBy(F.col(group_col).cast("string").alias("doc_id")).agg(
+        F.array_sort(F.collect_list(F.struct("s", "p", "o", g.alias("g"))))
+        .alias("qs"))
 
-    def write(pdf: pd.DataFrame) -> pd.DataFrame:
+    def write(batches):
         from rdf_n3_spark.functions.n3_writer import N3Writer
 
-        doc = str(pdf[group_col].iloc[0])
-        rows = pdf.sort_values(["s", "p", "o"])
-        qs = [
-            (r.s, r.p, r.o, (r.g if has_g else ""))
-            for r in rows.itertuples(index=False)
-        ]
-        return pd.DataFrame({"doc_id": [doc], "n3": [N3Writer(qs).serialize()]})
+        for pdf in batches:
+            yield pdf[["doc_id"]].assign(n3=[
+                N3Writer([tuple(q.values()) for q in qs]).serialize()
+                for qs in pdf["qs"]])
 
-    return quads.groupBy(group_col).applyInPandas(write, schema=OUT_SCHEMA)
+    return docs.mapInPandas(write, schema=OUT_SCHEMA)
 
 
 def expand_term(col, prefixes: dict | None = None):
@@ -52,8 +52,6 @@ def expand_term(col, prefixes: dict | None = None):
     ({prefix: namespace-IRI}) into ``<namespace+local>``.  Unknown
     prefixes fall back to urn:x-kg: so the line stays parseable
     instead of silently emitting a bare word."""
-    from pyspark.sql import functions as F
-
     c = col if not isinstance(col, str) else F.col(col)
     first = F.substring(c, 1, 1)
     passthrough = first.isin('"', "<", "?") | c.startswith("_:")
@@ -81,8 +79,6 @@ def serialize_nquads(quads: DataFrame, prefixes: dict | None = None,
     format a 100 TB export job actually writes.  Pair with
     ``.write.text(...)`` for the on-disk form; round-trips through the
     engine's own parser (pinned by tests)."""
-    from pyspark.sql import functions as F
-
     parts = [expand_term("s", prefixes), expand_term("p", prefixes),
              expand_term("o", prefixes)]
     if graph_col is not None:

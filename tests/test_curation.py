@@ -402,6 +402,26 @@ def test_chunk_dedup_finds_shared_passages(spark):
     assert sum(r["n_copies"] for r in rows) == chunk_documents(docs).count()
 
 
+def test_paragraph_dedup_first_copy_survives(spark):
+    """Dolma-style paragraph dedup: corpus-first occurrence of each
+    repeated paragraph keeps is_dup=0, every later copy (cross-doc or
+    later position in the SAME doc) is 1; blank paragraphs drop."""
+    from rdf_n3_spark.operators.curation import paragraph_dedup
+
+    docs = spark.createDataFrame(
+        [(1, "shared para\nunique one"),
+         (2, "other text\nshared para"),
+         (3, "shared para\n\n  \nshared para")],  # blanks + self-repeat
+        ["doc_id", "text"])
+    rows = {(r["doc_id"], r["para_idx"]): r["is_dup"]
+            for r in paragraph_dedup(docs).collect()}
+    assert rows[(1, 0)] == 0          # corpus-first copy survives
+    assert rows[(2, 1)] == 1 and rows[(3, 0)] == 1
+    assert rows[(3, 3)] == 1          # same-doc repeat is a dup too
+    assert (3, 1) not in rows and (3, 2) not in rows  # blanks dropped
+    assert rows[(1, 1)] == 0 and rows[(2, 0)] == 0    # uniques survive
+
+
 def test_paragraph_neardup_catches_mutated_boilerplate(spark):
     """Near-identical (but not byte-equal) template paragraphs cluster
     to the corpus-first copy; unique paragraphs survive; the packed-id

@@ -50,7 +50,7 @@ def test_driver_window_covers_uncertified():
     assert len(names) == len(set(names))
     window = set(names[:50])
     overflow_r4 = {
-        "cms_freq", "relation_triples", "kb_void", "source_weights",
+        "relation_triples", "kb_void", "source_weights",
         "paragraph_neardup",
     }
     assert overflow_r4 <= set(entry_mod._ROUND_NEW)
@@ -97,13 +97,11 @@ CROSS_SF = [
     "lm_score", "dedup_incremental",
     # round-4 queries (each was verified at both SFs when added; this
     # pins the SF-independence going forward)
-    "kmv_merged", "cms_freq", "cms_merged",
     "embedding_incremental", "kb_char_sets", "kb_void", "kb_star_card",
     "paragraph_neardup", "source_weights", "relation_candidates",
     "relation_triples",
     # round-5 queries
-    "ann_ivf_multitable", "bloom_decontaminate", "token_heavy_hitters",
-    "n3_write_nquads", "token_budget_sample",
+    "ann_ivf_multitable", "n3_write_nquads", "token_budget_sample",
     "label_consistency", "search_bm25", "search_rrf",
 ]
 

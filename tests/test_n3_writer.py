@@ -224,3 +224,39 @@ def test_nquads_sink_is_a_pure_narrow_project(spark):
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == base.count("Exchange") == 1, plan
     assert "Python" not in plan and "Arrow" not in plan, plan
+
+
+# ------------------------------------------------- grouped N3 document sink
+
+def test_graph_sink_equals_driver_writer_per_document(spark):
+    """serialize_graphs over multi-statement documents — a formula
+    (g ≠ ""), blank-node objects, a collection — gives each document
+    the driver-side N3Writer text of its sorted quads; without a ``g``
+    column every statement is in the default graph."""
+    from rdf_n3_spark.functions.n3_writer import N3Writer
+    from rdf_n3_spark.sources.n3_sink import serialize_graphs
+
+    texts = {
+        "d1": "@prefix : <http://ex/>. :b :p :c . :a :p [ :q :r ] ."
+              " :a :list (1 2) .",
+        "d2": "@prefix : <http://ex/>. { :x :y :z . :x :w _:n } =>"
+              ' { :q :r :s } . :z :k "lit" .',
+        "d3": "@prefix : <http://ex/>. :s :p :o .",
+    }
+    quads = [(d, *q) for d, t in texts.items() for q in parse_n3(t)]
+    assert any(g for *_, g in quads) and any(
+        o.startswith("_:") for _, _, _, o, g in quads if not g)
+    df = spark.createDataFrame(
+        quads, "doc_id string, s string, p string, o string, g string"
+    ).repartition(3)
+
+    def doc_quads(d, with_g=True):
+        return sorted((s, p, o, g if with_g else "")
+                      for dd, s, p, o, g in quads if dd == d)
+
+    got = {r["doc_id"]: r["n3"] for r in serialize_graphs(df).collect()}
+    assert got == {d: N3Writer(doc_quads(d)).serialize() for d in texts}
+    got = {r["doc_id"]: r["n3"]
+           for r in serialize_graphs(df.drop("g")).collect()}
+    assert got == {d: N3Writer(doc_quads(d, False)).serialize()
+                   for d in texts}

@@ -118,26 +118,6 @@ def test_embed_projection_is_pure_map(spark):
         assert node not in plan, node
 
 
-def test_dup_spans_duplicate_test_is_partial_agg_join(spark):
-    """substrings.dup_spans must test gram duplication with a map-side
-    combinable groupBy + equi-join, NEVER a count() window partitioned
-    by gram_hash (a window cannot partial-aggregate, so a mega-hot
-    boilerplate gram would ship every occurrence to one reducer)."""
-    from rdf_n3_spark.operators.substrings import dup_spans
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = _plan(dup_spans(docs))
-    assert "windowspecdefinition(gram_hash" not in plan.lower()
-    assert "partial" in plan  # the duplicate-count agg combines map-side
-    assert "CartesianProduct" not in plan
-    # the k-gram lambda slices the BOUND token array (double reference
-    # blocks CollapseProject) — no per-window re-tokenization, and no
-    # repartition barrier needed to prevent it
-    assert "slice(split" not in plan
-    for node in PY_EVAL_NODES:
-        assert node not in plan, node
-
-
 def test_kmeans_assignment_broadcasts_centroids(spark):
     """clustering.embed_kmeans: every assignment joins the corpus
     against the k-row centroid table via BROADCAST nested-loop (small
@@ -184,9 +164,9 @@ def test_lm_score_joins_aggregated_counts_only(spark):
 
 
 def test_paragraph_and_hash_embed_duplicate_tests_combine_mapside(spark):
-    """paragraph_dedup and hash_embed keep the dup-test/sum shape of
-    dup_spans: groupBy (map-side combinable) — never a count() window
-    partitioned by the hash key."""
+    """paragraph_dedup and hash_embed test duplicates / sum with a
+    groupBy (map-side combinable) — never a count() window partitioned
+    by the hash key."""
     from rdf_n3_spark.functions.text import hash_embed
     from rdf_n3_spark.operators.curation import paragraph_dedup
 
@@ -199,70 +179,3 @@ def test_paragraph_and_hash_embed_duplicate_tests_combine_mapside(spark):
         for node in PY_EVAL_NODES:
             assert node not in plan, node
 
-
-def test_mention_contexts_window_edges(spark):
-    """mention_contexts: contexts truncate at turn boundaries, never
-    cross turns, and the mention token itself is in neither side."""
-    import datetime
-
-    from rdf_n3_spark.operators.mentions import mention_contexts
-
-    t = spark.createDataFrame(
-        [("c", 0, "user", "part_a starts here and supp_b sits mid",
-          "", datetime.datetime(2026, 1, 1)),
-         ("c", 1, "user", "tail token part_c", "",
-          datetime.datetime(2026, 1, 1))],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp")
-    got = {r["surface"]: r.asDict()
-           for r in mention_contexts(t, window=3).collect()}
-    assert set(got) == {"part_a", "supp_b", "part_c"}
-    # turn start: empty left, 3-token right
-    assert got["part_a"]["left_ctx"] == ""
-    assert got["part_a"]["right_ctx"] == "starts here and"
-    # mid-turn: both sides, clamped to 3 tokens
-    assert got["supp_b"]["left_ctx"] == "starts here and"
-    assert got["supp_b"]["right_ctx"] == "sits mid"
-    # turn end: truncated right, left stays inside the turn
-    assert got["part_c"]["left_ctx"] == "tail token"
-    assert got["part_c"]["right_ctx"] == ""
-    assert got["part_c"]["pos"] == 2
-
-
-def test_mention_contexts_agrees_with_extract_mentions(spark):
-    """The context variant must detect exactly the same mentions
-    (same keys, surfaces, norms) as the plain extractor."""
-    from rdf_n3_spark.operators.mentions import (
-        extract_mentions,
-        mention_contexts,
-    )
-    from rdf_n3_spark.sources.transcripts import transcripts
-
-    t = transcripts(spark, "/root/testdata/sf0.001")
-    base = sorted(map(tuple, extract_mentions(t).collect()))
-    ctx = sorted(map(tuple, mention_contexts(t).select(
-        "conv_id", "turn_idx", "pos", "surface", "norm").collect()))
-    assert base == ctx and len(base) > 0
-
-
-def test_mention_contexts_is_pure_map(spark):
-    """mention_contexts is a zero-shuffle narrow map like
-    extract_mentions: no Exchange, no join back to the turn text, no
-    Python eval — contexts are in-row slices of the exploded array.
-    Audited on a transcripts-SHAPED frame (the sandbox lineitem→
-    transcripts derivation repartitions by order key, which would
-    charge the scaffolding's exchange to the operator)."""
-    import datetime
-
-    from rdf_n3_spark.operators.mentions import mention_contexts
-
-    t = spark.createDataFrame(
-        [("c", 0, "user", "part_1 here", "",
-          datetime.datetime(2026, 1, 1))],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp")
-    plan = _plan(mention_contexts(t))
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    for node in PY_EVAL_NODES:
-        assert node not in plan, node

@@ -67,19 +67,11 @@ def test_round3_text_ops_survive_null_and_empty_text(spark):
     job, and every doc still appears where the contract says 'all
     docs'."""
     from rdf_n3_spark.functions.text import hash_embed, lm_score
-    from rdf_n3_spark.operators.substrings import (
-        dup_spans,
-        substring_dup_stats,
-    )
 
     docs = spark.createDataFrame(
         [(1, None), (2, ""), (3, "   "), (4, "a b c d e f g h a b c d e f g h")],
         "doc_id long, text string",
     )
-    assert dup_spans(docs).count() >= 0          # no crash on null text
-    stats = {r["doc_id"]: r for r in substring_dup_stats(docs).collect()}
-    assert set(stats) == {1, 2, 3, 4}            # every doc emitted
-    assert stats[2]["dup_tokens"] == 0 and stats[2]["keep"] == 1
     lm = {r["doc_id"]: r for r in lm_score(docs).collect()}
     assert set(lm) == {1, 2, 3, 4}
     assert lm[1]["n_bigrams"] == 0 and lm[1]["avg_logprob"] is None
